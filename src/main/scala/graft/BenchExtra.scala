@@ -39,8 +39,7 @@ object BenchExtra {
 
     if (which("ingest")) {
       spark.sparkContext.setJobDescription("probe: ingest")
-      spark.conf.set("spark.graft.merge.timing", "true")
-      // replicate cdc_ingest_bench with per-phase timers
+      // replicate cdc_ingest_bench
       val (wal, cfg, _) = (s"${Fixtures.FixtureRoot}/wal_bench",
         graft.gen.GenConfig(seed = 42L, events = 1000000L, repos = 500, filesPerRepo = 50), 20)
       val lakeDir = s"${Fixtures.LakeRoot}/probe_ingest"
@@ -216,7 +215,6 @@ object BenchExtra {
 
     if (which("mv")) {
       spark.sparkContext.setJobDescription("probe: mv apply phases")
-      spark.conf.set("spark.graft.merge.timing", "true")
       val up = CdcQueries.smLakeMode(spark, ApplyMode.MergeOnRead, "sm_fullcdf", "smfcdf", cdfFull = true)
       val fold = CdcQueries.smMvProbeBase(spark, "sm_mvap", 64, "smmvap")
       val changes = time("mv readChangesBetween noop")(

@@ -112,8 +112,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
       if (version.isEmpty && fs.exists(propsPath(dir))) {
         val props = graft.table.JsonMini.parse(fs.readString(propsPath(dir)))
           .asInstanceOf[Map[String, Any]]
-        val snap = Snapshot(0, graft.model.Schemas.repoRow.toDDL,
-          SnapshotIO.asInt(props("nBuckets")), Seq.empty, Map.empty, 0L, 0L,
+        val snap = LakeTable.emptySnapshot(SnapshotIO.asInt(props("nBuckets")),
           props("mode").asInstanceOf[String])
         return new GraftTable((dir, snap), publicSchema(snap))
       }
@@ -180,7 +179,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     clusterBy.foreach(c => require(stored.fieldNames.contains(c),
       s"clusterBy: no column '$c' in the table schema"))
-    val snap = Snapshot(1, stored.toDDL, buckets, Seq.empty, Map.empty, 0L, 0L, mode,
+    val snap = LakeTable.emptySnapshot(buckets, mode).copy(version = 1, schemaDdl = stored.toDDL,
       tsMs = System.currentTimeMillis(),
       cdfSinceLsn = if (cdf) 0L else -1L,
       cdfFullSinceLsn = if (cdfFull) 0L else -1L,

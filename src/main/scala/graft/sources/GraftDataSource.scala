@@ -124,8 +124,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
               // with the layout from the `mode`/`buckets` options
               val buckets = Option(options.get("buckets")).map(_.toInt).getOrElse(32)
               val mode = Option(options.get("mode")).getOrElse("cow")
-              Snapshot(0, graft.model.Schemas.repoRow.toDDL, buckets,
-                Seq.empty, Map.empty, 0L, 0L, mode)
+              graft.table.LakeTable.emptySnapshot(buckets, mode)
             } else {
               require(fs.exists(vf), s"graft: no table at $root (missing meta/VERSION)")
               // VERSION is a last-writer-wins hint under concurrent

@@ -94,7 +94,7 @@ final class GraftMicroBatchStream(root: String, required: StructType,
   private def loadSnapshot(): Snapshot = {
     val f = fs
     if (!f.exists(s"$root/meta/VERSION"))
-      return Snapshot(0, graft.model.Schemas.repoRow.toDDL, 32, Seq.empty, Map.empty, 0L, 0L)
+      return graft.table.LakeTable.emptySnapshot()
     val v = graft.table.LakeTable.headVersion(f.exists, s"$root/meta",
       f.readString(s"$root/meta/VERSION").trim.toInt)
     SnapshotIO.read(f.readString(s"$root/meta/snap-$v.json"),

@@ -1,41 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The SparkSessionExtensions path: a session built with GraftExtensions
   * (or spark.sql.extensions config) gets the native functions in SQL with
-  * no imperative registration.
+  * no imperative registration. The shared suite session is built that way.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends SparkSpec {
 
   test("withExtensions(GraftExtensions) exposes simhash64/cosine_sim in SQL") {
-    // getOrCreate() would silently return the shared test session (no
-    // extensions applied); clear the default/active session so the builder
-    // constructs a FRESH session (same SparkContext) with the extension,
-    // the way spark-submit --conf spark.sql.extensions would, then restore.
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-ext-test")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val h = s.sql("SELECT simhash64(array('a','b','c')) AS h, cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
-        .collect().head
-      assert(h.getLong(0) != 0L)
-      assert(math.abs(h.getDouble(1) - 1.0) < 1e-12)
-    } finally { // keep the shared context/session alive for other suites
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val h = spark.sql("SELECT simhash64(array('a','b','c')) AS h, cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
+      .collect().head
+    assert(h.getLong(0) != 0L)
+    assert(math.abs(h.getDouble(1) - 1.0) < 1e-12)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.table.LakeTable
 
@@ -13,45 +11,7 @@ import graft.table.LakeTable
   * uses, with the engine's derived-invariant and immutable-key contracts
   * intact.
   */
-class GraftDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  // a FRESH session (same SparkContext) with the extensions applied — the
-  // shared suite session has none; see ExtensionsSpec for the pattern
-  private var spark: SparkSession = _
-  private var prevDefault: Option[SparkSession] = None
-  private var prevActive: Option[SparkSession] = None
-
-  override def beforeAll(): Unit = {
-    SparkSpec.session // ensure the shared context exists first
-    prevDefault = SparkSession.getDefaultSession
-    prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dml-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    prevActive.foreach(SparkSession.setActiveSession)
-  }
-
-  private def tmpDir(prefix: String): String = {
-    val base = java.nio.file.Paths.get("target", "test-tmp")
-    java.nio.file.Files.createDirectories(base)
-    java.nio.file.Files.createTempDirectory(base, prefix).toAbsolutePath.toString
-  }
-
-  private def collectSorted(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+class GraftDmlSpec extends SparkSpec {
 
   /** register a catalog over a fresh warehouse with a seeded 3-row table */
   private def fixture(tag: String): (String, String) = {

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for suites (one per suite, stopped after). */
+/** Shared local SparkSession for suites, built with GraftExtensions the
+  * way Verify and Bench build theirs (SQL DML, native functions).
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -28,6 +30,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
