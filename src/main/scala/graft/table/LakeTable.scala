@@ -6,196 +6,6 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
 
 import graft.model.LangRules
 
-/** One parquet data file tracked by a snapshot, with min/max lsn stats for
-  * data skipping (the engine's analogue of the reference's PostGIS indexes
-  * + ANALYZE stats, reference: docs/database.md:319-323,374-381), plus
-  * min/max `repo` stats so key-predicate scans (`WHERE repo = 'x'`) skip
-  * files that cannot hold the key — null on pre-upgrade snapshots (then no
-  * repo skipping, never wrong results: skipping is a pure optimisation
-  * under the residual re-filter).
-  */
-final case class FileEntry(bucket: Int, path: String, rows: Long, minLsn: Long, maxLsn: Long,
-                           minRepo: String = null, maxRepo: String = null,
-                           /** rows ordered by (repo, path) — lets the MOR
-                             * resolve reader stream a k-way sorted merge in
-                             * O(files) memory; false on pre-upgrade files
-                             * (then the reader falls back to the hash-map
-                             * resolve)
-                             */
-                           sorted: Boolean = false,
-                           /** min/max `path` (UTF-8 byte order) — lets a
-                             * path-ONLY predicate ("find this file across
-                             * all repos") skip files; null on pre-upgrade
-                             * snapshots (= no path skipping, never wrong)
-                             */
-                           minPath: String = null, maxPath: String = null)
-
-/** One change-data-feed sidecar parquet written by a commit: the commit's
-  * newly stored rows (full post-images) each tagged `_change_type` ∈
-  * {insert, update_postimage, delete}, plus lsn range stats so a typed
-  * tail plans only the sidecars intersecting its (lo, hi] — per-batch
-  * work O(batch), never O(table history). The Delta-CDF file analogue.
-  */
-final case class CdfEntry(path: String, rows: Long, minLsn: Long, maxLsn: Long)
-
-/** Per-checkpoint commit progress: the max CONTIGUOUS committed batchId
-  * (`hwm`, -1 = none) plus a small out-of-order set (`pending`, batchIds
-  * above hwm+1 that arrived early). Streaming batchIds are monotonic per
-  * checkpoint, so `pending` stays empty in practice and snapshot metadata
-  * is O(#checkpoints), not O(#batches) — a long-running stream no longer
-  * rewrites its whole commit history into every snapshot JSON.
-  */
-final case class CommitState(hwm: Long = -1L, pending: Seq[Long] = Nil) {
-  def contains(batchId: Long): Boolean = batchId <= hwm || pending.contains(batchId)
-  /** A virgin state SEEDS its hwm from the first observed batchId: an
-    * existing streaming checkpoint (batchIds already at N) pointed at a
-    * fresh/recreated table must not grow `pending` one entry per batch
-    * forever waiting for batch 0, which will never be delivered — streaming
-    * batchIds are monotonic per checkpoint, so everything below the first
-    * delivery is by definition not coming.
-    */
-  def absorb(batchId: Long): CommitState =
-    if (contains(batchId)) this
-    else if (hwm == -1L && pending.isEmpty) CommitState(batchId, Nil)
-    else {
-      var h = hwm
-      val p = scala.collection.mutable.SortedSet[Long](pending: _*) += batchId
-      while (p.contains(h + 1)) { h += 1; p -= h }
-      CommitState(h, p.toSeq)
-    }
-  /** number of distinct committed batchIds (exact when batchIds start at 0,
-    * the streaming contract; an upper bound for seeded checkpoints)
-    */
-  def count: Long = hwm + 1 + pending.size
-}
-
-/** An immutable table snapshot — the engine's `run_info.json`
-  * (reference: stuttgart_comprehensive_script.py:870-889): schema version,
-  * live file list, committed-batch progress (exactly-once), LSN high watermark.
-  */
-final case class Snapshot(
-    version: Int,
-    schemaDdl: String,
-    nBuckets: Int,
-    files: Seq[FileEntry],
-    committed: Map[String, CommitState], // checkpointId -> commit progress
-    hwm: Long,              // applied-LSN high watermark
-    totalRows: Long,
-    mode: String = "cow",   // apply mode fixed at table creation
-    dvFiles: Seq[String] = Nil, // positional deletion-vector sidecars (dv mode)
-    dvRows: Long = 0L,          // total superseded positions across dvFiles
-    /** commit wall-clock (epoch millis), stamped at the VERSION-flip write —
-      * backs timestamp time travel (`TIMESTAMP AS OF`, `startingTimestamp`).
-      * 0 on pre-upgrade snapshots (then timestamp resolution skips them).
-      * Clock caveat (same as Delta/Iceberg): commit times come from writer
-      * clocks, so resolution is only as monotonic as the fleet's clocks.
-      */
-    tsMs: Long = 0L,
-    /** change-data-feed state: -1 = CDF off; >= 0 = every commit records a
-      * change sidecar for its rows above this lsn, so a typed tail whose
-      * cursor is at or past it reads ONLY sidecars (never bucket history).
-      * Set to the enabling instant's hwm by `enableChangeDataFeed` (0 at
-      * creation), RAISED by overwrite/truncate (replace operations restart
-      * coverage — their implicit deletions have no sidecar) and by
-      * `expireChangeFeed` (retention).
-      */
-    cdfSinceLsn: Long = -1L,
-    /** the change sidecars (root-relative), appended per commit; pruned by
-      * `expireChangeFeed` (manual) or `spark.graft.cdf.retentionLsns`
-      * (applied at commit). HYDRATED from `cdfManifests` at load — the
-      * snapshot JSON itself stores only pointers, so commit metadata never
-      * rewrites the accumulated sidecar list (see cdfManifests).
-      */
-    cdfFiles: Seq[CdfEntry] = Nil,
-    /** CDF-manifest pointers (root-relative JSONs, each holding a slice of
-      * the registered CdfEntry list in order). A CDF commit writes ONE new
-      * manifest covering just ITS sidecar entries and keeps the previous
-      * pointers — per-commit CDF metadata IO is O(batch sidecars), never
-      * O(commits since the last expiry) (round-5 VERDICT "Missing" #1: the
-      * inline list rewrote the full history into every snapshot JSON).
-      * Past `spark.graft.manifest.compactThreshold` distinct pointers the
-      * commit folds them into one (same policy as the bucket manifests).
-      * Empty = pre-upgrade inline `cdfFiles` (still parsed, migrated to a
-      * manifest on the next CDF-touching commit).
-      */
-    cdfManifests: Seq[String] = Nil,
-    /** FULL change data feed (Delta `table_changes` parity): -1 = the feed
-      * (if on) records post-images only; >= 0 = commits above this lsn
-      * also record BEFORE-IMAGES — an `update_preimage` row per update
-      * (old values, stamped with the NEW change's (lsn, commit), Delta's
-      * convention) and `delete` rows carrying the deleted row's old
-      * values instead of the tombstone's nulls. The preimage floor: a
-      * consumer needing before-images must position its cursor at or past
-      * it (below, sidecars are post-only; the feed itself is still
-      * complete down to cdfSinceLsn). Raised past any commit that raced a
-      * full-enablement and wrote a post-only sidecar — "preimages
-      * available" is never claimed for a commit that didn't write them.
-      * Invariant: cdfFullSinceLsn >= 0 implies cdfSinceLsn >= 0.
-      */
-    cdfFullSinceLsn: Long = -1L,
-    /** COLUMN MAPPING (rename/drop for evolved payload columns —
-      * Delta/Iceberg's column-ID idea, name-keyed because the engine's
-      * core columns are contract-fixed and unmappable): `schemaDdl` always
-      * holds the PHYSICAL storage schema (what files contain and every
-      * internal path operates on); `renames` maps logical → physical for
-      * the columns whose user-facing name differs (sparse; absent =
-      * identical); `retiredPhysicals` are storage names of dropped or
-      * renamed-away columns that may still exist in old files — a
-      * re-added column with such a name gets a FRESH physical name, so
-      * stale stored values can never resurrect under a new logical
-      * column. Rename/drop are metadata-only commits; time travel reads
-      * every snapshot under ITS OWN mapping.
-      */
-    renames: Map[String, String] = Map.empty,
-    retiredPhysicals: Seq[String] = Nil,
-    /** per-bucket MANIFEST pointers (bucket → root-relative manifest JSON
-      * holding that bucket's CURRENT FileEntry list). A commit writes ONE
-      * new manifest covering just its touched buckets and re-points the
-      * rest at their existing manifests — per-commit metadata IO is O(1)
-      * files / O(buckets touched) bytes, never O(files in table). Loading
-      * reads each DISTINCT manifest once (≤ commits since the last full
-      * rewrite; compact/rebucket fold back to one). `files` is hydrated
-      * from the manifests at load. (Iceberg's manifest-list analogue;
-      * dvFiles stay inline — bounded by the dv-fraction compaction policy.)
-      */
-    manifests: Seq[(Int, String)] = Nil,
-    /** CHECK constraints (Delta's table-constraint semantics): name → SQL
-      * boolean expression over the LOGICAL schema that every stored LIVE
-      * row must satisfy (violation = evaluates false OR null, the Delta
-      * convention; tombstones are exempt — a delete event is a marker,
-      * not data). Enforced inside the write pipeline of every merge (no
-      * second pass; a violating row fails the commit before any metadata
-      * lands) and validated against the existing live rows when added.
-      */
-    constraints: Map[String, String] = Map.empty,
-    /** persisted CLUSTERING policy (Delta liquid-clustering parity):
-      * PHYSICAL column names every full/targeted compaction sorts by
-      * (value-homogeneous bounded files → the evidence gate prunes
-      * equality lookups on these columns). Physical, not logical, so a
-      * column RENAME never orphans the policy. Delta writes stay
-      * (repo,path)-sorted — clustering is a compaction-time layout, set
-      * via `setClustering` / `CALL set_clustering`. Empty = key-sorted
-      * compaction (the default).
-      */
-    clusterBy: Seq[String] = Nil
-) {
-  def physicalOf(logical: String): String = renames.getOrElse(logical, logical)
-  def logicalOf(physical: String): String =
-    renames.collectFirst { case (l, p) if p == physical => l }.getOrElse(physical)
-  /** user-facing schema: physical storage fields under their logical names */
-  def logicalSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl).fields
-        .map(f => f.copy(name = logicalOf(f.name))))
-
-  def isCommitted(cpId: String, batchId: Long): Boolean =
-    committed.get(cpId).exists(_.contains(batchId))
-  def withCommit(cpId: String, batchId: Long): Map[String, CommitState] =
-    committed.updated(cpId, committed.getOrElse(cpId, CommitState()).absorb(batchId))
-  /** total distinct committed batches across all checkpoints */
-  def committedCount: Long = committed.valuesIterator.map(_.count).sum
-}
-
 /** A concurrent writer committed the snapshot version this writer was
   * about to create. The losing transaction re-derives against the new head
   * and retries (optimistic concurrency; see LakeTable.transact); thrown to
@@ -3110,257 +2920,4 @@ object LakeTable {
 
   def listParquet(fs: Fs, dir: String): Seq[String] =
     fs.listFiles(dir, _.endsWith(".parquet"))
-}
-
-/** Hand-rolled JSON codec for snapshot metadata — flat, versioned, no
-  * external deps beyond the JDK (snapshot files must stay readable by any
-  * tool; format documented in SURVEY.md §7.2).
-  */
-object SnapshotIO {
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
-
-  /** integral JSON numbers parse as Long (64-bit exact — upstream WAL LSNs
-    * are arbitrary 64-bit values, Double would corrupt above 2^53); these
-    * helpers accept both shapes.
-    */
-  def asLong(v: Any): Long = v match {
-    case l: Long => l; case d: Double => d.toLong
-    case other => throw new IllegalArgumentException(s"not a number: $other")
-  }
-  def asInt(v: Any): Int = asLong(v).toInt
-
-  private def fileJson(f: FileEntry): String = {
-    // repo range stats are OPTIONAL keys — pre-upgrade snapshots without
-    // them parse as null (= no repo skipping), never as an error
-    val repoStats =
-      if (f.minRepo == null || f.maxRepo == null) ""
-      else s""","minRepo":${q(f.minRepo)},"maxRepo":${q(f.maxRepo)}"""
-    val pathStats =
-      if (f.minPath == null || f.maxPath == null) ""
-      else s""","minPath":${q(f.minPath)},"maxPath":${q(f.maxPath)}"""
-    val sorted = if (f.sorted) ""","sorted":true""" else ""
-    s"""{"bucket":${f.bucket},"path":${q(f.path)},"rows":${f.rows},"minLsn":${f.minLsn},"maxLsn":${f.maxLsn}$repoStats$pathStats$sorted}"""
-  }
-
-  private def parseFile(fa: Any): FileEntry = {
-    val f = fa.asInstanceOf[Map[String, Any]]
-    FileEntry(asInt(f("bucket")), f("path").asInstanceOf[String],
-      asLong(f("rows")), asLong(f("minLsn")), asLong(f("maxLsn")),
-      f.get("minRepo").map(_.asInstanceOf[String]).orNull,
-      f.get("maxRepo").map(_.asInstanceOf[String]).orNull,
-      f.get("sorted").contains(true),
-      f.get("minPath").map(_.asInstanceOf[String]).orNull,
-      f.get("maxPath").map(_.asInstanceOf[String]).orNull)
-  }
-
-  private def cdfEntryJson(c: CdfEntry): String =
-    s"""{"path":${q(c.path)},"rows":${c.rows},"minLsn":${c.minLsn},"maxLsn":${c.maxLsn}}"""
-
-  private def parseCdfEntry(ca: Any): CdfEntry = {
-    val c = ca.asInstanceOf[Map[String, Any]]
-    CdfEntry(c("path").asInstanceOf[String], asLong(c("rows")),
-      asLong(c("minLsn")), asLong(c("maxLsn")))
-  }
-
-  /** one slice of the registered CDF sidecar list (in registration order) —
-    * the payload of a CDF manifest file
-    */
-  def writeCdfManifest(entries: Seq[CdfEntry]): String =
-    entries.map(cdfEntryJson).mkString("""{"cdfFiles":[""", ",", "]}")
-
-  def readCdfManifest(txt: String): Seq[CdfEntry] =
-    JsonMini.parse(txt).asInstanceOf[Map[String, Any]]("cdfFiles")
-      .asInstanceOf[Seq[Any]].map(parseCdfEntry)
-
-  /** one commit's touched buckets → their full FileEntry lists — the
-    * payload of a manifest file
-    */
-  def writeManifest(buckets: Map[Int, Seq[FileEntry]]): String =
-    buckets.toSeq.sortBy(_._1).map { case (b, fl) =>
-      s"""{"bucket":$b,"files":${fl.map(fileJson).mkString("[", ",", "]")}}"""
-    }.mkString("""{"buckets":[""", ",", "]}")
-
-  def readManifest(txt: String): Map[Int, Seq[FileEntry]] = {
-    val v = JsonMini.parse(txt).asInstanceOf[Map[String, Any]]
-    v.get("buckets") match {
-      case Some(bs) => bs.asInstanceOf[Seq[Any]].map { ba =>
-        val b = ba.asInstanceOf[Map[String, Any]]
-        asInt(b("bucket")) -> b("files").asInstanceOf[Seq[Any]].map(parseFile)
-      }.toMap
-      case None => // v1 single-bucket manifest shape {"files":[...]}
-        v("files").asInstanceOf[Seq[Any]].map(parseFile).groupBy(_.bucket)
-    }
-  }
-
-  def write(s: Snapshot): String = {
-    // with manifest pointers the snapshot stores ONLY those; inline file
-    // lists remain for manifest-less snapshots (tests, pre-upgrade format)
-    val body =
-      if (s.manifests.nonEmpty)
-        s""""manifests":${s.manifests.map { case (b, p) => s"""{"bucket":$b,"path":${q(p)}}""" }.mkString("[", ",", "]")}"""
-      else s""""files":${s.files.map(fileJson).mkString("[", ",", "]")}"""
-    val committed = s.committed.toSeq.sortBy(_._1).map { case (cp, c) =>
-      s"""${q(cp)}:{"hwm":${c.hwm},"pending":${c.pending.mkString("[", ",", "]")}}"""
-    }.mkString("{", ",", "}")
-    val dvf = s.dvFiles.map(q).mkString("[", ",", "]")
-    val ts = if (s.tsMs > 0) s""""tsMs":${s.tsMs},""" else ""
-    val colMap = {
-      val rn = if (s.renames.isEmpty) ""
-        else s""""renames":${s.renames.toSeq.sortBy(_._1)
-          .map { case (l, p) => s"${q(l)}:${q(p)}" }.mkString("{", ",", "}")},"""
-      val rt = if (s.retiredPhysicals.isEmpty) ""
-        else s""""retired":${s.retiredPhysicals.map(q).mkString("[", ",", "]")},"""
-      val cn = if (s.constraints.isEmpty) ""
-        else s""""constraints":${s.constraints.toSeq.sortBy(_._1)
-          .map { case (n, e) => s"${q(n)}:${q(e)}" }.mkString("{", ",", "}")},"""
-      val cl = if (s.clusterBy.isEmpty) ""
-        else s""""clusterBy":${s.clusterBy.map(q).mkString("[", ",", "]")},"""
-      rn + rt + cn + cl
-    }
-    val cdf =
-      if (s.cdfSinceLsn < 0) ""
-      else {
-        // with manifest pointers the snapshot stores ONLY those; the inline
-        // list remains for manifest-less snapshots (tests, pre-upgrade)
-        val body =
-          if (s.cdfManifests.nonEmpty)
-            s""""cdfManifests":${s.cdfManifests.map(q).mkString("[", ",", "]")}"""
-          else s""""cdfFiles":${s.cdfFiles.map(cdfEntryJson).mkString("[", ",", "]")}"""
-        val full = if (s.cdfFullSinceLsn < 0) "" else s""""cdfFullSinceLsn":${s.cdfFullSinceLsn},"""
-        s""""cdfSinceLsn":${s.cdfSinceLsn},$full$body,"""
-      }
-    s"""{"version":${s.version},"schemaDdl":${q(s.schemaDdl)},"nBuckets":${s.nBuckets},"mode":${q(s.mode)},"hwm":${s.hwm},"totalRows":${s.totalRows},$ts$colMap$cdf"dvRows":${s.dvRows},"dvFiles":$dvf,$body,"committed":$committed}"""
-  }
-
-  /** parse WITHOUT a manifest loader — valid only for inline-file snapshots */
-  def read(txt: String): Snapshot = read(txt,
-    mp => throw new IllegalStateException(s"snapshot references manifest $mp but no loader was provided"))
-
-  /** parse + hydrate `files` from the per-bucket manifest pointers via
-    * `load` (root-relative manifest path → manifest JSON text); each
-    * DISTINCT manifest file is read once
-    */
-  def read(txt: String, load: String => String): Snapshot = {
-    val s0 = parse(txt)
-    val s =
-      if (s0.manifests.isEmpty) s0
-      else {
-        val byPath = s0.manifests.map(_._2).distinct.map(p => p -> readManifest(load(p))).toMap
-        s0.copy(files = s0.manifests.sortBy(_._1).flatMap { case (b, p) =>
-          byPath(p).getOrElse(b, Nil)
-        })
-      }
-    if (s.cdfManifests.isEmpty) s
-    else s.copy(cdfFiles = s.cdfManifests.flatMap(p => readCdfManifest(load(p))))
-  }
-
-  // Minimal recursive-descent JSON parser (objects/arrays/strings/numbers).
-  def parse(txt: String): Snapshot = {
-    import SnapshotIO.{asInt, asLong}
-    val v = JsonMini.parse(txt).asInstanceOf[Map[String, Any]]
-    Snapshot(
-      version = asInt(v("version")),
-      schemaDdl = v("schemaDdl").asInstanceOf[String],
-      nBuckets = asInt(v("nBuckets")),
-      files = v.get("files").map(_.asInstanceOf[Seq[Any]].map(parseFile)).getOrElse(Nil),
-      manifests = v.get("manifests").map(_.asInstanceOf[Seq[Any]].map { ma =>
-        val m = ma.asInstanceOf[Map[String, Any]]
-        asInt(m("bucket")) -> m("path").asInstanceOf[String]
-      }).getOrElse(Nil),
-      committed = v("committed") match {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].map { case (cp, cv) =>
-          val c = cv.asInstanceOf[Map[String, Any]]
-          cp -> CommitState(asLong(c("hwm")), c("pending").asInstanceOf[Seq[Any]].map(asLong))
-        }
-        case s: Seq[_] => // v1 format: flat "cpId/batchId" list
-          s.map(_.asInstanceOf[String].split('/')).groupBy(_.head).map { case (cp, xs) =>
-            cp -> xs.map(_.last.toLong).sorted.foldLeft(CommitState())(_.absorb(_))
-          }
-        case other => throw new IllegalArgumentException(s"bad committed: $other")
-      },
-      hwm = asLong(v("hwm")),
-      totalRows = asLong(v("totalRows")),
-      mode = v.get("mode").map(_.asInstanceOf[String]).getOrElse("cow"),
-      dvFiles = v.get("dvFiles").map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])).getOrElse(Nil),
-      dvRows = v.get("dvRows").map(asLong).getOrElse(0L),
-      tsMs = v.get("tsMs").map(asLong).getOrElse(0L),
-      cdfSinceLsn = v.get("cdfSinceLsn").map(asLong).getOrElse(-1L),
-      cdfFullSinceLsn = v.get("cdfFullSinceLsn").map(asLong).getOrElse(-1L),
-      cdfFiles = v.get("cdfFiles").map(_.asInstanceOf[Seq[Any]].map(parseCdfEntry)).getOrElse(Nil),
-      cdfManifests = v.get("cdfManifests")
-        .map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])).getOrElse(Nil),
-      renames = v.get("renames").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (l, p) => l -> p.asInstanceOf[String] }).getOrElse(Map.empty),
-      retiredPhysicals = v.get("retired")
-        .map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])).getOrElse(Nil),
-      constraints = v.get("constraints").map(_.asInstanceOf[Map[String, Any]]
-        .map { case (n, e) => n -> e.asInstanceOf[String] }).getOrElse(Map.empty),
-      clusterBy = v.get("clusterBy")
-        .map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[String])).getOrElse(Nil)
-    )
-  }
-}
-
-/** Tiny JSON parser (JDK-only) for snapshot/ledger files. */
-object JsonMini {
-  def parse(s: String): Any = { val p = new P(s); val v = p.value(); p.ws(); v }
-  private final class P(s: String) {
-    var i = 0
-    def ws(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    def value(): Any = { ws(); s.charAt(i) match {
-      case '{' => obj(); case '[' => arr(); case '"' => str()
-      case 't' => i += 4; true
-      case 'f' => i += 5; false
-      case 'n' => i += 4; null
-      case _ => num()
-    }}
-    def obj(): Map[String, Any] = {
-      i += 1; ws(); val m = scala.collection.mutable.LinkedHashMap[String, Any]()
-      if (s.charAt(i) == '}') { i += 1; return m.toMap }
-      while (true) {
-        ws(); val k = str(); ws(); require(s.charAt(i) == ':'); i += 1
-        m(k) = value(); ws()
-        if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == '}'); i += 1; return m.toMap }
-      }
-      m.toMap
-    }
-    def arr(): Seq[Any] = {
-      i += 1; ws(); val b = scala.collection.mutable.ArrayBuffer[Any]()
-      if (s.charAt(i) == ']') { i += 1; return b.toSeq }
-      while (true) {
-        b += value(); ws()
-        if (s.charAt(i) == ',') i += 1 else { require(s.charAt(i) == ']'); i += 1; return b.toSeq }
-      }
-      b.toSeq
-    }
-    def str(): String = {
-      require(s.charAt(i) == '"'); i += 1; val sb = new StringBuilder
-      while (s.charAt(i) != '"') {
-        if (s.charAt(i) == '\\') {
-          i += 1
-          s.charAt(i) match {
-            case 'n' => sb += '\n'; case 't' => sb += '\t'; case 'r' => sb += '\r'
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case c => sb += c
-          }
-        } else sb += s.charAt(i)
-        i += 1
-      }
-      i += 1; sb.toString
-    }
-    /** integral → Long (exact 64-bit), fractional/exponent → Double */
-    def num(): Any = {
-      val st = i
-      var integral = true
-      while (i < s.length && (s.charAt(i).isDigit || "+-.eE".contains(s.charAt(i)))) {
-        if (s.charAt(i) == '.' || s.charAt(i) == 'e' || s.charAt(i) == 'E') integral = false
-        i += 1
-      }
-      val t = s.substring(st, i)
-      if (integral) java.lang.Long.parseLong(t) else t.toDouble
-    }
-  }
 }
