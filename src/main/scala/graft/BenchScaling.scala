@@ -72,10 +72,9 @@ object BenchScaling {
     * small change batches — where CoW pays a full affected-bucket rewrite
     * per batch and DV writes only O(batch). Returns updated-events/s.
     */
-  /** copy a fully-committed table directory for workload reuse (bench-only:
-    * snapshot metadata stores absolute paths, so rewrite the prefix; the
-    * prebuilt template has no deletion vectors — a single bulk merge on an
-    * empty table supersedes nothing — so only the snapshot JSONs need it).
+  /** copy a fully-committed table directory for workload reuse (bench-only;
+    * snapshot and manifest paths are root-relative, so a plain directory
+    * copy is a consistent table at its new root)
     */
   def copyTable(src: String, dst: String): Unit = {
     CdcQueries.deleteRec(dst)
@@ -83,10 +82,6 @@ object BenchScaling {
     val hfs = org.apache.hadoop.fs.FileSystem.get(conf)
     org.apache.hadoop.fs.FileUtil.copy(hfs,
       new org.apache.hadoop.fs.Path(src), hfs, new org.apache.hadoop.fs.Path(dst), false, conf)
-    val f = new graft.table.Fs(conf)
-    f.listFiles(s"$dst/meta", n => n.startsWith("snap-") && n.endsWith(".json")).foreach { p =>
-      f.atomicWrite(p, f.readString(p).replace(src, dst))
-    }
   }
 
   def runUpdate(spark: SparkSession, walDir: String, events: Long, batches: Int,

@@ -42,14 +42,17 @@ object ConnectedComponents {
     // with min-id representatives: the identical (node, min reachable id)
     // labelling, microseconds instead of 2-3 shuffle rounds. Larger
     // graphs take the distributed pointer-jumping loop below, unchanged.
+    // `localMaxEdges <= 0` switches the fast path off without probing.
     val localMax = spark.conf.getOption("spark.graft.cc.localMaxEdges")
       .map(_.toInt).getOrElse(100000)
-    val bounded = edges
-      .select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))
-      .limit(localMax + 1).collect()
+    val bounded =
+      if (localMax <= 0) Array.empty[org.apache.spark.sql.Row]
+      else edges.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))
+        .limit(localMax + 1).collect()
     // null endpoints (malformed input) keep the distributed path's
     // semantics (they never join) rather than a driver NPE
-    if (bounded.length <= localMax && bounded.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+    if (localMax > 0 && bounded.length <= localMax &&
+        bounded.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         var r = x

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.model.LangRules
-import graft.table.{Fs, LakeTable, Snapshot, SnapshotIO}
+import graft.table.{Fs, LakeTable, Snapshot, SnapshotIO, SnapshotLog}
 
 /** Spark `TableCatalog` plugin over a directory of graft lake tables — the
   * full SQL surface by NAME instead of by path (Spark has no path-based SQL
@@ -66,6 +66,9 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
         "(empty, '.', '..', '/' and '\\' are not allowed in table or namespace names)")
   }
   private def propsPath(dir: String) = s"$dir/table.properties.json"
+  private def logOf(dir: String) = new SnapshotLog(fs, dir)
+  /** a committed table, or one registered by graft.table.Catalog but never written */
+  private def tableAt(dir: String) = logOf(dir).exists || fs.exists(propsPath(dir))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     checkSegments(namespace.toSeq)
@@ -73,71 +76,44 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
     if (!fs.exists(base)) Array.empty
     else fs.listDirs(base)
       .map(d => new org.apache.hadoop.fs.Path(d).getName)
-      .filter(n => fs.exists(s"$base/$n/meta/VERSION") || fs.exists(propsPath(s"$base/$n")))
+      .filter(n => tableAt(s"$base/$n"))
       .sorted
       .map(n => Identifier.of(namespace, n))
       .toArray
   }
 
-  override def tableExists(ident: Identifier): Boolean = {
-    val dir = dirOf(ident)
-    fs.exists(s"$dir/meta/VERSION") || fs.exists(propsPath(dir))
-  }
-
-  private def loadSnap(dir: String, version: Option[String]): Snapshot = {
-    val f = fs
-    def load(p: String) = SnapshotIO.read(f.readString(p), mp => f.readString(s"$dir/$mp"))
-    version match {
-      case Some(v) =>
-        val p = s"$dir/meta/snap-$v.json"
-        require(f.exists(p), s"graft: snapshot $v of $dir expired or never existed")
-        load(p)
-      case None =>
-        val v = LakeTable.headVersion(f.exists, s"$dir/meta",
-          f.readString(s"$dir/meta/VERSION").trim.toInt)
-        load(s"$dir/meta/snap-$v.json")
-    }
-  }
+  override def tableExists(ident: Identifier): Boolean = tableAt(dirOf(ident))
 
   private def publicSchema(snap: Snapshot): StructType =
     StructType(snap.logicalSchema.fields
       .filterNot(_.name == "deleted").map(_.copy(nullable = true)))
 
-  private def loadAt(ident: Identifier, version: Option[String]): Table = {
+  private def loadAt(ident: Identifier, version: Option[Int]): Table = {
     val dir = dirOf(ident)
-    if (!fs.exists(s"$dir/meta/VERSION")) {
+    val log = logOf(dir)
+    val snap = (if (log.exists) version.map(log.at).orElse(log.head()) else None).getOrElse {
       // a table registered by graft.table.Catalog but never written yet:
       // serve it as empty with the layout from its properties file (SHOW
       // TABLES lists it, so SELECT must not throw)
-      if (version.isEmpty && fs.exists(propsPath(dir))) {
-        val props = graft.table.JsonMini.parse(fs.readString(propsPath(dir)))
-          .asInstanceOf[Map[String, Any]]
-        val snap = LakeTable.emptySnapshot(SnapshotIO.asInt(props("nBuckets")),
-          props("mode").asInstanceOf[String])
-        return new GraftTable((dir, snap), publicSchema(snap))
-      }
-      throw new NoSuchTableException(ident)
+      if (version.isDefined || !fs.exists(propsPath(dir))) throw new NoSuchTableException(ident)
+      val props = graft.table.JsonMini.parse(fs.readString(propsPath(dir)))
+        .asInstanceOf[Map[String, Any]]
+      LakeTable.emptySnapshot(SnapshotIO.asInt(props("nBuckets")), props("mode").asInstanceOf[String])
     }
-    val snap = loadSnap(dir, version)
     new GraftTable((dir, snap), publicSchema(snap))
   }
 
   override def loadTable(ident: Identifier): Table = loadAt(ident, None)
   /** SQL `VERSION AS OF n` */
   override def loadTable(ident: Identifier, version: String): Table =
-    loadAt(ident, Some(version))
+    loadAt(ident, Some(SnapshotLog.parseVersion(version)))
   /** SQL `TIMESTAMP AS OF ts` — Spark hands the literal as MICROseconds
     * since epoch; resolve to the latest snapshot committed at or before it
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val dir = dirOf(ident)
-    if (!fs.exists(s"$dir/meta/VERSION")) throw new NoSuchTableException(ident)
-    val f = fs
-    val head = LakeTable.headVersion(f.exists, s"$dir/meta",
-      f.readString(s"$dir/meta/VERSION").trim.toInt)
-    val v = LakeTable.versionAsOfTimestamp(f.exists, f.readString, s"$dir/meta",
-      head, timestamp / 1000L)
-    loadAt(ident, Some(v.toString))
+    val log = logOf(dirOf(ident))
+    if (!log.exists) throw new NoSuchTableException(ident)
+    loadAt(ident, Some(log.versionAsOf(timestamp / 1000L)))
   }
 
   /** CREATE TABLE (and the create half of CTAS). The engine's row model is
@@ -160,9 +136,10 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
     val buckets = Option(properties.get("buckets")).map(_.toInt).getOrElse(32)
     val dir = dirOf(ident)
     // empty version-1 snapshot so the table is immediately readable; the
-    // internal `deleted` flag joins the stored schema. Written CREATE-
-    // EXCLUSIVELY: a concurrent create-on-first-write commit to the same
-    // path must never be clobbered (tableExists above is only a fast-path)
+    // internal `deleted` flag joins the stored schema. Published like any
+    // commit (create-exclusive): a concurrent create-on-first-write commit
+    // to the same path must never be clobbered (tableExists above is only
+    // a fast-path)
     val stored = if (schema.fieldNames.contains("deleted")) schema
       else StructType(schema.fields :+ StructField("deleted", BooleanType, nullable = false))
     // TBLPROPERTIES ('cdf' = 'true' | 'full'): change data feed on from
@@ -179,17 +156,16 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     clusterBy.foreach(c => require(stored.fieldNames.contains(c),
       s"clusterBy: no column '$c' in the table schema"))
-    val snap = LakeTable.emptySnapshot(buckets, mode).copy(version = 1, schemaDdl = stored.toDDL,
-      tsMs = System.currentTimeMillis(),
+    val empty = LakeTable.emptySnapshot(buckets, mode)
+    val snap = empty.copy(version = 1, schemaDdl = stored.toDDL,
       cdfSinceLsn = if (cdf) 0L else -1L,
       cdfFullSinceLsn = if (cdfFull) 0L else -1L,
       clusterBy = clusterBy)
-    if (!fs.atomicCreate(s"$dir/meta/snap-1.json", SnapshotIO.write(snap)))
+    if (!logOf(dir).publish(snap, empty, LakeTable.newToken))
       throw new TableAlreadyExistsException(ident)
     // properties file in graft.table.Catalog's format (shared warehouse)
     fs.atomicWrite(propsPath(dir),
       s"""{"name":"${ident.name}","nBuckets":$buckets,"mode":"$mode","rulesVersion":"${LangRules.version}","format":"graft-lake-v1"}""")
-    fs.atomicWrite(s"$dir/meta/VERSION", "1")
     new GraftTable((dir, snap), publicSchema(snap))
   }
 
@@ -202,7 +178,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = dirOf(ident)
-    if (!fs.exists(s"$dir/meta/VERSION")) throw new NoSuchTableException(ident)
+    if (!logOf(dir).exists) throw new NoSuchTableException(ident)
     val lake = new LakeTable(SparkSession.active, dir)
     def oneName(fieldNames: Array[String], what: String): String = {
       require(fieldNames.length == 1,

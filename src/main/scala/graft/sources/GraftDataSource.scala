@@ -23,7 +23,7 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.table.{FileEntry, Fs, Snapshot, SnapshotIO}
+import graft.table.{FileEntry, Fs, Snapshot, SnapshotLog}
 
 /** DataSourceV2 reader for graft lake tables (SURVEY.md §2.1 S5 — the
   * reference's pushdown precedent is its ArcGIS client pushing `where`
@@ -96,43 +96,20 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       case _ =>
         val root = Option(options.get("path"))
           .getOrElse(throw new IllegalArgumentException("graft: .load(<table root>) is required"))
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        val fs = new Fs(conf)
-        def load(p: String) = SnapshotIO.read(fs.readString(p), mp => fs.readString(s"$root/$mp"))
+        val log = new SnapshotLog(new Fs(SparkSession.active.sessionState.newHadoopConf()), root)
         // timestamp time travel for PATH-based reads (the catalog spells it
-        // `TIMESTAMP AS OF`): resolve to the latest snapshot at or before
-        // the instant, then load that version
-        val versionOpt = Option(options.get("snapshot")).orElse(
-          Option(options.get("timestampAsOf")).map { ts =>
-            val vf = s"$root/meta/VERSION"
-            require(fs.exists(vf), s"graft: no table at $root (missing meta/VERSION)")
-            val head = graft.table.LakeTable.headVersion(fs.exists, s"$root/meta",
-              fs.readString(vf).trim.toInt)
-            graft.table.LakeTable.versionAsOfTimestamp(fs.exists, fs.readString,
-              s"$root/meta", head, graft.table.LakeTable.parseTimestampMs(ts)).toString
-          })
-        val snap = versionOpt match {
-          case Some(v) =>
-            val p = s"$root/meta/snap-$v.json"
-            require(fs.exists(p), s"graft: snapshot $v expired or never existed under $root")
-            load(p)
-          case None =>
-            val vf = s"$root/meta/VERSION"
-            if (!fs.exists(vf) && options.getBoolean("create", false)) {
-              // create-on-first-write: expose an empty table of the engine's
-              // row schema; the first committed write materialises version 1
-              // with the layout from the `mode`/`buckets` options
-              val buckets = Option(options.get("buckets")).map(_.toInt).getOrElse(32)
-              val mode = Option(options.get("mode")).getOrElse("cow")
-              graft.table.LakeTable.emptySnapshot(buckets, mode)
-            } else {
-              require(fs.exists(vf), s"graft: no table at $root (missing meta/VERSION)")
-              // VERSION is a last-writer-wins hint under concurrent
-              // committers; probe to the dense head
-              val v = graft.table.LakeTable.headVersion(fs.exists, s"$root/meta",
-                fs.readString(vf).trim.toInt)
-              load(s"$root/meta/snap-$v.json")
-            }
+        // `TIMESTAMP AS OF`): the latest snapshot at or before the instant
+        val version = Option(options.get("snapshot")).map(SnapshotLog.parseVersion).orElse(
+          Option(options.get("timestampAsOf"))
+            .map(ts => log.versionAsOf(graft.table.LakeTable.parseTimestampMs(ts))))
+        val snap = version.map(log.at).orElse(log.head()).getOrElse {
+          // create-on-first-write: expose an empty table of the engine's row
+          // schema; the first committed write materialises version 1 with
+          // the layout from the `mode`/`buckets` options
+          require(options.getBoolean("create", false), s"graft: no table at $root")
+          graft.table.LakeTable.emptySnapshot(
+            Option(options.get("buckets")).map(_.toInt).getOrElse(32),
+            Option(options.get("mode")).getOrElse("cow"))
         }
         cached = Some((key, (root, snap)))
         (root, snap)
@@ -434,7 +411,7 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
 
   /** repo-range file skipping on the snapshot's per-file repo min/max
     * (UTF-8 byte order, same as the parquet stats they came from); files
-    * from pre-upgrade snapshots carry no repo stats and are kept.
+    * whose footer carried no repo stats are kept.
     */
   private def repoMayMatch(f: FileEntry, rs0: Option[Set[String]]): Boolean = rs0 match {
     case Some(rs) if f.minRepo != null && f.maxRepo != null =>
@@ -600,14 +577,13 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
     Scan.ColumnarSupportMode.PARTITION_DEFINED
 
-  /** DV sidecars grouped by target bucket (sidecars are written
-    * bucket-partitioned under `c<N>/dv/b=<k>/`; pre-upgrade un-bucketed
-    * sidecars attach to every bucket — the reader filters to its own file).
+  /** DV sidecars grouped by target bucket (both DV writers partition them
+    * under `c<N>/dv/b=<k>/`)
     */
-  private lazy val dvByBucket: Map[Option[Int], Seq[String]] =
+  private lazy val dvByBucket: Map[Int, Seq[String]] =
     snap.dvFiles.groupBy(GraftScan.dvBucketOf)
   private def sidecarsFor(bucket: Int): Seq[String] =
-    (dvByBucket.getOrElse(Some(bucket), Nil) ++ dvByBucket.getOrElse(None, Nil)).map(resolve)
+    dvByBucket.getOrElse(bucket, Nil).map(resolve)
 
   /** STORAGE-PARTITIONED JOIN support: live-row scans are key-grouped by
     * bucket — every partition this scan plans (per-file CoW/DV, per-bucket
@@ -656,7 +632,8 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
         // un-compacted MergeOnRead bucket: readers resolve latest-per-key
         // across the bucket's delta files (snapshot order = commit order).
         // All files (repo,path)-sorted → streaming k-way merge, O(files)
-        // memory; any pre-upgrade unsorted file → hash-map fallback.
+        // memory; any unsorted file (DV merges, clustered compaction) →
+        // hash-map fallback.
         // A WIDE sorted bucket additionally splits into multiple tasks by
         // KEY RANGE (ranges partition the key space, so every key's full
         // history resolves in exactly one task; each task's cursors skip
@@ -687,10 +664,13 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
         // parallelism. Bucket boundaries are never crossed (each partition
         // must hold exactly one bucket — the SPJ partition-key contract),
         // and snapshot file order is preserved within a pack.
-        val cap = options.get("packrows").map(_.toLong).orElse(
-          try org.apache.spark.sql.SparkSession.active.conf
-            .getOption("spark.graft.scan.packRows").map(_.toLong)
-          catch { case _: Throwable => None }
+        // the read option wins over the session conf; a malformed value
+        // fails the same way on both paths, naming its key
+        def rowsOf(key: String)(v: String): Long = v.trim.toLongOption.getOrElse(
+          throw new IllegalArgumentException(s"graft: $key must be a row count, got '$v'"))
+        val cap = options.get("packrows").map(rowsOf("packRows")).orElse(
+          SparkSession.getActiveSession.flatMap(_.conf.getOption("spark.graft.scan.packRows"))
+            .map(rowsOf("spark.graft.scan.packRows"))
         ).getOrElse(512L * 1024)
         val packs = scala.collection.mutable.ArrayBuffer(scala.collection.mutable.ArrayBuffer[FileEntry]())
         var rows = 0L
@@ -724,8 +704,6 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
   private def splitKeysFor(files: Seq[FileEntry]): Seq[(String, String)] = {
     val threshold = options.get("widebucketrows").map(_.toLong).getOrElse(8L * 1000 * 1000)
     // FileEntry.rows is per-file; the bucket's stored size is their sum
-    // (pre-upgrade snapshots carried bucket-level copies — summing those
-    // overestimates and only splits more eagerly, never incorrectly)
     val bucketRows = files.map(_.rows).sum
     if (bucketRows <= threshold) return Nil
     val targetParts = math.min(64L, (bucketRows + threshold - 1) / threshold).toInt
@@ -925,12 +903,11 @@ object GraftScan {
   }
 
   /** target bucket of a DV sidecar, parsed from its `dv/b=<k>/` layout
-    * directory; None for pre-upgrade un-bucketed sidecars.
+    * directory (both DV writers partition sidecars by bucket)
     */
-  def dvBucketOf(path: String): Option[Int] = {
-    val m = "/dv/b=(\\d+)/".r.findFirstMatchIn(path)
-    m.map(_.group(1).toInt)
-  }
+  def dvBucketOf(path: String): Int =
+    "/dv/b=(\\d+)/".r.findFirstMatchIn(path).map(_.group(1).toInt).getOrElse(
+      throw new IllegalStateException(s"DV sidecar $path is not under a dv/b=<k>/ directory"))
 
   /** EXECUTOR-side load of one file's dead positions from its bucket's DV
     * sidecars: scan the sidecars (small — bounded by the table's

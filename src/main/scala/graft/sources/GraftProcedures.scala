@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.{LakeTable, SnapshotIO}
+import graft.table.LakeTable
 
 /** The SQL maintenance surface (round-4 VERDICT "Missing" #4): table
   * lifecycle operations an external SQL user could previously only reach
@@ -165,7 +165,7 @@ object GraftProcedures {
           val keep = input.getInt(1)
           val head = lake.currentSnapshot().get.version
           lake.expireSnapshots(keep)
-          val remaining = LakeTable.existingVersions(lake.fs.exists, s"$dir/meta", head)
+          val remaining = lake.log.versions()
           statusScan("retained" -> IntegerType, "oldest_version" -> IntegerType)(
             remaining.size, remaining.headOption.getOrElse(head))
         case "vacuum_orphans" =>
@@ -288,14 +288,14 @@ object GraftProcedures {
             if (v < 0) lake.currentSnapshot().get.version else v,
             d.files.size, d.totalRows)
         case "describe_history" =>
-          describeHistory(lake, dir)
+          describeHistory(lake)
         case "describe_detail" =>
           // one-row table health (the data Delta's DESCRIBE DETAIL shows):
           // everything comes from the head snapshot's metadata — no data
           // files are opened, so it is O(metadata) on a table of any size
           val s = lake.currentSnapshot().get
           val perBucket = s.files.groupBy(_.bucket).values.map(_.size).maxOption.getOrElse(0)
-          val retained = LakeTable.existingVersions(lake.fs.exists, s"$dir/meta", s.version).size
+          val retained = lake.log.versions().size
           val cdfMode =
             if (s.cdfFullSinceLsn >= 0) "full" else if (s.cdfSinceLsn >= 0) "post" else "off"
           // the session's ACTIVE retention policies (applied at every
@@ -334,9 +334,7 @@ object GraftProcedures {
     /** the version chain, newest first — commit time, row/file/feed state
       * per retained snapshot (the data `DESCRIBE HISTORY` shows on Delta)
       */
-    private def describeHistory(lake: LakeTable, dir: String): Scan = {
-      val fsx = lake.fs
-      val head = lake.currentSnapshot().get.version
+    private def describeHistory(lake: LakeTable): Scan = {
       val schema = StructType(Seq(
         StructField("version", IntegerType), StructField("commit_time", TimestampType),
         StructField("mode", StringType), StructField("hwm", LongType),
@@ -345,9 +343,7 @@ object GraftProcedures {
         StructField("cdf_full_since_lsn", LongType),
         StructField("committed_batches", LongType)))
       val rows: Array[InternalRow] =
-        LakeTable.existingVersions(fsx.exists, s"$dir/meta", head).reverse.map { v =>
-          val s = SnapshotIO.read(fsx.readString(s"$dir/meta/snap-$v.json"),
-            mp => fsx.readString(s"$dir/$mp"))
+        lake.log.snapshots().reverse.map { s =>
           new GenericInternalRow(Array[Any](
             s.version, if (s.tsMs > 0) s.tsMs * 1000L else null,
             UTF8String.fromString(s.mode), s.hwm, s.totalRows, s.files.size,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.table.{Fs, Snapshot, SnapshotIO}
+import graft.table.{Fs, Snapshot, SnapshotLog}
 
 /** LSN offset of the CDC tail — the table's applied-LSN high watermark.
   * A micro-batch covers the half-open range (start, end].
@@ -72,34 +72,20 @@ final class GraftMicroBatchStream(root: String, required: StructType,
     byTs match {
       case Some(ts) =>
         val tsMs = graft.table.LakeTable.parseTimestampMs(ts)
-        val f = fs
-        if (!f.exists(s"$root/meta/VERSION")) 0L
-        else {
-          val head = graft.table.LakeTable.headVersion(f.exists, s"$root/meta",
-            f.readString(s"$root/meta/VERSION").trim.toInt)
-          try {
-            val v = graft.table.LakeTable.versionAsOfTimestamp(f.exists, f.readString,
-              s"$root/meta", head, tsMs)
-            SnapshotIO.parse(f.readString(s"$root/meta/snap-$v.json")).hwm
-          } catch { case _: IllegalArgumentException => 0L } // before the first snapshot: tail all
-        }
+        val l = log
+        // no table, or an instant before the first snapshot: tail all
+        val v = if (!l.exists) None
+          else try Some(l.versionAsOf(tsMs)) catch { case _: IllegalArgumentException => None }
+        v.fold(0L)(l.at(_).hwm)
       case None => byLsn.getOrElse("0").toLong
     }
   }
 
-  private def fs = new Fs(conf.value)
-  /** latest snapshot; a registered-but-unwritten table (no VERSION yet)
+  private def log = new SnapshotLog(new Fs(conf.value), root)
+  /** latest snapshot; a registered-but-unwritten table (no commit yet)
     * tails as empty from offset 0 instead of crashing the query
     */
-  private def loadSnapshot(): Snapshot = {
-    val f = fs
-    if (!f.exists(s"$root/meta/VERSION"))
-      return graft.table.LakeTable.emptySnapshot()
-    val v = graft.table.LakeTable.headVersion(f.exists, s"$root/meta",
-      f.readString(s"$root/meta/VERSION").trim.toInt)
-    SnapshotIO.read(f.readString(s"$root/meta/snap-$v.json"),
-      mp => f.readString(s"$root/$mp"))
-  }
+  private def loadSnapshot(): Snapshot = log.head().getOrElse(graft.table.LakeTable.emptySnapshot())
   /** one snapshot load per trigger: latestOffset anchors it; the planning
     * and progress calls in the same trigger reuse it (3x fewer metadata
     * round-trips per micro-batch on object stores)
@@ -366,7 +352,7 @@ final class GraftChangeTypeReader(files: Seq[String], sorted: Boolean, required:
       }
     }.flatten
     else {
-      // unsorted fallback (pre-upgrade files): group the bucket in memory
+      // unsorted fallback (DV merges, clustered compaction): group the bucket in memory
       val all = scala.collection.mutable.ArrayBuffer[(Array[Any], Int)]()
       files.zipWithIndex.foreach { case (f, fi) =>
         val cur = new GroupRowCursor(f, ext, conf)

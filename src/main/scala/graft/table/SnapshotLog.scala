@@ -1,26 +1,245 @@
 package graft.table
 
+/** A table's metadata log: the ONE owner of the on-disk metadata layout
+  * and of the head protocol every reader and writer shares.
+  * {{{
+  *   root/meta/VERSION                  — last-writer-wins hint "<N>" (atomic overwrite)
+  *   root/meta/snap-<N>.json            — snapshot N, created exclusively (= the commit)
+  *   root/meta/man-<N>-<token>.json     — bucket manifests written by commit N
+  *   root/meta/man-cdf-<N>-<token>.json — change-feed manifests written by commit N
+  * }}}
+  * Versions are dense: commits append at the top, expiry removes a prefix.
+  * The head is the VERSION hint probed forward to the last existing
+  * snapshot, so a hint regressed by out-of-order flips of concurrent
+  * committers self-heals. Manifest pointers are root-relative, so a moved
+  * table directory stays consistent.
+  */
+private[graft] final class SnapshotLog(fs: Fs, root: String) {
+  private val metaDir = s"$root/meta"
+  private val hintFile = s"$metaDir/VERSION"
+  private def snapFile(v: Int) = s"$metaDir/snap-$v.json"
+
+  /** parse snapshot `v` and hydrate its manifests (each distinct one read once) */
+  private def load(v: Int): Snapshot =
+    SnapshotIO.read(fs.readString(snapFile(v)), mp => fs.readString(s"$root/$mp"))
+
+  /** a table exists once its first commit flipped VERSION */
+  def exists: Boolean = fs.exists(hintFile)
+
+  /** is snapshot `v` still retained? */
+  def contains(v: Int): Boolean = fs.exists(snapFile(v))
+
+  /** the head version: the VERSION hint probed forward. VERSION is the one
+    * file overwritten in place, so a reader racing the atomic rename can
+    * transiently see a stale checksum sidecar on LocalFileSystem (observed
+    * as a rare ChecksumException in the OCC race suites) — retry briefly;
+    * persistent failure is real corruption and still surfaces. A hint that
+    * regressed below the retained range (expiry removed its snapshot)
+    * falls back to the newest snapshot a listing of meta/ finds.
+    */
+  private def latest(): Option[Int] =
+    if (!exists) None
+    else {
+      var attempts = 0
+      var hint = -1
+      while (hint < 0) {
+        try hint = fs.readString(hintFile).trim.toInt
+        catch {
+          case e: org.apache.hadoop.fs.ChecksumException =>
+            attempts += 1
+            if (attempts >= 5) throw e
+            Thread.sleep(20L * attempts)
+        }
+      }
+      val v = SnapshotLog.headVersion(fs.exists, metaDir, hint)
+      Some(if (v > hint || contains(v)) v else listedHead())
+    }
+
+  private def listedHead(): Int =
+    fs.listFiles(metaDir, n => n.startsWith("snap-") && n.endsWith(".json"))
+      .map(p => new org.apache.hadoop.fs.Path(p).getName.stripPrefix("snap-").stripSuffix(".json").toInt)
+      .maxOption.getOrElse(throw new IllegalStateException(s"no snapshot under $metaDir"))
+
+  /** the head snapshot; None = no table yet */
+  def head(): Option[Snapshot] = latest().map(load)
+
+  /** retained snapshot `v` (time travel, restore, clone) */
+  def at(v: Int): Snapshot = {
+    require(contains(v), s"snapshot $v of $root expired or never existed")
+    load(v)
+  }
+
+  /** head reload after losing the race for version `v`: snapshot v exists
+    * (that IS the conflict) even if the winner has not flipped VERSION yet,
+    * so probe the dense chain from v — never through the hint
+    */
+  def afterConflict(v: Int): Snapshot = load(SnapshotLog.headVersion(fs.exists, metaDir, v))
+
+  /** The latest retained version committed at or before `tsMs` — the
+    * resolution behind `TIMESTAMP AS OF` and `startingTimestamp`. Only
+    * stamped snapshots qualify; errors when none is old enough, naming the
+    * earliest available instant (the Delta/Iceberg contract for a too-early
+    * timestamp). O(retained snapshots) reads, manifest hydration skipped.
+    */
+  def versionAsOf(tsMs: Long): Int = {
+    val head = latest().getOrElse(throw new IllegalStateException(s"no table at $root"))
+    val stamped = SnapshotLog.existingVersions(fs.exists, metaDir, head)
+      .map(v => v -> SnapshotIO.parse(fs.readString(snapFile(v))).tsMs)
+      .filter(_._2 > 0)
+    val ok = stamped.filter(_._2 <= tsMs)
+    if (ok.isEmpty) {
+      val earliest = stamped.headOption
+        .map { case (v, t) => s"; earliest available: v$v @ ${java.time.Instant.ofEpochMilli(t)}" }
+        .getOrElse(" (no timestamped snapshots)")
+      throw new IllegalArgumentException(
+        s"no snapshot at or before ${java.time.Instant.ofEpochMilli(tsMs)}$earliest")
+    }
+    ok.map(_._1).max
+  }
+
+  /** the retained versions, ascending */
+  def versions(): Seq[Int] =
+    latest().fold(Seq.empty[Int])(SnapshotLog.existingVersions(fs.exists, metaDir, _))
+
+  /** the retained snapshots, hydrated, oldest first */
+  def snapshots(): Seq[Snapshot] = versions().map(load)
+
+  /** Commit `next` on top of `prev`: write ONE manifest covering the
+    * buckets whose file list changed from `prev` (the rest keep their
+    * pointers) and one CDF manifest for the sidecars it appended, then
+    * create the snapshot JSON EXCLUSIVELY (pointers only, stamped with the
+    * commit time), then flip VERSION — per-commit metadata IO is O(buckets
+    * touched), never O(files in table). Of N writers racing for version v
+    * exactly one wins; a loser deletes its manifests and gets false. The
+    * attempt-unique `token` keeps racing attempts' manifests apart. A crash
+    * between steps leaves an orphan manifest at most (vacuumOrphans
+    * reclaims it); the old head stays fully consistent.
+    *
+    * Past `foldAt` distinct manifests the commit folds them all into its
+    * own: every load reads each distinct manifest (N commits → N metadata
+    * round-trips, painful on object stores), so one O(files-in-table) write
+    * every `foldAt` commits bounds hydration reads; no data file moves.
+    */
+  def publish(next: Snapshot, prev: Snapshot, token: String, foldAt: Int = 16): Boolean = {
+    val prevMan = prev.manifests.toMap
+    val prevBy = prev.files.groupBy(_.bucket)
+    val newBy = next.files.groupBy(_.bucket)
+    val changed0 = newBy.filter { case (b, fl) =>
+      !(prevMan.contains(b) && prevBy.get(b).contains(fl))
+    }
+    val changed = {
+      // kept buckets always have a prev pointer (pointer-less buckets are in changed0)
+      val keptPtrs = newBy.keysIterator.filterNot(changed0.contains).map(prevMan).toSet
+      if (changed0.nonEmpty && keptPtrs.size + 1 > foldAt) newBy else changed0
+    }
+    val mp = s"meta/man-${next.version}-$token.json"
+    val manifests =
+      if (changed.isEmpty) newBy.keys.toSeq.sorted.map(b => b -> prevMan(b))
+      else {
+        fs.atomicWrite(s"$root/$mp", SnapshotIO.writeManifest(changed))
+        newBy.toSeq.sortBy(_._1).map { case (b, _) =>
+          b -> (if (changed.contains(b)) mp else prevMan(b))
+        }
+      }
+    // CDF manifests mirror the bucket manifests: an unchanged sidecar list
+    // reuses the previous pointers; an APPEND (the per-commit case) writes
+    // one manifest holding just the new entries — O(batch), never
+    // O(accumulated sidecars); anything else (expiry, retention pruning, an
+    // inline list) rewrites the full list into one manifest, as does an
+    // append past `foldAt` pointers.
+    val cdfMp = s"meta/man-cdf-${next.version}-$token.json"
+    var wroteCdfMan = false
+    val cdfManifests: Seq[String] =
+      if (next.cdfFiles.isEmpty) Nil
+      else {
+        val append = prev.cdfManifests.nonEmpty && next.cdfFiles.startsWith(prev.cdfFiles)
+        if (append && next.cdfFiles.size == prev.cdfFiles.size) prev.cdfManifests
+        else if (append && prev.cdfManifests.size + 1 <= foldAt) {
+          fs.atomicWrite(s"$root/$cdfMp",
+            SnapshotIO.writeCdfManifest(next.cdfFiles.drop(prev.cdfFiles.size)))
+          wroteCdfMan = true
+          prev.cdfManifests :+ cdfMp
+        } else {
+          fs.atomicWrite(s"$root/$cdfMp", SnapshotIO.writeCdfManifest(next.cdfFiles))
+          wroteCdfMan = true
+          Seq(cdfMp)
+        }
+      }
+    val won = fs.atomicCreate(snapFile(next.version),
+      SnapshotIO.write(next.copy(manifests = manifests, cdfManifests = cdfManifests,
+        tsMs = System.currentTimeMillis())))
+    if (won) fs.atomicWrite(hintFile, next.version.toString)
+    else {
+      if (changed.nonEmpty) fs.delete(s"$root/$mp")
+      if (wroteCdfMan) fs.delete(s"$root/$cdfMp")
+    }
+    won
+  }
+
+  /** expire snapshot `s`: delete its JSON, then the manifests it points at
+    * that no retained snapshot shares (`liveManifests`). JSON first, so a
+    * crash in between leaves orphan manifests (vacuumOrphans reclaims
+    * them), never a retained snapshot pointing at deleted ones.
+    */
+  def drop(s: Snapshot, liveManifests: Set[String]): Unit = {
+    fs.delete(snapFile(s.version))
+    (s.manifests.map(_._2) ++ s.cdfManifests)
+      .filterNot(liveManifests).foreach(mp => fs.delete(s"$root/$mp"))
+  }
+
+  /** every manifest file under meta/, referenced or not (vacuum's listing) */
+  def manifestFiles(): Seq[String] =
+    fs.listFiles(metaDir, n => n.startsWith("man-") && n.endsWith(".json"))
+}
+
+private[graft] object SnapshotLog {
+  /** The versions whose snapshot JSON still exists, probed DOWNWARD from
+    * the head: existing snapshots form a dense range [lo, head] (commits
+    * append at the top, expiry removes a prefix), so this costs O(existing)
+    * exists-probes — never O(head). Ascending order.
+    */
+  def existingVersions(exists: String => Boolean, metaDir: String, head: Int): Seq[Int] = {
+    var lo = head
+    while (lo > 1 && exists(s"$metaDir/snap-${lo - 1}.json")) lo -= 1
+    lo to head
+  }
+
+  /** VERSION is a last-writer-wins hint; snapshot versions are dense, so
+    * the true head is the hint probed forward.
+    */
+  def headVersion(exists: String => Boolean, metaDir: String, hint: Int): Int = {
+    var v = hint
+    while (exists(s"$metaDir/snap-${v + 1}.json")) v += 1
+    v
+  }
+
+  /** a version given as text (the DSv2 `snapshot` option, SQL `VERSION AS OF`) */
+  def parseVersion(v: String): Int = v.trim.toIntOption.getOrElse(
+    throw new IllegalArgumentException(s"graft: a snapshot version must be an integer, got '$v'"))
+}
+
 /** One parquet data file tracked by a snapshot, with min/max lsn stats for
   * data skipping (the engine's analogue of the reference's PostGIS indexes
   * + ANALYZE stats, reference: docs/database.md:319-323,374-381), plus
   * min/max `repo` stats so key-predicate scans (`WHERE repo = 'x'`) skip
-  * files that cannot hold the key — null on pre-upgrade snapshots (then no
-  * repo skipping, never wrong results: skipping is a pure optimisation
-  * under the residual re-filter).
+  * files that cannot hold the key — null when the file's footer carried no
+  * repo statistics (then no repo skipping, never wrong results: skipping is
+  * a pure optimisation under the residual re-filter).
   */
 final case class FileEntry(bucket: Int, path: String, rows: Long, minLsn: Long, maxLsn: Long,
                            minRepo: String = null, maxRepo: String = null,
                            /** rows ordered by (repo, path) — lets the MOR
                              * resolve reader stream a k-way sorted merge in
-                             * O(files) memory; false on pre-upgrade files
-                             * (then the reader falls back to the hash-map
-                             * resolve)
+                             * O(files) memory; false on files DV merges and
+                             * clustered compaction write (then the reader
+                             * falls back to the hash-map resolve)
                              */
                            sorted: Boolean = false,
                            /** min/max `path` (UTF-8 byte order) — lets a
                              * path-ONLY predicate ("find this file across
-                             * all repos") skip files; null on pre-upgrade
-                             * snapshots (= no path skipping, never wrong)
+                             * all repos") skip files; null when the footer
+                             * carried no path statistics (= no path
+                             * skipping, never wrong)
                              */
                            minPath: String = null, maxPath: String = null)
 
@@ -80,7 +299,8 @@ final case class Snapshot(
     dvRows: Long = 0L,          // total superseded positions across dvFiles
     /** commit wall-clock (epoch millis), stamped at the VERSION-flip write —
       * backs timestamp time travel (`TIMESTAMP AS OF`, `startingTimestamp`).
-      * 0 on pre-upgrade snapshots (then timestamp resolution skips them).
+      * 0 on snapshots written outside `SnapshotLog.publish` (test fixtures;
+      * timestamp resolution skips them).
       * Clock caveat (same as Delta/Iceberg): commit times come from writer
       * clocks, so resolution is only as monotonic as the fleet's clocks.
       */
@@ -109,8 +329,9 @@ final case class Snapshot(
       * inline list rewrote the full history into every snapshot JSON).
       * Past `spark.graft.manifest.compactThreshold` distinct pointers the
       * commit folds them into one (same policy as the bucket manifests).
-      * Empty = pre-upgrade inline `cdfFiles` (still parsed, migrated to a
-      * manifest on the next CDF-touching commit).
+      * Empty = inline `cdfFiles` (an empty feed, `createTable`'s first
+      * snapshot, test fixtures); the next commit that registers sidecars
+      * writes them to a manifest.
       */
     cdfManifests: Seq[String] = Nil,
     /** FULL change data feed (Delta `table_changes` parity): -1 = the feed
@@ -211,8 +432,8 @@ object SnapshotIO {
   def asInt(v: Any): Int = asLong(v).toInt
 
   private def fileJson(f: FileEntry): String = {
-    // repo range stats are OPTIONAL keys — pre-upgrade snapshots without
-    // them parse as null (= no repo skipping), never as an error
+    // repo/path range stats are OPTIONAL keys — a file whose footer had
+    // none parses as null (= no skipping), never as an error
     val repoStats =
       if (f.minRepo == null || f.maxRepo == null) ""
       else s""","minRepo":${q(f.minRepo)},"maxRepo":${q(f.maxRepo)}"""
@@ -261,21 +482,15 @@ object SnapshotIO {
       s"""{"bucket":$b,"files":${fl.map(fileJson).mkString("[", ",", "]")}}"""
     }.mkString("""{"buckets":[""", ",", "]}")
 
-  def readManifest(txt: String): Map[Int, Seq[FileEntry]] = {
-    val v = JsonMini.parse(txt).asInstanceOf[Map[String, Any]]
-    v.get("buckets") match {
-      case Some(bs) => bs.asInstanceOf[Seq[Any]].map { ba =>
-        val b = ba.asInstanceOf[Map[String, Any]]
-        asInt(b("bucket")) -> b("files").asInstanceOf[Seq[Any]].map(parseFile)
-      }.toMap
-      case None => // v1 single-bucket manifest shape {"files":[...]}
-        v("files").asInstanceOf[Seq[Any]].map(parseFile).groupBy(_.bucket)
-    }
-  }
+  def readManifest(txt: String): Map[Int, Seq[FileEntry]] =
+    JsonMini.parse(txt).asInstanceOf[Map[String, Any]]("buckets").asInstanceOf[Seq[Any]].map { ba =>
+      val b = ba.asInstanceOf[Map[String, Any]]
+      asInt(b("bucket")) -> b("files").asInstanceOf[Seq[Any]].map(parseFile)
+    }.toMap
 
   def write(s: Snapshot): String = {
-    // with manifest pointers the snapshot stores ONLY those; inline file
-    // lists remain for manifest-less snapshots (tests, pre-upgrade format)
+    // with manifest pointers the snapshot stores ONLY those; an inline file
+    // list is what an empty table (no buckets) and test fixtures write
     val body =
       if (s.manifests.nonEmpty)
         s""""manifests":${s.manifests.map { case (b, p) => s"""{"bucket":$b,"path":${q(p)}}""" }.mkString("[", ",", "]")}"""
@@ -302,7 +517,7 @@ object SnapshotIO {
       if (s.cdfSinceLsn < 0) ""
       else {
         // with manifest pointers the snapshot stores ONLY those; the inline
-        // list remains for manifest-less snapshots (tests, pre-upgrade)
+        // list is what an empty feed and test fixtures write
         val body =
           if (s.cdfManifests.nonEmpty)
             s""""cdfManifests":${s.cdfManifests.map(q).mkString("[", ",", "]")}"""
@@ -348,16 +563,9 @@ object SnapshotIO {
         val m = ma.asInstanceOf[Map[String, Any]]
         asInt(m("bucket")) -> m("path").asInstanceOf[String]
       }).getOrElse(Nil),
-      committed = v("committed") match {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].map { case (cp, cv) =>
-          val c = cv.asInstanceOf[Map[String, Any]]
-          cp -> CommitState(asLong(c("hwm")), c("pending").asInstanceOf[Seq[Any]].map(asLong))
-        }
-        case s: Seq[_] => // v1 format: flat "cpId/batchId" list
-          s.map(_.asInstanceOf[String].split('/')).groupBy(_.head).map { case (cp, xs) =>
-            cp -> xs.map(_.last.toLong).sorted.foldLeft(CommitState())(_.absorb(_))
-          }
-        case other => throw new IllegalArgumentException(s"bad committed: $other")
+      committed = v("committed").asInstanceOf[Map[String, Any]].map { case (cp, cv) =>
+        val c = cv.asInstanceOf[Map[String, Any]]
+        cp -> CommitState(asLong(c("hwm")), c("pending").asInstanceOf[Seq[Any]].map(asLong))
       },
       hwm = asLong(v("hwm")),
       totalRows = asLong(v("totalRows")),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangeLogGen, GenConfig}
-import graft.table.{ApplyMode, Fs, LakeTable}
+import graft.table.{ApplyMode, Fs, LakeTable, SnapshotLog}
 
 /** Multi-writer safety (optimistic concurrency): concurrent committers to
   * ONE table must never lose a commit — the snapshot chain stays dense,
@@ -291,7 +291,7 @@ class ConcurrentCommitSpec extends SparkSpec {
   test("existingVersions probes downward from the head: O(existing), ascending") {
     val present = Set(7, 8, 9, 10)
     var probes = 0
-    val vs = LakeTable.existingVersions(
+    val vs = SnapshotLog.existingVersions(
       p => { probes += 1; "snap-(\\d+)".r.findFirstMatchIn(p).exists(m => present(m.group(1).toInt)) },
       "meta", 10)
     assert(vs == (7 to 10))

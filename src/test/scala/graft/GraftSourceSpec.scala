@@ -83,6 +83,24 @@ class GraftSourceSpec extends SparkSpec {
     assert(scanOf(one).planInputPartitions().length == snap.files.size)
   }
 
+  private def packRowsError(df: => org.apache.spark.sql.DataFrame): String =
+    intercept[IllegalArgumentException](scanOf(df).planInputPartitions()).getMessage
+
+  test("a malformed packRows read option fails naming the option") {
+    val t = buildCow()
+    val msg = packRowsError(spark.read.format("graft").option("packRows", "lots").load(t.root))
+    assert(msg.contains("packRows") && msg.contains("'lots'"), msg)
+  }
+
+  test("a malformed spark.graft.scan.packRows fails naming the conf key") {
+    val t = buildCow()
+    spark.conf.set("spark.graft.scan.packRows", "lots")
+    try {
+      val msg = packRowsError(spark.read.format("graft").load(t.root))
+      assert(msg.contains("spark.graft.scan.packRows") && msg.contains("'lots'"), msg)
+    } finally spark.conf.unset("spark.graft.scan.packRows")
+  }
+
   test("SQL over the DSv2 table (temp view)") {
     val t = buildCow()
     spark.read.format("graft").load(t.root).createOrReplaceTempView("dsv2_repos")

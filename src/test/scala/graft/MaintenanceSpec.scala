@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangeLogGen, GenConfig}
-import graft.table.{ApplyMode, LakeTable}
+import graft.table.{ApplyMode, LakeTable, SnapshotLog}
 
 /** Table maintenance: auto-compaction bounds MOR read amplification; expiry
   * reclaims unreferenced files while retained snapshots stay readable and
@@ -261,7 +261,7 @@ class MaintenanceSpec extends SparkSpec {
           t.merge(wal.where(col("lsn").between(i * 500 + 1, (i + 1) * 500)), "ar", i.toLong))
         val head = t.currentSnapshot().get.version
         // the version chain is BOUNDED at the retention count, not O(commits)
-        val versions = LakeTable.existingVersions(t.fs.exists, s"${t.root}/meta", head)
+        val versions = SnapshotLog.existingVersions(t.fs.exists, s"${t.root}/meta", head)
         assert(versions == Seq(head - 2, head - 1, head),
           s"meta must hold exactly the 3 retained versions, got $versions")
         // time travel works across the retained window and errors below it
