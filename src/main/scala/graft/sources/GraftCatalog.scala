@@ -85,8 +85,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
   override def tableExists(ident: Identifier): Boolean = tableAt(dirOf(ident))
 
   private def publicSchema(snap: Snapshot): StructType =
-    StructType(snap.logicalSchema.fields
-      .filterNot(_.name == "deleted").map(_.copy(nullable = true)))
+    GraftDataSource.schemaOf(snap, keepDeleted = false)
 
   private def loadAt(ident: Identifier, version: Option[Int]): Table = {
     val dir = dirOf(ident)

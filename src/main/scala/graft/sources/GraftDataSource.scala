@@ -126,14 +126,11 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (_, snap) = loadSnapshot(options)
     val changeTypes = options.getBoolean("changeTypes", false)
-    val keepDeleted = options.getBoolean("changeFeed", false) || changeTypes
-    // LOGICAL names at the public surface; readers translate back to the
-    // storage names per snapshot (column mapping)
-    val fields = snap.logicalSchema.fields
-      .filter(f => keepDeleted || f.name != "deleted").map(_.copy(nullable = true))
+    val fields = GraftDataSource.schemaOf(snap,
+      keepDeleted = options.getBoolean("changeFeed", false) || changeTypes)
     // `changeTypes=true` (streaming tail): synthesised change-kind column,
     // Delta CDF vocabulary (insert / update_postimage / delete)
-    StructType(if (changeTypes) fields :+ StructField("_change_type", StringType) else fields)
+    if (changeTypes) fields.add(StructField("_change_type", StringType)) else fields
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -141,6 +138,17 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     new GraftTable(loadSnapshot(new CaseInsensitiveStringMap(properties)), schema)
 
   override def supportsExternalMetadata(): Boolean = false
+}
+
+object GraftDataSource {
+  /** The public schema of a snapshot — one definition for path reads, the
+    * catalog and `LakeTable`'s reads: LOGICAL names (readers translate back
+    * to the storage names per snapshot, column mapping), all nullable, and
+    * `deleted` only on tombstone-keeping (`changeFeed`) reads.
+    */
+  def schemaOf(snap: Snapshot, keepDeleted: Boolean): StructType =
+    StructType(snap.logicalSchema.fields
+      .filter(f => keepDeleted || f.name != "deleted").map(_.copy(nullable = true)))
 }
 
 final class GraftTable(rootSnap: (String, Snapshot), tableSchema: StructType)
@@ -359,6 +367,11 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     * .load(root).where($"lsn" > cursor)` is the whole consumer story.
     */
   private def batchChanges: Boolean = options.get("changetypes").exists(_.toBoolean)
+  /** live-row scans serve tombstone rows iff the read asked for them
+    * (`changeFeed`) — never inferred from the pruned column set, so a
+    * projection that drops `deleted` cannot change the row count
+    */
+  private def keepDeleted: Boolean = options.get("changefeed").exists(_.toBoolean)
   /** (lo exclusive, hi inclusive] for the sidecar planning */
   private def changesLo: Long = if (lsnLo == Long.MinValue) 0L else lsnLo - 1
 
@@ -376,8 +389,7 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
   }
 
   // does any bucket need an in-reader latest-per-key resolve?
-  private lazy val needResolve = snap.mode == "mor" &&
-    snap.files.groupBy(_.bucket).values.exists(_.size > 1)
+  private lazy val needResolve = snap.files.groupBy(_.bucket).values.exists(GraftScan.stacked(snap, _))
 
   /** Key-hash BUCKET pruning: when both key columns are equality-bound,
     * every candidate row lives in the bucket(s) of the bound (repo, path)
@@ -499,16 +511,10 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     // batch-resolved, sub-splits key-disjoint); CoW is always
     // single-commit per bucket, and DV masks dead positions by sidecar
     // independently of file pruning, so both are always safe.
-    val isMor = snap.mode == "mor"
-    def commitDirOf(p: String): String = {
-      val i = p.indexOf("/b=")
-      if (i >= 0) p.substring(0, i) else p
-    }
     val bucketResolved: Map[Int, Boolean] =
-      if (ve.isEmpty || !isMor) Map.empty
-      else cands.groupBy(_.bucket).view
-        .mapValues(fs => fs.iterator.map(f => commitDirOf(f.path)).toSet.size == 1).toMap
-    def valueSafe(f: FileEntry): Boolean = !isMor || bucketResolved.getOrElse(f.bucket, true)
+      if (ve.isEmpty) Map.empty
+      else cands.groupBy(_.bucket).view.mapValues(fs => !GraftScan.stacked(snap, fs)).toMap
+    def valueSafe(f: FileEntry): Boolean = bucketResolved.getOrElse(f.bucket, true)
     val vCols = ve.keys.toSeq.sorted
     val evCols = Seq("repo", "path") ++ vCols
     // footer opens are independent IO — parallel collection, like fileStats
@@ -628,7 +634,7 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     // so driver memory is independent of dvRows.
     val byBucket = liveFiles.groupBy(_.bucket)
     byBucket.toSeq.sortBy(_._1).flatMap { case (bucket, files) =>
-      if (snap.mode == "mor" && files.size > 1) {
+      if (GraftScan.stacked(snap, files)) {
         // un-compacted MergeOnRead bucket: readers resolve latest-per-key
         // across the bucket's delta files (snapshot order = commit order).
         // All files (repo,path)-sorted → streaming k-way merge, O(files)
@@ -773,12 +779,11 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
       // resolve (row) partitions for its multi-file buckets and columnar
       // ones for its single-file buckets and crash at planning. Decide
       // ONCE per scan from snapshot metadata (stable across the multiple
-      // planning passes): any multi-file bucket ⇒ the whole scan reads
+      // planning passes): any stacked bucket ⇒ the whole scan reads
       // row-based. Fully-compacted / CoW / DV layouts keep vectorization.
-      val allPlain = snap.mode != "mor" ||
-        snap.files.groupBy(_.bucket).values.forall(_.size <= 1)
+      val allPlain = !snap.files.groupBy(_.bucket).values.exists(GraftScan.stacked(snap, _))
       new GraftReaderFactory(physRequired, conf, vectorized && allPlain,
-        bucketOrdinal = physRequired.fieldNames.indexOf("_bucket"))
+        bucketOrdinal = physRequired.fieldNames.indexOf("_bucket"), keepDeleted = keepDeleted)
     }
   }
 
@@ -791,6 +796,23 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
 }
 
 object GraftScan {
+  /** Does this bucket's file set need the latest-per-key resolve? Only a
+    * MergeOnRead bucket whose files come from MORE than one commit: every
+    * write emits key-unique rows per commit per bucket (within-batch dedup
+    * on merges, rewrites resolved by construction, one key in exactly one
+    * task's file under sub-splitting), so a single commit's files — the
+    * steady state right after compact() — cannot hold two versions of a
+    * key and read plain (resolve elision).
+    */
+  def stacked(snap: Snapshot, files: Seq[FileEntry]): Boolean =
+    snap.mode == "mor" && files.iterator.map(f => commitDirOf(f.path)).distinct.size > 1
+
+  /** the commit directory a data file was written under (`.../c<N>-<token>`) */
+  private def commitDirOf(p: String): String = {
+    val i = p.indexOf("/b=")
+    if (i >= 0) p.substring(0, i) else p
+  }
+
   def relPath(p: String): String = {
     val i = p.lastIndexOf("/data/")
     if (i >= 0) p.substring(i + 1) else p
@@ -1037,11 +1059,13 @@ final class GraftReaderFactory(required: StructType, conf: SerializableConfigura
                                  * in parquet, stamped per task from its
                                  * partition's bucket id
                                  */
-                               bucketOrdinal: Int = -1) extends PartitionReaderFactory {
+                               bucketOrdinal: Int = -1,
+                               /** serve tombstone rows (`changeFeed` reads) */
+                               keepDeleted: Boolean = false) extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     vectorized && !partition.asInstanceOf[GraftInputPartition].resolveLatest &&
-      !required.fieldNames.contains("deleted") && // changeFeed reads take the row path
+      !keepDeleted && // changeFeed reads take the row path
       required.fields.forall(f => GraftColumnarReader.supportedType(f.dataType))
 
   /** one partition may carry SEVERAL bin-packed files of a bucket (plan
@@ -1083,12 +1107,12 @@ final class GraftReaderFactory(required: StructType, conf: SerializableConfigura
     val p = partition.asInstanceOf[GraftInputPartition]
     def onePlain(f: String): PartitionReader[InternalRow] = {
       val dead = GraftScan.deadPositionsFor(f, p.dvSidecars, conf.value)
-      new GraftPartitionReader(f, required, conf.value, dead)
+      new GraftPartitionReader(f, required, conf.value, dead, keepDeleted)
     }
     val inner =
       if (p.resolveLatest && p.sortedResolve)
-        new GraftSortedResolveReader(p.files, required, conf.value, p.range)
-      else if (p.resolveLatest) new GraftResolveReader(p.files, required, conf.value)
+        new GraftSortedResolveReader(p.files, required, conf.value, p.range, keepDeleted)
+      else if (p.resolveLatest) new GraftResolveReader(p.files, required, conf.value, keepDeleted)
       else if (p.files.size == 1) onePlain(p.files.head)
       else new ChainedReader[InternalRow](p.files.map(f => () => onePlain(f)))
     // `_bucket` requested: the parquet cursors null-fill the absent field;
@@ -1239,16 +1263,16 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
 }
 
 /** Row-based single-file reader (the non-vectorized path): projection-pruned
-  * to the required columns (+ `deleted`, filtered here), skipping rows whose
-  * file position is marked dead by a deletion vector.
+  * to the required columns (+ `deleted`, filtered here unless
+  * `exposeDeleted`), skipping rows whose file position is marked dead by a
+  * deletion vector.
   */
 final class GraftPartitionReader(path: String, required: StructType, conf: Configuration,
-                                 dead: Array[Long])
+                                 dead: Array[Long], exposeDeleted: Boolean = false)
     extends PartitionReader[InternalRow] {
 
-  private val exposeDeleted = required.fieldNames.contains("deleted")
   private val ext: Array[StructField] =
-    if (exposeDeleted) required.fields
+    if (required.fieldNames.contains("deleted")) required.fields
     else required.fields :+ StructField("deleted", BooleanType)
   private val cursor = new GroupRowCursor(path, ext, conf)
   private val deletedIdx = ext.indexWhere(_.name == "deleted")
@@ -1260,9 +1284,8 @@ final class GraftPartitionReader(path: String, required: StructType, conf: Confi
       val del = cursor.values(deletedIdx)
       while (dp < dead.length && dead(dp) < cursor.ordinal) dp += 1
       val dvDead = dp < dead.length && dead(dp) == cursor.ordinal
-      // a schema CARRYING `deleted` (changeFeed batch read) gets tombstone
-      // rows too — otherwise the flag could never be true; DV-dead
-      // positions are superseded versions, never served either way
+      // a changeFeed read gets tombstone rows too; DV-dead positions are
+      // superseded versions, never served either way
       if (!dvDead && (exposeDeleted || del == null || del == false)) {
         current = new GenericInternalRow(java.util.Arrays.copyOfRange(
           cursor.values.asInstanceOf[Array[AnyRef]], 0, required.length).asInstanceOf[Array[Any]])
@@ -1281,9 +1304,10 @@ final class GraftPartitionReader(path: String, required: StructType, conf: Confi
   * by (lsn, commit) — ties go to the later delta file. Memory is O(live
   * keys in the bucket); `rebucket()` is the lever that keeps buckets sized
   * to executor memory as the table grows. Tombstone winners are dropped at
-  * emit, same as `LakeTable.read()`.
+  * emit unless `exposeDeleted` (changeFeed reads).
   */
-final class GraftResolveReader(files: Seq[String], required: StructType, conf: Configuration)
+final class GraftResolveReader(files: Seq[String], required: StructType, conf: Configuration,
+                               exposeDeleted: Boolean = false)
     extends PartitionReader[InternalRow] {
 
   // read schema = required ∪ the shared bookkeeping vocabulary; the extras
@@ -1294,7 +1318,6 @@ final class GraftResolveReader(files: Seq[String], required: StructType, conf: C
   private val lsnIdx = idx("lsn"); private val commitIdx = idx("commit")
   private val deletedIdx = idx("deleted")
 
-  private val exposeDeleted = required.fieldNames.contains("deleted")
   private val latest = {
     val m = new java.util.HashMap[(String, String), Array[Any]]()
     files.foreach { f =>
@@ -1435,14 +1458,14 @@ private[sources] final class SortedKeyMerge(files: Seq[String], ext: Array[Struc
   * reader and `LakeTable.latestPerKey`).
   */
 final class GraftSortedResolveReader(files: Seq[String], required: StructType, conf: Configuration,
-                                     range: Option[GraftKeyRange] = None)
+                                     range: Option[GraftKeyRange] = None,
+                                     exposeDeleted: Boolean = false)
     extends PartitionReader[InternalRow] {
 
   private val ext: Array[StructField] = ResolveColumns.extend(required.fields)
   private def idx(n: String): Int = ext.indexWhere(_.name == n)
   private val lsnIdx = idx("lsn"); private val commitIdx = idx("commit")
   private val deletedIdx = idx("deleted")
-  private val exposeDeleted = required.fieldNames.contains("deleted")
 
   private val merge = new SortedKeyMerge(files, ext, idx("repo"), idx("path"), conf, range)
   private val versions = scala.collection.mutable.ArrayBuffer[(Array[Any], Int)]()

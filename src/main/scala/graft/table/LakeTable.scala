@@ -116,25 +116,11 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 
   /** Time travel: live rows as of snapshot `version` (must still be
     * retained — see expireSnapshots). Historical files are read under THEIR
-    * snapshot's schema, so pre-evolution snapshots stay readable as
-    * written (SURVEY.md §7.6 "readers must resolve any historic snapshot").
+    * snapshot's schema and column mapping, so pre-evolution snapshots stay
+    * readable as written (SURVEY.md §7.6 "readers must resolve any historic
+    * snapshot"): a pre-rename snapshot still shows the old logical names.
     */
-  def readAt(version: Int): DataFrame = {
-    val s = log.at(version)
-    val schema = StructType.fromDDL(s.schemaDdl)
-    val raw =
-      if (s.files.isEmpty) emptyTable(schema)
-      else spark.read.schema(schema).parquet(s.files.map(f => resolvePath(f.path)): _*)
-    val resolved = s.mode match {
-      case "mor" => latestPerKey(raw)
-      case "dv"  => applyDv(raw, s.dvFiles, s.dvRows)
-      case _     => raw
-    }
-    // each snapshot serves under ITS OWN column mapping: a pre-rename
-    // snapshot still shows the old logical names (and pre-drop ones the
-    // dropped column)
-    toLogical(resolved.where(!col("deleted")).drop("deleted"), Some(s))
-  }
+  def readAt(version: Int): DataFrame = scanAt(Some(log.at(version)))
 
   /** distinct manifests past which a commit folds them into one (SnapshotLog.publish) */
   private def manifestFoldAt: Int =
@@ -263,22 +249,15 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
   private[graft] def readRaw(buckets: Option[Set[Int]] = None): DataFrame =
     readRawAt(currentSnapshot(), buckets)
 
-  private def readRawAt(snap: Option[Snapshot], buckets: Option[Set[Int]]): DataFrame = {
-    snap match {
+  private def readRawAt(snap: Option[Snapshot], buckets: Option[Set[Int]]): DataFrame =
+    bucketView(snap, buckets) match {
       case None => emptyTable(StructType.fromDDL(graft.model.Schemas.repoRow.toDDL))
       case Some(s) =>
         val schema = StructType.fromDDL(s.schemaDdl)
-        val files = buckets.fold(s.files)(bs => s.files.filter(f => bs(f.bucket)))
-        if (files.isEmpty) emptyTable(schema)
-        else spark.read.schema(schema).parquet(files.map(f => resolvePath(f.path)): _*)
+        if (s.files.isEmpty) emptyTable(schema)
+        else spark.read.schema(schema).parquet(s.files.map(f => resolvePath(f.path)): _*)
     }
-  }
 
-  /** Anti-join out the positions marked dead by the deletion-vector
-    * sidecars. No shuffle of the data side in the common case: the DV side
-    * is tiny relative to the table (bounded by maybeCompact), so AQE plans
-    * a broadcast anti-join — the data columns never move.
-    */
   /** root-relative form of a data-file path column — DV sidecars store
     * positions as (relative file path, row index) so a relocated table's
     * DVs still apply; the scan's absolute `_metadata.file_path` relativises
@@ -287,50 +266,71 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
   private def relPathCol(c: org.apache.spark.sql.Column) =
     regexp_replace(c, "^.*/data/", "data/")
 
+  /** The dead positions of `dvFiles` (`dvRows` of them) as (`__dvf`
+    * root-relative data file, `__dvr` row index). DRIVER-side sidecar
+    * decode below `spark.graft.dv.driverMaxRows` (the same pattern as the
+    * per-merge tombstone count): the DV side is tiny and bounded
+    * (maybeCompact folds it at 30 % of stored rows), but scanning its N
+    * per-commit sidecar files through a Spark job pays N parquet opens of
+    * scheduling+footer latency on every use. The parallel driver pass is
+    * LRU-cached per immutable sidecar (shared with the DSv2 readers) and
+    * yields a local relation. Past the threshold (cluster-scale DV
+    * accumulation) the sidecars are scanned distributed; the threshold is
+    * the scale guard, not a tuning constant.
+    */
+  private def dvPositions(dvFiles: Seq[String], dvRows: Long): DataFrame =
+    if (dvRows <= spark.conf.getOption("spark.graft.dv.driverMaxRows").map(_.toLong).getOrElse(1000000L)) {
+      import scala.collection.parallel.CollectionConverters._
+      val hconf = spark.sessionState.newHadoopConf()
+      val pairs = dvFiles.par
+        .flatMap(f => graft.sources.GraftScan.sidecarPairs(resolvePath(f), hconf)).seq.toSeq
+      import spark.implicits._
+      spark.createDataset(pairs).toDF("__dvf", "__dvr")
+    } else
+      spark.read.parquet(dvFiles.map(resolvePath): _*)
+        .select(relPathCol(col("file_path")).as("__dvf"), col("row_index").as("__dvr"))
+
+  /** Anti-join out the positions marked dead by the deletion-vector
+    * sidecars (the write side's DV resolve; reads mask them inside the
+    * scan). The DV side is tiny relative to the table, so AQE plans a
+    * broadcast anti-join — the data columns never move.
+    */
   private def applyDv(raw: DataFrame, dvFiles: Seq[String],
                       dvRows: Long = Long.MaxValue): DataFrame =
     if (dvFiles.isEmpty) raw
-    else {
-      // DRIVER-side sidecar decode below a row threshold (the same pattern
-      // as the per-merge tombstone count): the DV side is tiny and bounded
-      // (maybeCompact folds it at 30 % of stored rows), but scanning its
-      // N per-commit sidecar files through a Spark job pays N parquet
-      // opens of scheduling+footer latency on EVERY DV read. Decode them
-      // in a parallel driver pass instead (LRU-cached per immutable
-      // sidecar, shared with the DSv2 readers) and feed the anti-join a
-      // local relation — same join, no sidecar scan job. Snapshots past
-      // the threshold (cluster-scale DV accumulation) keep the
-      // distributed scan; the threshold is the scale guard, not a tuning
-      // constant.
-      val thresh = spark.conf.getOption("spark.graft.dv.driverMaxRows")
-        .map(_.toLong).getOrElse(1000000L)
-      val dv =
-        if (dvRows <= thresh) {
-          import scala.collection.parallel.CollectionConverters._
-          val hconf = spark.sessionState.newHadoopConf()
-          val pairs = dvFiles.par
-            .flatMap(f => graft.sources.GraftScan.sidecarPairs(resolvePath(f), hconf)).seq.toSeq
-          import spark.implicits._
-          spark.createDataset(pairs).toDF("__dvf", "__dvr")
-        } else
-          spark.read.parquet(dvFiles.map(resolvePath): _*)
-            .select(relPathCol(col("file_path")).as("__dvf"), col("row_index").as("__dvr"))
-      raw
-        .withColumn("__fp", relPathCol(col("_metadata.file_path")))
-        .withColumn("__ri", col("_metadata.row_index"))
-        .join(dv, col("__fp") === col("__dvf") && col("__ri") === col("__dvr"), "left_anti")
-        .drop("__fp", "__ri")
-    }
+    else raw
+      .withColumn("__fp", relPathCol(col("_metadata.file_path")))
+      .withColumn("__ri", col("_metadata.row_index"))
+      .join(dvPositions(dvFiles, dvRows), col("__fp") === col("__dvf") && col("__ri") === col("__dvr"), "left_anti")
+      .drop("__fp", "__ri")
 
-  /** Latest version of every key (tombstones still present). In CopyOnWrite
-    * mode stored rows are already resolved; MergeOnRead applies the
-    * LSN-ordered dedup at read time; DeletionVector anti-joins the dead
-    * positions out.
+  /** THE live-row read: a DSv2 scan (GraftScan) over the snapshot the
+    * caller already loaded. The scan resolves MergeOnRead deltas and masks
+    * deletion-vector positions inside its readers, column-pruned and with
+    * no shuffle, and serves the snapshot's own column mapping. An empty
+    * table (None) reads as this table's empty layout. `keepDeleted` keeps
+    * tombstone winners and the `deleted` column (the `changeFeed` read).
     */
-  def readResolved(buckets: Option[Set[Int]] = None): DataFrame = {
-    val snap = currentSnapshot()
-    toLogical(readResolvedAt(snap, buckets), snap)
+  private def scanAt(snap: Option[Snapshot], keepDeleted: Boolean = false): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val s = snap.getOrElse(emptySnapshot)
+    val table = new graft.sources.GraftTable((root, s),
+      graft.sources.GraftDataSource.schemaOf(s, keepDeleted))
+    val options = if (keepDeleted) Map("changeFeed" -> "true") else Map.empty[String, String]
+    org.apache.spark.sql.graft.Internals.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None, new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)))
   }
+
+  /** a snapshot restricted to the given buckets' files (an in-memory view;
+    * DV sidecars are attached per bucket by the scan)
+    */
+  private def bucketView(snap: Option[Snapshot], buckets: Option[Set[Int]]): Option[Snapshot] =
+    snap.map(s => buckets.fold(s)(bs => s.copy(files = s.files.filter(f => bs(f.bucket)))))
+
+  /** Latest version of every key, tombstones still present (`deleted`). */
+  def readResolved(buckets: Option[Set[Int]] = None): DataFrame =
+    scanAt(bucketView(currentSnapshot(), buckets), keepDeleted = true)
 
   /** PUBLIC-BOUNDARY column mapping: internal paths (merge, compaction,
     * stats) operate on the physical storage schema; user-facing frames
@@ -341,41 +341,34 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     snap.filter(_.renames.nonEmpty).fold(df)(s =>
       df.select(df.columns.map(c => col(c).as(s.logicalOf(c))).toSeq: _*))
 
+  /** The write side's resolve (CoW rewrites, CDF sidecars, restore's
+    * replace sidecar, MV state folds): latest version of every key of the
+    * given buckets as a DataFrame under the PHYSICAL schema, tombstones
+    * included — it unions and joins with other physical frames, which the
+    * DSv2 read (logical names) cannot.
+    */
   private[graft] def readResolvedAt(snap: Option[Snapshot], buckets: Option[Set[Int]]): DataFrame = {
     val raw = readRawAt(snap, buckets)
     snap.map(s => LakeTable.modeOf(s.mode)).getOrElse(defaultMode) match {
       case ApplyMode.CopyOnWrite    => raw
       case ApplyMode.MergeOnRead    =>
-        // RESOLVE ELISION (guide §2.4: remove shuffles outright): every
-        // write emits key-unique rows per commit per bucket — within-batch
-        // dedup on merges, rewrites resolved by construction, and one key
-        // lands in exactly one task's file even under sub-splitting — so a
-        // bucket whose files all come from ONE commit cannot hold two
-        // versions of a key; when EVERY selected bucket is in that state
-        // (the steady state right after compact()), latest-per-key is an
-        // identity and its whole shuffle + aggregate drop out of the plan.
-        // Mixed tables keep the single global resolve: an A/B on the
-        // targeted-compaction fixture measured the per-bucket plain ∪
-        // resolved split SLOWER than one aggregate (1.3 s vs 2.1 s — two
-        // scan subtrees + union cost more than the saved aggregate work).
-        val allPlain = snap.exists { s =>
-          val sel = buckets.fold(s.files)(bs => s.files.filter(f => bs(f.bucket)))
-          def commitOf(p: String): String = {
-            val i = p.indexOf("/b=")
-            if (i >= 0) p.substring(0, i) else p
-          }
-          sel.groupBy(_.bucket).forall { case (_, fs) =>
-            fs.map(f => commitOf(f.path)).distinct.size <= 1
-          }
-        }
-        if (allPlain) raw else latestPerKey(raw)
+        // RESOLVE ELISION: when no selected bucket is stacked (the steady
+        // state right after compact()), latest-per-key is an identity and
+        // its whole shuffle + aggregate drop out of the plan. Mixed tables
+        // keep the single global resolve: an A/B on the targeted-compaction
+        // fixture measured the per-bucket plain ∪ resolved split SLOWER
+        // than one aggregate (1.3 s vs 2.1 s — two scan subtrees + union
+        // cost more than the saved aggregate work).
+        val stacked = bucketView(snap, buckets).exists(s =>
+          s.files.groupBy(_.bucket).values.exists(graft.sources.GraftScan.stacked(s, _)))
+        if (stacked) latestPerKey(raw) else raw
       case ApplyMode.DeletionVector =>
         applyDv(raw, snap.map(_.dvFiles).getOrElse(Nil), snap.map(_.dvRows).getOrElse(0L))
     }
   }
 
   /** Live rows — the user-facing `repos` table. */
-  def read(): DataFrame = readResolved().where(!col("deleted")).drop("deleted")
+  def read(): DataFrame = scanAt(currentSnapshot())
 
   /** Register the live table as a temp view so users can `spark.sql` over
     * it — the engine's DuckDB-SQL-over-pandas analogue
@@ -910,9 +903,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         // only LIVE rows can be superseded (or out-compete an incoming
         // version); already-dead positions must not shadow the live one
         if (prev.dvFiles.isEmpty) raw
-        else raw.join(
-          spark.read.parquet(prev.dvFiles.map(resolvePath): _*)
-            .select(relPathCol(col("file_path")).as("__dvf"), col("row_index").as("__dvr")),
+        else raw.join(dvPositions(prev.dvFiles, prev.dvRows),
           col("file_path") === col("__dvf") && col("row_index") === col("__dvr"), "left_anti")
       }
 
@@ -957,10 +948,8 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       val perFile = fileStats(commitDir)
       val stats = bucketStatsOf(perFile)
       val newEntries = entriesOf(perFile, sorted = false)
-      val tombstones = {
-        val t = keep.agg(sum(when(col("deleted"), 1L).otherwise(0L))).collect().head
-        if (t.isNullAt(0)) 0L else t.getLong(0)
-      }
+      // the data files hold exactly `keep`'s rows
+      val tombstones = tombstonesOf(perFile)
 
       // CDF sidecar: DV mode knows each winner's prior-version liveness
       // DIRECTLY from the join (ex_lsn/ex_deleted), so typing is a plain
@@ -2073,7 +2062,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * files with OLD-layout bucket ids and silently miss victims
     */
   private def readLiveAt(snap: Option[Snapshot], buckets: Option[Set[Int]]): DataFrame =
-    toLogical(readResolvedAt(snap, buckets).where(!col("deleted")).drop("deleted"), snap)
+    scanAt(bucketView(snap, buckets))
 
   /** Analyze `cond` against this snapshot's schema and derive the bucket
     * set its key-equality conjuncts pin (a Spark-4 Column is a lazy

@@ -214,8 +214,7 @@ class CdfSidecarSpec extends SparkSpec {
 
   test("DML statements write sidecars: updateWhere/deleteWhere type their victims") {
     val t = build(ApplyMode.CopyOnWrite, "cdfdml")
-    val victim = t.read().where(!col("deleted").isNotNull || lit(true))
-      .select("repo", "path").head()
+    val victim = t.read().select("repo", "path").head()
     val hwm = t.currentSnapshot().get.hwm
     t.updateWhere(col("repo") === victim.getString(0) && col("path") === victim.getString(1),
       Map("content" -> lit("patched")))

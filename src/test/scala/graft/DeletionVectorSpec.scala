@@ -37,6 +37,17 @@ class DeletionVectorSpec extends SparkSpec {
       assert(snap.dvFiles.nonEmpty)
       // dead rows are physically still there: stored > live
       assert(snap.totalRows > dv.read().count())
+      // each batch's ledger tombstone count is the `deleted` rows it wrote
+      val entries = dv.ledger.entries()
+      assert(entries.size == splits.size)
+      val byCommit = snap.files.groupBy(_.path.split("/b=").head).values.toSeq
+      assert(byCommit.size == splits.size, "one commit dir per batch")
+      val ledgerTombs = entries.map(e =>
+        "\"tombstoneRows\":(\\d+)".r.findFirstMatchIn(e).get.group(1).toLong).sorted
+      val written = byCommit.map(fs => spark.read.parquet(fs.map(f => dv.resolvePath(f.path)): _*)
+        .where(col("deleted")).count()).sorted
+      assert(ledgerTombs.exists(_ > 0), s"fixture must delete: $ledgerTombs")
+      assert(ledgerTombs == written, s"ledger $ledgerTombs != written $written")
     } finally wal.unpersist()
   }
 

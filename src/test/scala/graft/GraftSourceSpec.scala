@@ -501,6 +501,27 @@ class GraftSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("change data feed"), e.getMessage)
   }
 
+  test("a changeFeed batch read serves the same rows whatever columns it prunes") {
+    // tombstones are served because the READ asked for them, not because
+    // `deleted` survived column pruning
+    val mor = new LakeTable(spark, tmpDir("cfmor"), defaultBuckets = 4, ApplyMode.MergeOnRead)
+    val dv = new LakeTable(spark, tmpDir("cfdv"), defaultBuckets = 4, ApplyMode.DeletionVector)
+    val wal = ChangeLogGen.changeLog(spark, cfg)
+    Seq(mor, dv).foreach { t =>
+      (0 until 3).foreach(i => t.merge(wal.where(pmod(col("lsn"), lit(3)) === i), "cf", i.toLong))
+      val df = spark.read.format("graft").option("changeFeed", "true").load(t.root)
+      val n = df.collect().length
+      assert(df.where(col("deleted")).count() > 0, s"${t.root}: fixture needs tombstones")
+      assert(n == t.readResolved().count())
+      assert(df.count() == n)
+      assert(df.select("repo").count() == n)
+      assert(df.groupBy("lang").count().agg(sum("count")).head().getLong(0) == n)
+    }
+    assert(mor.currentSnapshot().get.files.groupBy(_.bucket).values.exists(_.size > 1),
+      "the MoR fixture must be stacked")
+    assert(dv.currentSnapshot().get.dvRows > 0, "the DV fixture must have live deletion vectors")
+  }
+
   test("pre-upgrade snapshots without repo stats: no skipping, correct results") {
     val t = buildCow()
     // simulate a pre-upgrade snapshot: strip the repo stats

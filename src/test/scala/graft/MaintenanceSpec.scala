@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangeLogGen, GenConfig}
+import graft.sources.GraftInputPartition
 import graft.table.{ApplyMode, LakeTable, SnapshotLog}
 
 /** Table maintenance: auto-compaction bounds MOR read amplification; expiry
@@ -18,27 +21,36 @@ class MaintenanceSpec extends SparkSpec {
   def stateOf(t: LakeTable) =
     collectSorted(t.read().select("repo", "path", "commit", "contentSha"))
 
+  /** the partitions a read's DSv2 scan plans */
+  def planned(df: DataFrame): Seq[GraftInputPartition] =
+    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b.inputPartitions }
+      .flatten.map(_.asInstanceOf[GraftInputPartition])
+
+  /** the buckets whose scan partitions resolve latest-per-key */
+  def resolving(t: LakeTable): Set[Int] = planned(t.read()).filter(_.resolveLatest).map(_.bucket).toSet
+
   test("MOR resolve elision: single-commit buckets skip latest-per-key; mixed tables split") {
     val t = new LakeTable(spark, tmpDir("elide"), defaultBuckets = 4, ApplyMode.MergeOnRead)
     val wal = ChangeLogGen.changeLog(spark, cfg).persist()
     try {
       (0 until 6).foreach(i => t.merge(wal.where(pmod(col("lsn"), lit(6)) === i), "el", i.toLong))
       val before = stateOf(t)
-      // delta-stacked: the read must resolve (the latest-per-key
-      // max-by-struct aggregate + its exchange in the plan)
-      assert(t.read().queryExecution.executedPlan.toString.contains("max(struct(lsn"),
-        "stacked buckets must pay latest-per-key")
-      // fold TWO buckets: mixed table -> plain ∪ resolved split, same rows
+      // delta-stacked: the read must resolve (the scan plans latest-per-key
+      // resolve partitions)
+      val stacked = resolving(t)
+      assert(stacked.nonEmpty, "stacked buckets must pay latest-per-key")
+      // fold TWO buckets: mixed table -> only the unfolded buckets resolve
       val byBucket = t.currentSnapshot().get.files.groupBy(_.bucket)
       val two = byBucket.collect { case (b, fl) if fl.size > 1 => b }.take(2).toSet
       t.compactBuckets(two)
+      assert(resolving(t) == stacked -- two, "only the unfolded buckets may resolve")
       assert(stateOf(t) == before, "partial fold: split read must not change state")
-      // full compact: every bucket is one commit's files -> the whole
-      // latest-per-key (shuffle + aggregate) drops out of the read plan
+      // full compact: every bucket is one commit's files -> no partition
+      // resolves and the read plan has no shuffle
       t.compact()
       val plan = t.read().queryExecution.executedPlan.toString
-      assert(!plan.contains("max(struct(lsn") && !plan.contains("Exchange"),
-        s"post-compact read must elide the resolve aggregate and its shuffle:\n$plan")
+      assert(resolving(t).isEmpty && !plan.contains("Exchange"),
+        s"post-compact read must elide the resolve and any shuffle:\n$plan")
       assert(stateOf(t) == before, "elided read must serve the identical state")
     } finally wal.unpersist()
   }
@@ -325,11 +337,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(t.bucketsFor(col("no_such_col") === "x").isEmpty)
 
     // the pruned victim scan opens ONLY that bucket's files
-    val victims = t.readLive(t.bucketsFor(keyedCond))
-    assert(victims.inputFiles.nonEmpty &&
-      victims.inputFiles.forall(_.contains(s"/b=$expect/")),
-      s"victim scan leaked outside bucket $expect: ${victims.inputFiles.toSeq}")
-    assert(victims.inputFiles.length < t.read().inputFiles.length)
+    def files(df: DataFrame) = planned(df).flatMap(_.files)
+    val victims = files(t.readLive(t.bucketsFor(keyedCond)))
+    assert(victims.nonEmpty && victims.forall(_.contains(s"/b=$expect/")),
+      s"victim scan leaked outside bucket $expect: $victims")
+    assert(victims.length < files(t.read()).length)
 
     // end-to-end: the keyed delete removes exactly the key, nothing else
     val before = t.read().count()
