@@ -130,536 +130,3 @@ object TailMain {
     spark.stop()
   }
 }
-
-/** CDF scale probe — the round-5 evidence run: a LONG-history MOR table
-  * (many commits), then a typed change tail (`changeTypes=true`) of ONLY
-  * the last commit's lsn range, timed on two otherwise-identical tables:
-  * one with commit-time CDF sidecars, one without (the bucket-history
-  * fallback). The fallback's per-trigger work grows with the table's
-  * whole history; the sidecar path reads one commit's change file — the
-  * gap is the point, and it widens linearly with table age.
-  * Args: workDir [commits] [eventsPerCommit]
-  */
-object CdfProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CdfProbe <workDir> [commits] [eventsPerCommit] [mode]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 50
-    val perC = if (args.length > 2) args(2).toLong else 10000L
-    val applyMode = Cli.mode(if (args.length > 3) args(3) else "mor")
-    val spark = Cli.session("graft-cdf-probe")
-    import org.apache.spark.sql.functions._
-    val events = commits * perC
-    val cfg = GenConfig(seed = 99, events = events, repos = 50, filesPerRepo = 40)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    def build(dir: String, cdf: Boolean, full: Boolean = false): LakeTable = {
-      val t0 = new LakeTable(spark, dir, 16, applyMode, defaultCdf = cdf, defaultCdfFull = full)
-      val done = t0.currentSnapshot().exists(s =>
-        s.hwm == events && (s.cdfSinceLsn >= 0) == cdf && (s.cdfFullSinceLsn >= 0) == full)
-      if (done) t0
-      else {
-        fs.deleteRecursive(dir)
-        val t = new LakeTable(spark, dir, 16, applyMode, defaultCdf = cdf, defaultCdfFull = full)
-        val b0 = System.nanoTime()
-        (0 until commits).foreach { i =>
-          t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "probe", i.toLong)
-        }
-        // the feed's WRITE-side price (sidecar derivation + write per
-        // commit) — the opt-in cost the read-side speedup buys; cdfFull
-        // adds the before-image payload read on top
-        println(f"[cdfprobe] build mode=${LakeTable.modeName(applyMode)} cdf=$cdf full=$full " +
-          f"ingestSec=${(System.nanoTime() - b0) / 1e9}%.1f")
-        t
-      }
-    }
-    val withCdf = build(s"$work/cdf_on", cdf = true)
-    val without = build(s"$work/cdf_off", cdf = false)
-    build(s"$work/cdf_full", cdf = true, full = true) // full-feed write price line
-    val histFiles = without.currentSnapshot().get.files.size
-    val lo = events - perC // tail ONLY the last commit's range
-    def drainSec(root: String, tag: String): Double = {
-      val times = (0 until 3).map { i =>
-        val t0 = System.nanoTime()
-        val q = spark.readStream.format("graft")
-          .option("changeTypes", "true").option("startLsn", lo.toString)
-          .load(root)
-          .writeStream.format("noop")
-          .option("checkpointLocation", s"$work/cp_${tag}_$i")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(1) // median of 3 (fresh checkpoint each — same work)
-    }
-    drainSec(withCdf.root, "warm") // JVM/codegen warm-up, untimed
-    val cdfSec = drainSec(withCdf.root, "on")
-    val fbSec = drainSec(without.root, "off")
-    val f = java.text.NumberFormat.getInstance(java.util.Locale.ROOT)
-    println(f"[cdfprobe] commits=$commits eventsPerCommit=$perC histFiles=$histFiles " +
-      f"tailRange=${perC} cdfSec=$cdfSec%.2f fallbackSec=$fbSec%.2f speedup=${fbSec / cdfSec}%.1fx")
-    // the BATCH incremental read on the same cursor: sidecar fast path vs
-    // the data-file scan (feed-off table) — the batch twin of the
-    // streaming numbers above
-    def batchSec(t: LakeTable): Double = {
-      val times = (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        t.readChangedSince(lo + 1).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(1)
-    }
-    batchSec(withCdf) // warm-up
-    val bCdf = batchSec(withCdf)
-    val bFiles = batchSec(without)
-    println(f"[cdfprobe] batchChangedSince cdfSec=$bCdf%.2f filesSec=$bFiles%.2f " +
-      f"speedup=${bFiles / bCdf}%.1fx")
-    spark.stop()
-  }
-}
-
-/** Incremental-MV maintenance cost probe: per-commit fold time must stay
-  * FLAT as table history grows (O(changes in the batch) + the pruned MV
-  * bucket subset), while a full recompute over the table grows with the
-  * accumulated history (MoR latest-per-key reads every delta below the
-  * head). The MV (per-repo count + byte total) folds from the full change
-  * feed after EVERY commit; recompute is timed once at the full history
-  * (the growth curve comes from running the probe at two commit counts).
-  * Args: <workDir> [commits] [eventsPerCommit] [mode].
-  */
-object MvProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: MvProbe <workDir> [commits] [eventsPerCommit] [mode]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 50
-    require(commits >= 4, s"MvProbe: need >= 4 commits for the early/late fold split, got $commits")
-    val perC = if (args.length > 2) args(2).toLong else 10000L
-    val applyMode = Cli.mode(if (args.length > 3) args(3) else "mor")
-    val spark = Cli.session("graft-mv-probe")
-    import org.apache.spark.sql.functions._
-    val events = commits * perC
-    val cfg = GenConfig(seed = 99, events = events, repos = 50, filesPerRepo = 40)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work)
-    val t = new LakeTable(spark, s"$work/up", 16, applyMode, defaultCdfFull = true)
-    val agg = graft.stream.IncrementalAgg(spark, s"$work/mv", col("repo"),
-      length(col("content")))
-    def recomputeSec(): Double = {
-      val t0 = System.nanoTime()
-      t.read().groupBy("repo")
-        .agg(count(lit(1)).as("cnt"), sum(length(col("content"))).as("total"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val folds = (0 until commits).map { i =>
-      t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "mvprobe", i.toLong)
-      val t0 = System.nanoTime()
-      agg.applyOnce(t, "mvprobe-mv")
-      (System.nanoTime() - t0) / 1e9
-    }
-    val rFull = recomputeSec()
-    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-    // drop the first few folds (JVM/codegen warm-up) before the flatness split
-    val steady = folds.drop(math.min(5, commits / 4))
-    val (firstHalf, secondHalf) = steady.splitAt(steady.size / 2)
-    println(f"[mvprobe] mode=${LakeTable.modeName(applyMode)} commits=$commits " +
-      f"eventsPerCommit=$perC histFiles=${t.currentSnapshot().get.files.size} " +
-      f"foldEarlyMedian=${median(firstHalf)}%.2f foldLateMedian=${median(secondHalf)}%.2f " +
-      f"recomputeFullSec=$rFull%.2f recomputeVsFold=${rFull / median(secondHalf)}%.1fx")
-    spark.stop()
-  }
-}
-
-/** Backfill cost/benefit probe (round-7): a feed-OFF table's typed tail
-  * pays the bucket-history walk EVERY trigger; `backfillChangeFeed()`
-  * converts that into sidecar coverage once. The probe reports the
-  * recurring walk price, the one-time backfill price, and the recurring
-  * sidecar price on the SAME last-commit cursor — plus the payback point
-  * (triggers until the one-time cost is amortized).
-  * Args: <workDir> [commits] [eventsPerCommit] [mode].
-  */
-object BackfillProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: BackfillProbe <workDir> [commits] [eventsPerCommit] [mode]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 50
-    val perC = if (args.length > 2) args(2).toLong else 10000L
-    val applyMode = Cli.mode(if (args.length > 3) args(3) else "mor")
-    val spark = Cli.session("graft-backfill-probe")
-    import org.apache.spark.sql.functions._
-    val events = commits * perC
-    val cfg = GenConfig(seed = 99, events = events, repos = 50, filesPerRepo = 40)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work) // backfill mutates the table: fresh fixture per run
-    val t = new LakeTable(spark, s"$work/bf", 16, applyMode)
-    (0 until commits).foreach { i =>
-      t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "bfprobe", i.toLong)
-    }
-    val lo = events - perC // tail ONLY the last commit's range
-    def drainSec(tag: String): Double = {
-      val times = (0 until 3).map { i =>
-        val t0 = System.nanoTime()
-        val q = spark.readStream.format("graft")
-          .option("changeTypes", "true").option("startLsn", lo.toString)
-          .load(t.root)
-          .writeStream.format("noop")
-          .option("checkpointLocation", s"$work/cp_${tag}_$i")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
-      times.sorted.apply(1) // median of 3 fresh-checkpoint runs
-    }
-    drainSec("warm") // JVM/codegen warm-up, untimed
-    val walkSec = drainSec("walk") // recurring, grows with history
-    val b0 = System.nanoTime()
-    val sidecars = t.backfillChangeFeed()
-    val backfillSec = (System.nanoTime() - b0) / 1e9 // one-time
-    val cdfSec = drainSec("cdf") // recurring, O(batch)
-    val payback = backfillSec / math.max(walkSec - cdfSec, 1e-9)
-    println(f"[backfill] mode=${LakeTable.modeName(applyMode)} commits=$commits " +
-      f"eventsPerCommit=$perC histFiles=${t.currentSnapshot().get.files.size} " +
-      f"sidecars=$sidecars walkSecPerTrigger=$walkSec%.2f backfillOnceSec=$backfillSec%.2f " +
-      f"cdfSecPerTrigger=$cdfSec%.2f recurringSpeedup=${walkSec / cdfSec}%.1fx " +
-      f"paybackTriggers=$payback%.1f")
-    spark.stop()
-  }
-}
-
-/** Storage-partitioned-join probe (round-7): the SAME full-key join of two
-  * co-bucketed tables, timed shuffled (plain ON clause, default confs) vs
-  * SPJ (v2 bucketing confs + the `_bucket = _bucket` no-op conjunct — zero
-  * Exchanges, each task zips one bucket from both sides). Both variants
-  * select payload columns so the shuffled run pays the real cost of moving
-  * rows; results are counted and must match. The SPJ plan is audited
-  * (require: no Exchange) so the probe can never time a silently-shuffled
-  * "SPJ" run. Args: <workDir> [events] [buckets].
-  */
-object SpjProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: SpjProbe <workDir> [events] [buckets]")
-    val work = args(0)
-    val events = if (args.length > 1) args(1).toLong else 4000000L
-    val buckets = if (args.length > 2) args(2).toInt else 32
-    val spark = Cli.session("graft-spj-probe")
-    import org.apache.spark.sql.functions._
-    // wide key space, minimal skew: the probe measures join movement, not
-    // the salted writer (hot-key handling has its own probes)
-    val cfg = GenConfig(seed = 7, events = events,
-      repos = math.max(50, (events / 2000).toInt), filesPerRepo = 1000, hotShare = 0.01)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work)
-    new LakeTable(spark, s"$work/spj_a", buckets, ApplyMode.CopyOnWrite)
-      .merge(wal, "a", 0L)
-    new LakeTable(spark, s"$work/spj_b", buckets, ApplyMode.CopyOnWrite)
-      .merge(wal.where(col("lsn") <= events * 3 / 4), "b", 0L)
-    wal.unpersist()
-    spark.conf.set("spark.sql.catalog.spjp", classOf[graft.sources.GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.spjp.root", work)
-    val spjConfs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    def joinSql(conjunct: Boolean) =
-      s"""SELECT a.repo, a.path, a.lang, a.content, b.contentSha AS sha_b
-         |FROM spjp.spj_a a JOIN spjp.spj_b b
-         |ON a.repo = b.repo AND a.path = b.path
-         |${if (conjunct) "AND a._bucket = b._bucket" else ""}""".stripMargin
-    def timed(conjunct: Boolean, verify: Boolean): (Double, Long) = {
-      def run(): (Double, Long) = {
-        val df = spark.sql(joinSql(conjunct))
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        if (conjunct) {
-          val plan = df.queryExecution.executedPlan.toString
-          require(!plan.contains("Exchange"), s"SpjProbe: SPJ run shuffled:\n$plan")
-        }
-        (sec, if (verify) df.count() else -1L)
-      }
-      if (!conjunct) run()
-      else {
-        spjConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try run() finally spjConfs.foreach { case (k, _) => spark.conf.unset(k) }
-      }
-    }
-    // shuffled twice and SPJ twice, interleaved; keep the min of each
-    // (one lost timeslice should not decide the comparison)
-    val (sh1, nSh) = timed(conjunct = false, verify = true)
-    val (spj1, nSpj) = timed(conjunct = true, verify = true)
-    val (sh2, _) = timed(conjunct = false, verify = false)
-    val (spj2, _) = timed(conjunct = true, verify = false)
-    require(nSh == nSpj, s"SpjProbe: result mismatch shuffled=$nSh spj=$nSpj")
-    val sh = math.min(sh1, sh2); val spj = math.min(spj1, spj2)
-    println(f"[spjprobe] events=$events buckets=$buckets rowsJoined=$nSh " +
-      f"shuffledSec=$sh%.2f spjSec=$spj%.2f speedup=${sh / spj}%.2fx")
-    spark.stop()
-  }
-}
-
-/** Key-evidence point-lookup probe: a point lookup on an un-compacted
-  * MergeOnRead chain with bloom/dictionary file skipping on vs off — the
-  * on-path must plan only the files actually holding the key's versions.
-  * Args: workDir [commits] [eventsPerCommit] [buckets].
-  */
-object KeyLookupProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: KeyLookupProbe <workDir> [commits] [eventsPerCommit] [buckets]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 50
-    val perC = if (args.length > 2) args(2).toLong else 10000L
-    val buckets = if (args.length > 3) args(3).toInt else 16
-    val spark = Cli.session("graft-keylookup-probe")
-    import org.apache.spark.sql.functions._
-    // wide keyspace: a typical key gets a handful of updates spread over
-    // the chain — the cold-key lookup shape evidence skipping serves
-    val cfg = GenConfig(seed = 21, events = commits * perC,
-      repos = 500, filesPerRepo = 200, hotShare = 0.01)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work)
-    val t = new LakeTable(spark, s"$work/t", buckets, ApplyMode.MergeOnRead)
-    (0 until commits).foreach { i =>
-      t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "klp", i.toLong)
-    }
-    wal.unpersist()
-    val snap = t.currentSnapshot().get
-    // a COLD live key — held by few files; a hot key (updated every commit)
-    // has nothing to skip, and most of a real corpus is cold keys
-    val raw = spark.read.parquet(snap.files.map(f => t.resolvePath(f.path)): _*)
-      .withColumn("__f", input_file_name())
-    val Array(repo, path) = raw
-      .groupBy("repo", "path").agg(countDistinct(col("__f")).as("nf"))
-      .orderBy(col("nf"), col("repo"), col("path"))
-      .limit(1).collect().head.toSeq.take(2).map(_.toString).toArray
-    val keyBucket = LakeTable.bucketOf(repo, path, snap.nBuckets)
-    val chain = snap.files.count(_.bucket == keyBucket)
-    // ground truth: data files that actually hold a version of the key
-    val truth = raw
-      .where(col("repo") === repo && col("path") === path)
-      .select(input_file_name()).distinct().count()
-    def lookup(on: Boolean): (Double, Int, Long) = {
-      spark.conf.set("spark.graft.bloom.scan.enabled", on.toString)
-      try {
-        val df = spark.read.format("graft").load(t.root)
-          .where(col("repo") === repo && col("path") === path)
-        val planned = df.queryExecution.executedPlan
-          .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
-          .head.scan.asInstanceOf[graft.sources.GraftScan]
-          .planInputPartitions()
-          .map(_.asInstanceOf[graft.sources.GraftInputPartition].files.size).sum
-        val t0 = System.nanoTime()
-        val n = df.count()
-        ((System.nanoTime() - t0) / 1e9, planned, n)
-      } finally spark.conf.unset("spark.graft.bloom.scan.enabled")
-    }
-    // interleaved min-of-2 (footer evidence is cached after the first pass —
-    // report both the cold and warm evidence-on run)
-    val (onCold, plannedOn, nOn) = lookup(on = true)
-    val (offA, plannedOff, nOff) = lookup(on = false)
-    val (onWarm, _, _) = lookup(on = true)
-    val (offB, _, _) = lookup(on = false)
-    require(nOn == nOff, s"KeyLookupProbe: result mismatch on=$nOn off=$nOff")
-    val off = math.min(offA, offB)
-    println(f"[keylookup] commits=$commits chainFiles=$chain filesHoldingKey=$truth " +
-      f"plannedOn=$plannedOn plannedOff=$plannedOff " +
-      f"onColdSec=$onCold%.3f onWarmSec=$onWarm%.3f offSec=$off%.3f " +
-      f"speedupWarm=${off / onWarm}%.1fx")
-    spark.stop()
-  }
-}
-
-/** Targeted-compaction probe: fold 2 hot buckets vs the full-table rewrite
-  * on identical tables — maintenance cost must track the selected buckets,
-  * not the table. Args: workDir [commits] [eventsPerCommit] [buckets].
-  */
-object CompactProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CompactProbe <workDir> [commits] [eventsPerCommit] [buckets]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 30
-    val perC = if (args.length > 2) args(2).toLong else 20000L
-    val buckets = if (args.length > 3) args(3).toInt else 32
-    val spark = Cli.session("graft-compact-probe")
-    import org.apache.spark.sql.functions._
-    val cfg = GenConfig(seed = 13, events = commits * perC, repos = 100, filesPerRepo = 100)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work)
-    // two identical un-compacted MOR tables (same WAL, same batching)
-    val roots = Seq(s"$work/targeted", s"$work/full")
-    roots.foreach { r =>
-      val t = new LakeTable(spark, r, buckets, ApplyMode.MergeOnRead)
-      (0 until commits).foreach { i =>
-        t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "cp", i.toLong)
-      }
-    }
-    wal.unpersist()
-    val tT = new LakeTable(spark, roots.head)
-    val tF = new LakeTable(spark, roots.last)
-    val filesBefore = tT.currentSnapshot().get.files.size
-    val hot = tT.currentSnapshot().get.files.groupBy(_.bucket)
-      .toSeq.sortBy(-_._2.size).take(2).map(_._1).toSet
-    val t0 = System.nanoTime()
-    val folded = tT.compactBuckets(hot)
-    val targetedSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    tF.compact()
-    val fullSec = (System.nanoTime() - t1) / 1e9
-    val rowsT = tT.read().count(); val rowsF = tF.read().count()
-    require(rowsT == rowsF, s"CompactProbe: row divergence targeted=$rowsT full=$rowsF")
-    println(f"[compactprobe] commits=$commits buckets=$buckets filesBefore=$filesBefore " +
-      f"hotBuckets=$folded targetedSec=$targetedSec%.2f fullSec=$fullSec%.2f " +
-      f"fullVsTargeted=${fullSec / targetedSec}%.1fx")
-    spark.stop()
-  }
-}
-
-/** Read-side payoff of the persisted clustering policy: the SAME CoW table
-  * queried `WHERE lang = <value>` before and after `setClustering("lang")`
-  * + compact — the clustered layout's value-homogeneous files let the
-  * dictionary/bloom evidence gate drop every non-matching file, so the
-  * selective scan reads O(matching files), not O(table). Args: workDir
-  * [commits] [eventsPerCommit] [buckets] [maxRecordsPerFile].
-  */
-object ClusterProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ClusterProbe <workDir> [commits] [eventsPerCommit] [buckets] [maxRecordsPerFile]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 5
-    val perC = if (args.length > 2) args(2).toLong else 400000L
-    val buckets = if (args.length > 3) args(3).toInt else 32
-    val maxRec = if (args.length > 4) args(4).toLong else 20000L
-    val spark = Cli.session("graft-cluster-probe")
-    import org.apache.spark.sql.functions._
-    val cfg = GenConfig(seed = 23, events = commits * perC,
-      repos = 500, filesPerRepo = 200, hotShare = 0.01)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-    fs.deleteRecursive(work)
-    val t = new LakeTable(spark, s"$work/t", buckets, ApplyMode.CopyOnWrite)
-    (0 until commits).foreach { i =>
-      t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "clp", i.toLong)
-    }
-    wal.unpersist()
-    // least-common lang = the selective lookup clustering serves
-    val target = t.read().groupBy("lang").count().orderBy(col("count"), col("lang"))
-      .limit(1).collect().head.getString(0)
-    def scan(): (Double, Int, Long) = {
-      val df = spark.read.format("graft").load(t.root).where(col("lang") === target)
-      val planned = df.queryExecution.executedPlan
-        .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
-        .head.scan.asInstanceOf[graft.sources.GraftScan]
-        .planInputPartitions()
-        .map(_.asInstanceOf[graft.sources.GraftInputPartition].files.size).sum
-      val t0 = System.nanoTime()
-      val n = df.agg(count(lit(1)), sum(length(col("content")))).collect().head.getLong(0)
-      ((System.nanoTime() - t0) / 1e9, planned, n)
-    }
-    val (beforeA, plannedBefore, nBefore) = scan()
-    val (beforeB, _, _) = scan()
-    val filesBefore = t.currentSnapshot().get.files.size
-    t.setClustering(Seq("lang"))
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", maxRec.toString)
-    val t0 = System.nanoTime()
-    try t.compact() finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    val compactSec = (System.nanoTime() - t0) / 1e9
-    val filesAfter = t.currentSnapshot().get.files.size
-    val (afterA, plannedAfter, nAfter) = scan()
-    val (afterB, _, _) = scan()
-    require(nBefore == nAfter, s"ClusterProbe: result drift before=$nBefore after=$nAfter")
-    val before = math.min(beforeA, beforeB)
-    val after = math.min(afterA, afterB)
-    println(f"[clusterprobe] lang=$target rows=$nBefore files=$filesBefore->$filesAfter " +
-      f"planned=$plannedBefore->$plannedAfter " +
-      f"beforeSec=$before%.3f afterSec=$after%.3f speedup=${before / after}%.1fx " +
-      f"compactSec=$compactSec%.2f")
-    spark.stop()
-  }
-}
-
-/** Write-side price of CHECK-constraint enforcement: the SAME N-commit MoR
-  * apply with zero constraints vs three active ones (the guard rides the
-  * write projection — the expected cost is a few scalar expressions per
-  * row inside codegen, not a pass). A/B alternated per round, min over
-  * rounds per variant (the box drifts; min-of-interleaved is the round's
-  * established protocol). Args: workDir [commits] [eventsPerCommit]
-  * [buckets] [rounds].
-  */
-object ConstraintProbe {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ConstraintProbe <workDir> [commits] [eventsPerCommit] [buckets] [rounds]")
-    val work = args(0)
-    val commits = if (args.length > 1) args(1).toInt else 10
-    val perC = if (args.length > 2) args(2).toLong else 200000L
-    val buckets = if (args.length > 3) args(3).toInt else 32
-    val rounds = if (args.length > 4) args(4).toInt else 2
-    val spark = Cli.session("graft-constraint-probe")
-    import org.apache.spark.sql.functions._
-    val cfg = GenConfig(seed = 17, events = commits * perC, repos = 100, filesPerRepo = 100)
-    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
-    wal.count()
-    val fs = new graft.table.Fs(spark.sessionState.newHadoopConf())
-
-    def mk(root: String, constrained: Boolean): LakeTable = {
-      fs.deleteRecursive(root)
-      val t = new LakeTable(spark, root, buckets, ApplyMode.MergeOnRead)
-      t.merge(wal.where(col("lsn") === 1), "seed", -1L)
-      if (constrained) {
-        val all = Seq(
-          // octet_length is O(1) (byte count); length() would walk the
-          // payload's bytes per row (UTF-8 char count) — the probe prices
-          // the GUARD, the expression's own cost belongs to its author
-          "content_present" -> "octet_length(content) > 0",
-          "sha_shape" -> "octet_length(contentSha) = 64",
-          "lang_present" -> "lang IS NOT NULL")
-        all.take(sys.env.getOrElse("CONSTRAINT_PROBE_N", "3").toInt)
-          .foreach { case (n, e) => t.addConstraint(n, e) }
-      }
-      t
-    }
-
-    // identical commit sequences into both tables, INTERLEAVED per commit
-    // (adjacent timings share the box's momentary state) with the order
-    // alternating per commit (the second of a pair tends to run warmer);
-    // min over `rounds` full passes per variant
-    var offBest = Double.MaxValue
-    var onBest = Double.MaxValue
-    var rows = -1L
-    (0 until rounds).foreach { r =>
-      val off = mk(s"$work/off", constrained = false)
-      val on = mk(s"$work/on", constrained = true)
-      def commitInto(t: LakeTable, i: Int): Double = {
-        val t0 = System.nanoTime()
-        t.merge(wal.where(col("lsn").between(i * perC + 1, (i + 1) * perC)), "cp", i.toLong)
-        (System.nanoTime() - t0) / 1e9
-      }
-      var offSec = 0.0
-      var onSec = 0.0
-      (0 until commits).foreach { i =>
-        if (i % 2 == 0) { offSec += commitInto(off, i); onSec += commitInto(on, i) }
-        else { onSec += commitInto(on, i); offSec += commitInto(off, i) }
-      }
-      println(f"[constraintprobe] round=$r offSec=$offSec%.2f onSec=$onSec%.2f")
-      offBest = math.min(offBest, offSec); onBest = math.min(onBest, onSec)
-      val rowsOff = off.read().count(); val rowsOn = on.read().count()
-      require(rowsOff == rowsOn, s"ConstraintProbe: row divergence off=$rowsOff on=$rowsOn")
-      rows = rowsOff
-    }
-    println(f"[constraintprobe] commits=$commits eventsPerCommit=$perC rows=$rows " +
-      f"offSec=$offBest%.2f onSec=$onBest%.2f overheadPct=${(onBest / offBest - 1) * 100}%.1f")
-    spark.stop()
-  }
-}

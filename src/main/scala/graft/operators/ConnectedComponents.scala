@@ -43,8 +43,7 @@ object ConnectedComponents {
     // labelling, microseconds instead of 2-3 shuffle rounds. Larger
     // graphs take the distributed pointer-jumping loop below, unchanged.
     // `localMaxEdges <= 0` switches the fast path off without probing.
-    val localMax = spark.conf.getOption("spark.graft.cc.localMaxEdges")
-      .map(_.toInt).getOrElse(100000)
+    val localMax = graft.GraftConf.int(spark, "spark.graft.cc.localMaxEdges").getOrElse(100000)
     val bounded =
       if (localMax <= 0) Array.empty[org.apache.spark.sql.Row]
       else edges.select(col(a).cast("long").as("u"), col(b).cast("long").as("v"))

@@ -58,23 +58,15 @@ object Quantiles {
     sorted((rank - 1).toInt)
   }
 
-  /** exact quantile at fraction p, order statistic k = ceil(p * n)
-    * (1-indexed, type-1 / discontinuous — pins one unambiguous semantic
-    * both engines can express)
-    */
-  def exactQuantile(df: DataFrame, valueCol: Column, p: Double): Double = {
-    val n = df.select(valueCol).where(valueCol.isNotNull).count()
-    require(n > 0, "empty input")
-    kthSmallest(df, valueCol, math.max(1L, math.ceil(p * n).toLong))
-  }
-
   /** SEVERAL exact quantiles in ONE sweep (round-8, guide §1.2): the count
     * / min-max pass and the first histogram pass are shared by every
     * requested fraction — 2 column-pruned scans serve all of them — and
     * the per-fraction narrowing collects the union of the (tiny) target
     * buckets in a single extra pass when it fits `collectCap`, falling
-    * back to the per-k refinement loop otherwise. Same k = ceil(p * n)
-    * type-1 semantics as `exactQuantile`, value-for-value.
+    * back to the per-k refinement loop otherwise. The quantile at fraction
+    * p is the order statistic k = ceil(p * n) (1-indexed, type-1 /
+    * discontinuous — pins one unambiguous semantic both engines can
+    * express), value-for-value equal to `kthSmallest(k)`.
     */
   def exactQuantiles(df: DataFrame, valueCol: Column, ps: Seq[Double],
                      buckets: Int = 2048, collectCap: Int = 65536): Seq[(Double, Double)] = {

@@ -248,7 +248,7 @@ object RelationalQueries {
     import graft.operators.Quantiles
     val ev = T(s, dir, "events")
     // fused: one count/min-max pass + one histogram pass serve all three
-    // fractions (round-8; was 3 independent exactQuantile sweeps)
+    // fractions (round-8; was 3 independent per-fraction sweeps)
     val rows = Quantiles.exactQuantiles(ev, col("value"), Seq(0.5, 0.9, 0.99))
     import s.implicits._
     rows.toDF("p", "value_at_p").orderBy("p")

@@ -23,6 +23,7 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.GraftConf
 import graft.table.{FileEntry, Fs, Snapshot, SnapshotLog}
 
 /** DataSourceV2 reader for graft lake tables (SURVEY.md §2.1 S5 — the
@@ -498,8 +499,8 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     if (re.isEmpty && pe.isEmpty && ve.isEmpty) return cands
     if ((Seq(re, pe).flatten ++ ve.values).exists(_.size > 64)) return cands
     val sess = org.apache.spark.sql.SparkSession.active
-    if (!sess.conf.getOption("spark.graft.bloom.scan.enabled").forall(_.toBoolean)) return cands
-    val cap = sess.conf.getOption("spark.graft.bloom.scan.maxFiles").fold(1024)(_.toInt)
+    if (!GraftConf.bool(sess, "spark.graft.bloom.scan.enabled").getOrElse(true)) return cands
+    val cap = GraftConf.int(sess, "spark.graft.bloom.scan.maxFiles").getOrElse(1024)
     if (cands.size > cap) return cands
     // VALUE-column evidence (contentSha, lang, commit, payload columns) is
     // only sound where the layout is RESOLVED: under a multi-file MOR
@@ -672,12 +673,10 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
         // and snapshot file order is preserved within a pack.
         // the read option wins over the session conf; a malformed value
         // fails the same way on both paths, naming its key
-        def rowsOf(key: String)(v: String): Long = v.trim.toLongOption.getOrElse(
-          throw new IllegalArgumentException(s"graft: $key must be a row count, got '$v'"))
-        val cap = options.get("packrows").map(rowsOf("packRows")).orElse(
-          SparkSession.getActiveSession.flatMap(_.conf.getOption("spark.graft.scan.packRows"))
-            .map(rowsOf("spark.graft.scan.packRows"))
-        ).getOrElse(512L * 1024)
+        val cap = options.get("packrows")
+          .map(GraftConf.parse("packRows", _, "a row count")(_.toLongOption))
+          .orElse(SparkSession.getActiveSession.flatMap(GraftConf.long(_, "spark.graft.scan.packRows")))
+          .getOrElse(512L * 1024)
         val packs = scala.collection.mutable.ArrayBuffer(scala.collection.mutable.ArrayBuffer[FileEntry]())
         var rows = 0L
         files.foreach { f =>

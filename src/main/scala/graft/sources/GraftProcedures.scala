@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.GraftConf
 import graft.table.LakeTable
 
 /** The SQL maintenance surface (round-4 VERDICT "Missing" #4): table
@@ -300,10 +301,8 @@ object GraftProcedures {
             if (s.cdfFullSinceLsn >= 0) "full" else if (s.cdfSinceLsn >= 0) "post" else "off"
           // the session's ACTIVE retention policies (applied at every
           // commit when set): null = manual-expiry-only
-          val snapRetain = spark.conf.getOption("spark.graft.snapshots.retain")
-            .map(_.toInt).map(Int.box).orNull
-          val cdfRetain = spark.conf.getOption("spark.graft.cdf.retentionLsns")
-            .map(_.toLong).map(Long.box).orNull
+          val snapRetain = LakeTable.snapshotsRetain(spark).map(Int.box).orNull
+          val cdfRetain = GraftConf.long(spark, "spark.graft.cdf.retentionLsns").map(Long.box).orNull
           statusScan(
             "version" -> IntegerType, "mode" -> StringType, "buckets" -> IntegerType,
             "hwm" -> LongType, "stored_rows" -> LongType, "files" -> IntegerType,

@@ -262,8 +262,7 @@ final class IncrementalAgg(val mv: LakeTable, groupCol: Column,
     // millions of groups) switches to a left-semi join against the flagged
     // frame — no unbounded driver collection, no giant plan literal
     // (round-8, the r7 judge's "Wrong #2").
-    val rescanIsinMax = mv.spark.conf.getOption("spark.graft.mv.rescanIsinMax")
-      .map(_.toInt).getOrElse(1000)
+    val rescanIsinMax = graft.GraftConf.int(mv.spark, "spark.graft.mv.rescanIsinMax").getOrElse(1000)
     val flaggedDf = ev0.where(col("op") === "U" && anyFlag).select("repo")
     val flagged = flaggedDf.limit(rescanIsinMax + 1)
       .collect().map(r => Option(r.getString(0))).toSeq

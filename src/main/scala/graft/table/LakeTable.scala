@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
+import graft.GraftConf
 import graft.model.LangRules
 
 /** A concurrent writer committed the snapshot version this writer was
@@ -124,7 +125,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 
   /** distinct manifests past which a commit folds them into one (SnapshotLog.publish) */
   private def manifestFoldAt: Int =
-    spark.conf.getOption("spark.graft.manifest.compactThreshold").map(_.toInt).getOrElse(16)
+    GraftConf.int(spark, "spark.graft.manifest.compactThreshold").getOrElse(16)
 
   /** Commit-time snapshot auto-retention (mirroring
     * spark.graft.cdf.retentionLsns): with `spark.graft.snapshots.retain = k`
@@ -134,15 +135,14 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * nothing to expire; when there is, the pass costs O(k) metadata reads
     * (the price of computing the retained live-file set). Time travel and
     * CDF history walks below the retained window stop working — the
-    * retention contract, same as manual expireSnapshots. Best-effort: the
-    * commit itself already won, so a retention hiccup must not fail the
-    * write (the next commit retries it).
+    * retention contract, same as manual expireSnapshots. `transact` reads
+    * `keep` before its data pass, so a malformed value fails the operation
+    * with nothing committed. Best-effort: the commit itself already won,
+    * so a retention hiccup must not fail the write (the next commit
+    * retries it).
     */
-  private def autoRetain(version: Int): Unit =
-    spark.conf.getOption("spark.graft.snapshots.retain").map(_.toInt).foreach { keep =>
-      require(keep >= 2,
-        s"spark.graft.snapshots.retain must be >= 2 (a reader resolving the previous head " +
-          s"mid-commit must still find its files), got $keep")
+  private def autoRetain(version: Int, keep: Option[Int]): Unit =
+    keep.foreach { keep =>
       if (log.contains(version - keep))
         try expireSnapshotsCore(keep, None)
         catch {
@@ -191,6 +191,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       batch: Option[(String, Long)] = None, requireVersion: Option[Int] = None)(
       pass: Pass => Either[R, Attempt[R]]): R = {
     val maxAttempts = 20
+    val retain = LakeTable.snapshotsRetain(spark)
     var base = head
     var tries = 0
     while (tries < maxAttempts) {
@@ -219,7 +220,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
             // entry idempotently — no lineage gaps
             a.ledger.foreach(e => ledger.record(e.copy(appliedLsnHwm = next.hwm)))
             if (log.publish(next, cur, p.token, manifestFoldAt)) {
-              autoRetain(v)
+              autoRetain(v, retain)
               return a.result
             }
             val reloaded = log.afterConflict(v)
@@ -246,9 +247,6 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * included), read against the LATEST schema — older files null-backfill
     * missing columns (additive schema evolution, SURVEY.md §1.3).
     */
-  private[graft] def readRaw(buckets: Option[Set[Int]] = None): DataFrame =
-    readRawAt(currentSnapshot(), buckets)
-
   private def readRawAt(snap: Option[Snapshot], buckets: Option[Set[Int]]): DataFrame =
     bucketView(snap, buckets) match {
       case None => emptyTable(StructType.fromDDL(graft.model.Schemas.repoRow.toDDL))
@@ -279,7 +277,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * the scale guard, not a tuning constant.
     */
   private def dvPositions(dvFiles: Seq[String], dvRows: Long): DataFrame =
-    if (dvRows <= spark.conf.getOption("spark.graft.dv.driverMaxRows").map(_.toLong).getOrElse(1000000L)) {
+    if (dvRows <= GraftConf.long(spark, "spark.graft.dv.driverMaxRows").getOrElse(1000000L)) {
       import scala.collection.parallel.CollectionConverters._
       val hconf = spark.sessionState.newHadoopConf()
       val pairs = dvFiles.par
@@ -850,8 +848,8 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     */
   private def tombstonesOf(perFile: Seq[LakeTable.FileStat]): Long =
     if (perFile.isEmpty) 0L
-    else if (perFile.map(_.rows).sum <= spark.conf.getOption("spark.graft.tombstones.driverMaxRows")
-        .map(_.toLong).getOrElse(4000000L)) {
+    else if (perFile.map(_.rows).sum <=
+        GraftConf.long(spark, "spark.graft.tombstones.driverMaxRows").getOrElse(4000000L)) {
       import scala.collection.parallel.CollectionConverters._
       val hconf = spark.sessionState.newHadoopConf()
       perFile.par.map(f => LakeTable.tombstonesInFile(f.file, hconf)).sum
@@ -1002,12 +1000,17 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
   }
 
   /** Data-file writer with per-column parquet BLOOM FILTERS on the key
-    * columns (repo, path). Small delta files stay fully dictionary-encoded
-    * and parquet then skips the bloom (the dictionary page IS an exact
-    * membership witness — the scan probes it instead); larger files get an
-    * adaptively sized bloom. Together they give the scan per-file key
-    * membership evidence, so a point lookup on an un-compacted MergeOnRead
-    * chain reads only the files that actually hold a version of the key —
+    * columns (repo, path) and contentSha. Parquet writes the bloom only for
+    * a chunk that is not fully dictionary-encoded, and that depends on how
+    * often values repeat, not on file size: columns of mostly-distinct
+    * values fall back to PLAIN on their first page and carry a bloom even
+    * in a tiny file (a 34-row bucket file had PLAIN `path` and
+    * `contentSha` chunks with a bloom each), while repeating columns (repo,
+    * lang) stay dictionary-encoded with no bloom — the dictionary page IS
+    * an exact membership witness, and the scan probes it instead.
+    * Together they give the scan per-file key membership evidence, so a
+    * point lookup on an un-compacted MergeOnRead chain reads only the
+    * files that actually hold a version of the key —
     * O(key's commits), not O(chain) (the Delta bloom-index / parquet
     * DictionaryFilter analogue, at FILE granularity so pruned files never
     * schedule a task). `spark.graft.bloom.enabled=false` opts the write
@@ -1015,7 +1018,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     */
   private def dataWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     val w = df.write.partitionBy("b").mode("overwrite")
-    if (spark.conf.getOption("spark.graft.bloom.enabled").forall(_.toBoolean)) {
+    if (GraftConf.bool(spark, "spark.graft.bloom.enabled").getOrElse(true)) {
       val w2 = w.option("parquet.bloom.filter.enabled#repo", "true")
         .option("parquet.bloom.filter.enabled#path", "true")
         // content-address lookups ("does this blob exist") probe contentSha
@@ -1353,7 +1356,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     */
   private def applyCdfRetention(state: (Long, Seq[CdfEntry]), newHwm: Long): (Long, Seq[CdfEntry]) = {
     val (since, files) = state
-    spark.conf.getOption("spark.graft.cdf.retentionLsns").map(_.toLong) match {
+    GraftConf.long(spark, "spark.graft.cdf.retentionLsns") match {
       case Some(r) if since >= 0 && newHwm - r > since =>
         val floor = newHwm - r
         (floor, files.filterNot(_.maxLsn <= floor))
@@ -1537,11 +1540,11 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * 32×250 tasks, not 32. Defaults to filling the cluster
     * (defaultParallelism); override with spark.graft.resolve.minParallelism.
     */
-  private def subSplitFactor(buckets: Int): Int = {
-    val minPar = spark.conf.getOption("spark.graft.resolve.minParallelism")
-      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    math.max(1, math.ceil(minPar.toDouble / math.max(buckets, 1)).toInt)
-  }
+  private def subSplitFactor(buckets: Int): Int =
+    math.max(1, math.ceil(resolveMinParallelism.toDouble / math.max(buckets, 1)).toInt)
+
+  private def resolveMinParallelism: Int =
+    GraftConf.int(spark, "spark.graft.resolve.minParallelism").getOrElse(spark.sparkContext.defaultParallelism)
 
   /** pure-function-of-key salt: rows of one key always share it, so any
     * window partitioned by (b, __salt, repo, path) groups exactly as
@@ -1591,9 +1594,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       // by the `b` partition value), while the task count stays
       // proportional to the CLUSTER, not the layout (round-8; the cap is
       // parallelism-derived, never a constant)
-      val parts = math.min(buckets, math.max(1, 2 * math.max(1,
-        spark.conf.getOption("spark.graft.resolve.minParallelism")
-          .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism))))
+      val parts = math.min(buckets, math.max(1, 2 * math.max(1, resolveMinParallelism)))
       all.repartition(parts, col("b"))
         .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
     } else {
@@ -2402,6 +2403,15 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 }
 
 object LakeTable {
+  /** `spark.graft.snapshots.retain` (see autoRetain), validated */
+  private[graft] def snapshotsRetain(spark: SparkSession): Option[Int] =
+    GraftConf.int(spark, "spark.graft.snapshots.retain").map { keep =>
+      require(keep >= 2,
+        s"spark.graft.snapshots.retain must be >= 2 (a reader resolving the previous head " +
+          s"mid-commit must still find its files), got $keep")
+      keep
+    }
+
   /** small daemon pool for overlapping a commit's independent Spark jobs /
     * driver-side metadata reads (guide §2.6) — sized tiny on purpose: at
     * most two auxiliary steps run per merge, and jobs submitted from these

@@ -69,6 +69,28 @@ class DeletionVectorSpec extends SparkSpec {
     } finally wal.unpersist()
   }
 
+  test("driver-side tombstone count == distributed count (tombstones.driverMaxRows)") {
+    // below spark.graft.tombstones.driverMaxRows a commit's tombstones are
+    // decoded driver-side; at 0 every commit takes the distributed count —
+    // both must record the same ledger tombstoneRows
+    val wal = ChangeLogGen.changeLog(spark, cfg).persist()
+    try {
+      val splits = Seq((1L, 2000L), (2001L, 4000L), (4001L, 6000L))
+      def field(e: String, f: String) = ("\"" + f + "\":(\\d+)").r.findFirstMatchIn(e).get.group(1).toLong
+      def tombs(t: LakeTable) = // batchId -> tombstoneRows
+        t.ledger.entries().map(e => field(e, "batchId") -> field(e, "tombstoneRows")).toMap
+      Seq(ApplyMode.MergeOnRead, ApplyMode.CopyOnWrite).foreach { mode =>
+        val viaDriver = tombs(applyBatches(mode, tmpDir("tombDrv"), splits, wal))
+        spark.conf.set("spark.graft.tombstones.driverMaxRows", "0") // force the distributed count
+        val viaJob = try tombs(applyBatches(mode, tmpDir("tombJob"), splits, wal))
+          finally spark.conf.unset("spark.graft.tombstones.driverMaxRows")
+        assert(viaDriver.size == splits.size && viaDriver.values.exists(_ > 0),
+          s"$mode fixture must delete: $viaDriver")
+        assert(viaDriver == viaJob, s"$mode: driver $viaDriver != distributed $viaJob")
+      }
+    } finally wal.unpersist()
+  }
+
   test("write amplification: dv writes O(batch), cow rewrites buckets") {
     val wal = ChangeLogGen.changeLog(spark, cfg).persist()
     try {

@@ -101,6 +101,29 @@ class GraftSourceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.scan.packRows")
   }
 
+  test("a malformed spark.graft.* conf fails naming its key (describe_detail, point lookup, merge)") {
+    val t = buildCow()
+    val cat = "gconf"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", new java.io.File(t.root).getParent)
+    val name = new java.io.File(t.root).getName
+    def fails(key: String)(op: => Any): Unit = {
+      spark.conf.set(key, "lots")
+      try {
+        val e = intercept[Exception](op)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        assert(msgs.exists(m => m != null && m.contains(key) && m.contains("'lots'")),
+          s"$key: ${e.getMessage}")
+      } finally spark.conf.unset(key)
+    }
+    fails("spark.graft.cdf.retentionLsns")(
+      spark.sql(s"CALL $cat.system.describe_detail('$name')").collect())
+    fails("spark.graft.bloom.scan.maxFiles")(
+      spark.read.format("graft").load(t.root).where(col("repo") === "r" && col("path") === "p").collect())
+    fails("spark.graft.tombstones.driverMaxRows")(
+      t.merge(ChangeLogGen.changeLog(spark, cfg.copy(seed = 32, events = 200)), "conf", 2L))
+  }
+
   test("SQL over the DSv2 table (temp view)") {
     val t = buildCow()
     spark.read.format("graft").load(t.root).createOrReplaceTempView("dsv2_repos")

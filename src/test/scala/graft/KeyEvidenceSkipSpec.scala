@@ -121,8 +121,9 @@ class KeyEvidenceSkipSpec extends SparkSpec {
 
   test("bloom branch: non-dictionary chunks carry a probed bloom filter") {
     // force the bloom path (dictionary off) on a raw parquet file and probe
-    // the evidence loader directly — e2e fixtures at test scale stay fully
-    // dict-encoded, so this pins the large-chunk branch
+    // the evidence loader directly — whether an e2e fixture's chunk is
+    // PLAIN (bloom) or dictionary-encoded depends on its values, so this
+    // pins the bloom branch regardless
     val dir = tmpDir("kevBloom")
     (0 until 5000).map(i => (s"repo-$i", s"path-$i"))
       .toDF("repo", "path")

@@ -299,6 +299,23 @@ class MaintenanceSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.snapshots.retain")
   }
 
+  test("a bad spark.graft.snapshots.retain fails the merge with nothing committed") {
+    val t = new LakeTable(spark, tmpDir("badret"), defaultBuckets = 4, ApplyMode.CopyOnWrite)
+    val wal = ChangeLogGen.changeLog(spark, cfg)
+    t.merge(wal.where(col("lsn") <= 2000), "br", 0L)
+    val head = t.currentSnapshot().map(_.version)
+    Seq("1", "lots").foreach { v =>
+      spark.conf.set("spark.graft.snapshots.retain", v)
+      try {
+        val e = intercept[IllegalArgumentException](t.merge(wal.where(col("lsn") > 2000), "br", 1L))
+        assert(e.getMessage.contains("spark.graft.snapshots.retain"), e.getMessage)
+      } finally spark.conf.unset("spark.graft.snapshots.retain")
+      assert(t.currentSnapshot().map(_.version) == head, s"retain=$v: the failed merge must not commit")
+    }
+    // the batch was never recorded: it applies once the conf is fixed
+    assert(t.merge(wal.where(col("lsn") > 2000), "br", 1L).nonEmpty)
+  }
+
   test("time travel: readAt(v) reproduces each retained snapshot's state") {
     val t = new LakeTable(spark, tmpDir("tt"), defaultBuckets = 4, ApplyMode.CopyOnWrite)
     val wal = ChangeLogGen.changeLog(spark, cfg).persist()
