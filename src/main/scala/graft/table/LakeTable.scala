@@ -156,7 +156,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 
   /** One data pass of a transaction: the head it reads (`base`; None = no
     * table yet) and its attempt-scoped commit dir `c<v>-<token>`, which a
-    * dropped attempt deletes.
+    * dropped attempt or a pass that throws deletes.
     */
   private final class Pass(val base: Option[Snapshot], val token: String) {
     val head: Snapshot = base.getOrElse(emptySnapshot)
@@ -196,7 +196,9 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     var tries = 0
     while (tries < maxAttempts) {
       val p = new Pass(base, LakeTable.newToken)
-      pass(p) match {
+      val attempt = try pass(p)
+        catch { case scala.util.control.NonFatal(e) => fs.deleteRecursive(p.dir); throw e }
+      attempt match {
         case Left(r) => return r
         case Right(a) =>
           def inScope(b: Int) = a.buckets.forall(_(b))
@@ -1001,38 +1003,31 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 
   /** Data-file writer with per-column parquet BLOOM FILTERS on the key
     * columns (repo, path) and contentSha. Parquet writes the bloom only for
-    * a chunk that is not fully dictionary-encoded, and that depends on how
-    * often values repeat, not on file size: columns of mostly-distinct
-    * values fall back to PLAIN on their first page and carry a bloom even
-    * in a tiny file (a 34-row bucket file had PLAIN `path` and
-    * `contentSha` chunks with a bloom each), while repeating columns (repo,
-    * lang) stay dictionary-encoded with no bloom — the dictionary page IS
-    * an exact membership witness, and the scan probes it instead.
-    * Together they give the scan per-file key membership evidence, so a
-    * point lookup on an un-compacted MergeOnRead chain reads only the
-    * files that actually hold a version of the key —
-    * O(key's commits), not O(chain) (the Delta bloom-index / parquet
-    * DictionaryFilter analogue, at FILE granularity so pruned files never
-    * schedule a task). `spark.graft.bloom.enabled=false` opts the write
-    * side out; pre-feature files carry no evidence and are simply kept.
+    * a chunk that is not fully dictionary-encoded, which follows value
+    * repetition, not file size: mostly-distinct columns (`path`,
+    * `contentSha`) fall back to PLAIN and carry a bloom even in a 34-row
+    * file; repeating ones (repo, lang) stay dictionary-encoded, and the
+    * scan probes that exact dictionary page instead. Each bloom is the
+    * smallest power-of-two filter from 1 KiB to 1 MiB that holds its
+    * chunk's distinct values at 1 % FPP (11 adaptive candidates under
+    * parquet's 1 MiB max; its default 5 would stop at 64 KiB, most of a
+    * small commit's bytes). The evidence lets a point lookup on an
+    * un-compacted MergeOnRead chain read only the files holding a version
+    * of the key — O(key's commits), not O(chain), at FILE granularity so
+    * pruned files never schedule a task. `spark.graft.bloom.enabled=false`
+    * opts out.
     */
   private def dataWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     val w = df.write.partitionBy("b").mode("overwrite")
-    if (GraftConf.bool(spark, "spark.graft.bloom.enabled").getOrElse(true)) {
-      val w2 = w.option("parquet.bloom.filter.enabled#repo", "true")
-        .option("parquet.bloom.filter.enabled#path", "true")
-        // content-address lookups ("does this blob exist") probe contentSha
-        // evidence on resolved layouts — see GraftScan.keyEvidenceGate
-        .option("parquet.bloom.filter.enabled#contentSha", "true")
-        .option("parquet.bloom.filter.adaptive.enabled", "true")
-      // opt-in witnesses for further value columns (high-cardinality
-      // payload columns whose chunks outgrow dictionaries — low-cardinality
-      // ones like lang are fully dict-encoded and carry exact evidence
-      // already): spark.graft.bloom.extraColumns = comma-separated names
-      spark.conf.getOption("spark.graft.bloom.extraColumns")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty)).getOrElse(Array.empty)
-        .foldLeft(w2)((acc, c) => acc.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    } else w
+    if (GraftConf.bool(spark, "spark.graft.bloom.enabled").getOrElse(true))
+      // contentSha serves content-address lookups ("does this blob exist")
+      // on resolved layouts — see GraftScan.keyEvidenceGate
+      Seq("repo", "path", "contentSha").foldLeft(
+          w.option("parquet.bloom.filter.adaptive.enabled", "true")) { (acc, c) =>
+        acc.option(s"parquet.bloom.filter.enabled#$c", "true")
+          .option(s"parquet.bloom.filter.candidates.number#$c", "11") // 1 MiB .. 1 KiB
+      }
+    else w
   }
 
   /** total row count from one parquet file's footer (driver-side, no job) */

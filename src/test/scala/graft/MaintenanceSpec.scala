@@ -316,6 +316,24 @@ class MaintenanceSpec extends SparkSpec {
     assert(t.merge(wal.where(col("lsn") > 2000), "br", 1L).nonEmpty)
   }
 
+  test("a data pass that throws after writing leaves no attempt directory behind") {
+    // the tombstone count reads spark.graft.tombstones.driverMaxRows after
+    // the commit's files are written, so a bad value fails mid-pass
+    val t = new LakeTable(spark, tmpDir("passleak"), defaultBuckets = 4, ApplyMode.MergeOnRead)
+    val wal = ChangeLogGen.changeLog(spark, cfg)
+    t.merge(wal.where(col("lsn") <= 2000), "pl", 0L)
+    val batch = wal.where(col("lsn") > 2000)
+    assert(batch.where(col("op") === "D").count() > 0, "the batch must delete")
+    val head = t.currentSnapshot().get
+    spark.conf.set("spark.graft.tombstones.driverMaxRows", "lots")
+    try intercept[IllegalArgumentException](t.merge(batch, "pl", 1L))
+    finally spark.conf.unset("spark.graft.tombstones.driverMaxRows")
+    assert(t.currentSnapshot().map(_.version) == Some(head.version), "the failed merge must not commit")
+    val commitDirs = new java.io.File(s"${t.root}/data").listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(commitDirs == head.files.map(_.path.split('/')(1)).toSet,
+      s"commit dirs $commitDirs outside the head's files")
+  }
+
   test("time travel: readAt(v) reproduces each retained snapshot's state") {
     val t = new LakeTable(spark, tmpDir("tt"), defaultBuckets = 4, ApplyMode.CopyOnWrite)
     val wal = ChangeLogGen.changeLog(spark, cfg).persist()
