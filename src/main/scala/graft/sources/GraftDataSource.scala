@@ -4,8 +4,6 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -715,9 +713,7 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     val big = files.maxBy(_.rows)
     val cached = splitMemo.get(big.path)
     if (cached != null) return cached
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(resolve(big.path)), conf))
+    val reader = graft.table.LakeTable.openParquet(resolve(big.path), hconf)
     try {
       val blocks = reader.getFooter.getBlocks
       val starts = (0 until blocks.size()).flatMap { i =>
@@ -878,8 +874,7 @@ object GraftScan {
 
   private def loadEvidence(abs: String, conf: Configuration,
       cols: Seq[String]): FileEvidence = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(abs), conf))
+    val r = graft.table.LakeTable.openParquet(abs, conf)
     try {
       val footer = r.getFooter
       val schema = footer.getFileMetaData.getSchema
@@ -961,8 +956,7 @@ object GraftScan {
       if (hit != null) return hit
     }
     val byFile = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuilder.ofLong]()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+    val reader = graft.table.LakeTable.openParquet(f, conf)
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       val columnIO = new ColumnIOFactory().getColumnIO(fileSchema)
@@ -1140,8 +1134,7 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
                                               * miss it are skipped without decoding
                                               */
                                             range: Option[GraftKeyRange] = None) {
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+  private val reader = graft.table.LakeTable.openParquet(path, conf)
   private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
   private val present: Seq[String] = fields.map(_.name).filter(fileSchema.containsField).toSeq
   private val projection: MessageType = {

@@ -942,7 +942,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       val dvPaths0 = fs.listDirs(dvDir)
         .filter(d => new org.apache.hadoop.fs.Path(d).getName.startsWith("b="))
         .flatMap(d => LakeTable.listParquet(fs, d))
-      val dvCount = dvPaths0.map(parquetRowCount).sum
+      val dvCount = parquetRowCount(dvPaths0)
       val dvPaths = if (dvCount > 0) dvPaths0.map(LakeTable.relPath) else Nil
 
       val perFile = fileStats(commitDir)
@@ -1030,14 +1030,13 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     else w
   }
 
-  /** total row count from one parquet file's footer (driver-side, no job) */
-  private def parquetRowCount(path: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path),
-      spark.sessionState.newHadoopConf())
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  /** total rows of parquet files from their footers (driver-side, one conf, no job) */
+  private def parquetRowCount(paths: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.map { p =>
+      val r = LakeTable.openParquet(p, conf)
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** PER-FILE (rows, min/max lsn, min/max repo) read from parquet footers
@@ -1047,8 +1046,6 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * file would overcount k×).
     */
   private def fileStats(commitDir: String): Seq[LakeTable.FileStat] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     if (!fs.exists(commitDir)) return Seq.empty
     val dirs = fs.listDirs(commitDir)
@@ -1066,8 +1063,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         // file across all repos")
         val strMin = scala.collection.mutable.Map[String, String]()
         val strMax = scala.collection.mutable.Map[String, String]()
-        val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf)
-        val r = ParquetFileReader.open(in)
+        val r = LakeTable.openParquet(p, conf)
         try {
           val blocks = r.getFooter.getBlocks
           (0 until blocks.size()).foreach { i =>
@@ -1197,13 +1193,11 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * metadata, no job; zero-row files dropped
     */
   private def cdfStatsOf(dir: String): Seq[CdfEntry] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     import scala.collection.parallel.CollectionConverters._
     LakeTable.listParquet(fs, dir).par.flatMap { p =>
       var rows = 0L; var minLsn = Long.MaxValue; var maxLsn = Long.MinValue
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf))
+      val r = LakeTable.openParquet(p, conf)
       try {
         val blocks = r.getFooter.getBlocks
         (0 until blocks.size()).foreach { i =>
@@ -1655,12 +1649,19 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * amplification bounded at fleet scale: a 1000-bucket table with three
     * hot buckets folds three buckets, not the whole table (the Delta
     * `OPTIMIZE ... WHERE` / Iceberg filtered-binpack analogue; `compact()`
-    * stays the full rewrite). Per apply mode:
+    * stays the full rewrite). The fold reads through the DSv2 scan
+    * (tombstones kept), which resolves and masks DVs in its readers: one
+    * job, one task per bucket (a sorted bucket past `wideBucketRows`, 8M
+    * rows, splits by key range; resolved DV/CoW files bin-pack at the
+    * scan's `packRows`), no listing job, no shuffle. Memory as on reads:
+    * a bucket with an unsorted (clustered) file resolves in the hash-map
+    * reader, O(its live keys), an all-sorted one in O(files). Per mode:
     *  - MergeOnRead: each selected bucket's delta chain collapses to its
     *    latest-per-key rows — tombstone winners retained and ORIGINAL lsns
     *    preserved, so deltas landing after the fold still out-resolve the
     *    folded base by max-(lsn, commit), exactly as over the unfolded
-    *    chain;
+    *    chain; an exact (lsn, commit) tie keeps the later file's row, the
+    *    row reads serve;
     *  - DeletionVector: the selected buckets' dead positions are applied,
     *    and the SURVIVING DV entries (they reference untouched buckets'
     *    files — a data path's `b=<k>` segment names its bucket) are folded
@@ -1685,21 +1686,16 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       else {
         val snap = p.head
         val isDv = LakeTable.modeOf(snap.mode) == ApplyMode.DeletionVector
-        val source =
-          if (isDv) applyDv(readRawAt(Some(snap), Some(chosen)), snap.dvFiles, snap.dvRows)
-          else readRawAt(Some(snap), Some(chosen))
+        val scanned = scanAt(bucketView(Some(snap), Some(chosen)), keepDeleted = true)
         val bCol = pmod(xxhash64(col("repo"), col("path")), lit(snap.nBuckets.toLong)).cast("int")
-        // same single-shuffle resolve as the full rewrite; parallelism keys on
-        // the SELECTED bucket count (one hot bucket on a wide cluster sub-splits
-        // k ways, it does not serialise on a single task)
-        val resolvedSel = bucketResolve(source.withColumn("b", bCol), chosen.size)
-        // the persisted clustering policy applies to targeted folds too —
-        // maybeCompact's automatic maintenance must not revert a clustered
-        // table to key-sorted layout one hot bucket at a time
-        val toWriteSel =
-          if (snap.clusterBy.isEmpty) resolvedSel
-          else resolvedSel.sortWithinPartitions((col("b") +: snap.clusterBy.map(col)): _*)
-        dataWrite(toWriteSel).parquet(p.dir)
+        // every scan task holds one bucket, so a local sort satisfies the
+        // writer's `b` ordering. The persisted clustering policy applies to
+        // targeted folds too — maybeCompact's automatic maintenance must not
+        // revert a clustered table to key-sorted layout one hot bucket at a time
+        val order = if (snap.clusterBy.isEmpty) Seq("repo", "path") else snap.clusterBy
+        dataWrite(scanned.select(scanned.columns.map(c => col(c).as(snap.physicalOf(c))).toSeq: _*)
+          .withColumn("b", bCol)
+          .sortWithinPartitions((col("b") +: order.map(col)): _*)).parquet(p.dir)
         val newEntries = entriesOf(fileStats(p.dir), sorted = snap.clusterBy.isEmpty)
         // DV mode folds the SURVIVING dead positions (every other bucket's)
         // into one fresh sidecar set — the pass then read all DV sidecars
@@ -1718,7 +1714,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
             val dvPaths = fs.listDirs(dvDir)
               .filter(d => new org.apache.hadoop.fs.Path(d).getName.startsWith("b="))
               .flatMap(d => LakeTable.listParquet(fs, d))
-            val n = dvPaths.map(parquetRowCount).sum
+            val n = parquetRowCount(dvPaths)
             Some(if (n > 0) (dvPaths.map(LakeTable.relPath), n) else (Nil, 0L))
           }
         Right(Attempt(chosen.size, cur => {
@@ -2419,6 +2415,19 @@ object LakeTable {
       t
     })
 
+  /** THE one parquet open: the caller's conf serves the file system and
+    * the read options, so the session's `parquet.*` read settings apply.
+    * Never call `ParquetFileReader.open(InputFile)` without options: it
+    * parses Hadoop's default XML again on every open.
+    */
+  private[graft] def openParquet(path: String,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.parquet.hadoop.ParquetFileReader = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, p).build())
+  }
+
   /** count of deleted=true rows in one parquet file, decoded driver-side
     * from just the projected boolean column chunk (bit-packed, KBs) — no
     * Spark job. Files written by the merge always carry `deleted`; absent
@@ -2426,12 +2435,9 @@ object LakeTable {
     */
   private[table] def tombstonesInFile(path: String,
       conf: org.apache.hadoop.conf.Configuration): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.ColumnIOFactory
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+    val reader = openParquet(path, conf)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       if (!schema.containsField("deleted")) return 0L
