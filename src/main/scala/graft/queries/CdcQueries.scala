@@ -804,34 +804,29 @@ object CdcQueries {
     q45SqlDelete(s, dir) // builds sm_del (CoW, lang='python' deleted) if absent
     s.conf.set("spark.sql.catalog.gsm", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gsm.root", LakeRoot)
-    val spjConfs = Seq(
+    // the SPJ recipe applies to this query's own session (a clone): the
+    // caller's session, and anything planned on it meanwhile, keeps its
+    // settings
+    val spj = org.apache.spark.sql.graft.Internals.withConfs(s, Map(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       // join keys ⊃ partition key (_bucket): the co-partition check must
       // accept partial-key alignment (same recipe Iceberg SPJ documents)
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = spjConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    spjConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val joined = s.sql(
-        """SELECT a.repo, a.path, a.lang, b.contentSha AS sha_b
-          |FROM gsm.sm_mor a JOIN gsm.sm_del b
-          |ON a.repo = b.repo AND a.path = b.path AND a._bucket = b._bucket""".stripMargin)
-      val joinPlan = joined.queryExecution.executedPlan.toString
-      require(!joinPlan.contains("Exchange"),
-        "q60: the co-bucketed join must plan ZERO shuffles (SPJ):\n" + joinPlan)
-      val out = joined.orderBy("repo", "path")
-      // force the output plan while the SPJ confs are set — the cached
-      // QueryExecution keeps the zero-shuffle join after they're restored
-      require("Exchange".r.findAllMatchIn(
-          out.queryExecution.executedPlan.toString).size <= 1,
-        "q60: only the final ORDER BY may exchange")
-      out
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
+    val joined = spj.sql(
+      """SELECT a.repo, a.path, a.lang, b.contentSha AS sha_b
+        |FROM gsm.sm_mor a JOIN gsm.sm_del b
+        |ON a.repo = b.repo AND a.path = b.path AND a._bucket = b._bucket""".stripMargin)
+    val joinPlan = joined.queryExecution.executedPlan.toString
+    require(!joinPlan.contains("Exchange"),
+      "q60: the co-bucketed join must plan ZERO shuffles (SPJ):\n" + joinPlan)
+    val out = joined.orderBy("repo", "path")
+    require("Exchange".r.findAllMatchIn(
+        out.queryExecution.executedPlan.toString).size <= 1,
+      "q60: only the final ORDER BY may exchange")
+    out
   }
 
   /** Content-addressed lookup (round-7): `WHERE contentSha = <digest>` —

@@ -198,14 +198,23 @@ final class GraftTable(rootSnap: (String, Snapshot), tableSchema: StructType)
     * both sides. Null on `changeTypes` scans (those partition by sidecar,
     * not bucket).
     */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_bucket"
-      override def dataType(): DataType = IntegerType
+  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
+    def meta(n: String, t: DataType, c: String) = new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = n
+      override def dataType(): DataType = t
       override def isNullable: Boolean = true
-      override def comment(): String =
-        "key-bucket id pmod(xxhash64(repo, path), nBuckets); join on it for storage-partitioned joins"
-    })
+      override def comment(): String = c
+    }
+    Array(
+      meta("_bucket", IntegerType,
+        "key-bucket id pmod(xxhash64(repo, path), nBuckets); join on it for storage-partitioned joins"),
+      // `_file`/`_pos`: where the served row is stored — the root-relative
+      // data file (the form DV sidecars store) and the row's position in it
+      // (= `_metadata.row_index` of a plain parquet read). The DV merge marks
+      // superseded rows dead by exactly this pair.
+      meta("_file", StringType, "root-relative data file holding the row (the DV sidecar form)"),
+      meta("_pos", LongType, "the row's position in its data file (parquet row index)"))
+  }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     import scala.jdk.CollectionConverters._
     new GraftScanBuilder(rootSnap._1, rootSnap._2, schema,
@@ -755,8 +764,7 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+    val conf = new SerializableConfiguration(hconf)
     // COLUMN MAPPING: `required` carries logical names; files store
     // physical ones. InternalRows are positional, so translating the
     // requested field names here is the whole read-side story — Spark
@@ -777,8 +785,16 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
       // planning passes): any stacked bucket ⇒ the whole scan reads
       // row-based. Fully-compacted / CoW / DV layouts keep vectorization.
       val allPlain = !snap.files.groupBy(_.bucket).values.exists(GraftScan.stacked(snap, _))
-      new GraftReaderFactory(physRequired, conf, vectorized && allPlain,
-        bucketOrdinal = physRequired.fieldNames.indexOf("_bucket"), keepDeleted = keepDeleted)
+      // slots of the synthetic metadata columns (a stored column of the
+      // same name wins, as Spark resolves it)
+      val stored = snap.logicalSchema.fieldNames.toSet
+      def slot(n: String) = if (stored(n)) -1 else physRequired.fieldNames.indexOf(n)
+      // the conf is broadcast, as Spark's file scans do: every task
+      // deserialises its closure, and a Hadoop conf inside it cost each
+      // task ~20 ms
+      new GraftReaderFactory(physRequired, SparkSession.active.sparkContext.broadcast(conf),
+        vectorized && allPlain,
+        GraftScan.MetaCols(slot("_bucket"), slot("_file"), slot("_pos")), keepDeleted = keepDeleted)
     }
   }
 
@@ -791,6 +807,13 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
 }
 
 object GraftScan {
+  /** Slots of the synthetic metadata columns in a reader's row (-1 = not
+    * read): `_bucket` is the task's constant bucket id, `_file` the row's
+    * root-relative data file, `_pos` its position in that file. None of
+    * them is stored; readers fill them only when asked.
+    */
+  final case class MetaCols(bucket: Int = -1, file: Int = -1, pos: Int = -1)
+
   /** Does this bucket's file set need the latest-per-key resolve? Only a
     * MergeOnRead bucket whose files come from MORE than one commit: every
     * write emits key-unique rows per commit per bucket (within-batch dedup
@@ -1045,16 +1068,19 @@ final case class GraftInputPartition(files: Seq[String], dvSidecars: Seq[String]
   override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucket))
 }
 
-final class GraftReaderFactory(required: StructType, conf: SerializableConfiguration,
+final class GraftReaderFactory(required: StructType,
+                               conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
                                vectorized: Boolean,
-                               /** position of the `_bucket` metadata column in
-                                 * `required` (-1 = not requested): never stored
-                                 * in parquet, stamped per task from its
-                                 * partition's bucket id
+                               /** slots of the metadata columns in `required`:
+                                 * never stored in parquet; `_bucket` is stamped
+                                 * per task from its partition's bucket id,
+                                 * `_file`/`_pos` per row by the cursors
                                  */
-                               bucketOrdinal: Int = -1,
+                               meta: GraftScan.MetaCols = GraftScan.MetaCols(),
                                /** serve tombstone rows (`changeFeed` reads) */
                                keepDeleted: Boolean = false) extends PartitionReaderFactory {
+
+  private def hconf: Configuration = conf.value.value
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     vectorized && !partition.asInstanceOf[GraftInputPartition].resolveLatest &&
@@ -1089,8 +1115,8 @@ final class GraftReaderFactory(required: StructType, conf: SerializableConfigura
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     def one(f: String): PartitionReader[ColumnarBatch] = {
-      val dead = GraftScan.deadPositionsFor(f, p.dvSidecars, conf.value)
-      new GraftColumnarReader(f, required, conf.value, dead, bucketOrdinal, p.bucket)
+      val dead = GraftScan.deadPositionsFor(f, p.dvSidecars, hconf)
+      new GraftColumnarReader(f, required, hconf, dead, meta, p.bucket)
     }
     if (p.files.size == 1) one(p.files.head)
     else new ChainedReader[ColumnarBatch](p.files.map(f => () => one(f)))
@@ -1099,22 +1125,22 @@ final class GraftReaderFactory(required: StructType, conf: SerializableConfigura
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     def onePlain(f: String): PartitionReader[InternalRow] = {
-      val dead = GraftScan.deadPositionsFor(f, p.dvSidecars, conf.value)
-      new GraftPartitionReader(f, required, conf.value, dead, keepDeleted)
+      val dead = GraftScan.deadPositionsFor(f, p.dvSidecars, hconf)
+      new GraftPartitionReader(f, required, hconf, dead, keepDeleted, meta)
     }
     val inner =
       if (p.resolveLatest && p.sortedResolve)
-        new GraftSortedResolveReader(p.files, required, conf.value, p.range, keepDeleted)
-      else if (p.resolveLatest) new GraftResolveReader(p.files, required, conf.value, keepDeleted)
+        new GraftSortedResolveReader(p.files, required, hconf, p.range, keepDeleted, meta)
+      else if (p.resolveLatest) new GraftResolveReader(p.files, required, hconf, keepDeleted, meta)
       else if (p.files.size == 1) onePlain(p.files.head)
       else new ChainedReader[InternalRow](p.files.map(f => () => onePlain(f)))
     // `_bucket` requested: the parquet cursors null-fill the absent field;
     // overwrite the slot with the task's constant bucket id
-    if (bucketOrdinal < 0) inner
+    if (meta.bucket < 0) inner
     else new PartitionReader[InternalRow] {
       override def next(): Boolean = inner.next()
       override def get(): InternalRow = {
-        val r = inner.get(); r.update(bucketOrdinal, p.bucket); r
+        val r = inner.get(); r.update(meta.bucket, p.bucket); r
       }
       override def close(): Unit = inner.close()
     }
@@ -1125,7 +1151,8 @@ final class GraftReaderFactory(required: StructType, conf: SerializableConfigura
   * yields the requested `fields` as an Array[Any] per row (Catalyst value
   * shapes: UTF8String for strings), null-backfilling fields the file
   * predates (additive schema evolution). Exposes the row's ordinal within
-  * the file (= `_metadata.row_index`, what DV sidecars key on).
+  * the file (= `_metadata.row_index`, what DV sidecars key on), and fills
+  * the `_file`/`_pos` slots of `meta` with the file and that ordinal.
   */
 private[sources] final class GroupRowCursor(path: String, fields: Array[StructField],
                                             conf: Configuration,
@@ -1133,7 +1160,8 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
                                               * rowgroups whose conservative key bounds
                                               * miss it are skipped without decoding
                                               */
-                                            range: Option[GraftKeyRange] = None) {
+                                            range: Option[GraftKeyRange] = None,
+                                            meta: GraftScan.MetaCols = GraftScan.MetaCols()) {
   private val reader = graft.table.LakeTable.openParquet(path, conf)
   private val fileSchema: MessageType = reader.getFooter.getFileMetaData.getSchema
   private val present: Seq[String] = fields.map(_.name).filter(fileSchema.containsField).toSeq
@@ -1202,8 +1230,13 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
   var ordinal: Long = -1L
   val values: Array[Any] = new Array[Any](fields.length)
 
+  private val relFile: UTF8String =
+    if (meta.file < 0) null else UTF8String.fromString(GraftScan.relPath(path))
+
   private def advanceRowGroup(): Boolean = {
     while (nextBlock < blockKeep.length && !blockKeep(nextBlock)) {
+      // a skipped rowgroup's rows still count toward the file position
+      ordinal += reader.getFooter.getBlocks.get(nextBlock).getRowCount
       reader.skipNextRowGroup()
       nextBlock += 1
     }
@@ -1248,6 +1281,8 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
         }
       i += 1
     }
+    if (meta.file >= 0) values(meta.file) = relFile
+    if (meta.pos >= 0) values(meta.pos) = ordinal
     true
   }
 
@@ -1260,13 +1295,14 @@ private[sources] final class GroupRowCursor(path: String, fields: Array[StructFi
   * deletion vector.
   */
 final class GraftPartitionReader(path: String, required: StructType, conf: Configuration,
-                                 dead: Array[Long], exposeDeleted: Boolean = false)
+                                 dead: Array[Long], exposeDeleted: Boolean = false,
+                                 meta: GraftScan.MetaCols = GraftScan.MetaCols())
     extends PartitionReader[InternalRow] {
 
   private val ext: Array[StructField] =
     if (required.fieldNames.contains("deleted")) required.fields
     else required.fields :+ StructField("deleted", BooleanType)
-  private val cursor = new GroupRowCursor(path, ext, conf)
+  private val cursor = new GroupRowCursor(path, ext, conf, meta = meta)
   private val deletedIdx = ext.indexWhere(_.name == "deleted")
   private var current: InternalRow = _
   private var dp = 0 // monotone cursor into the sorted dead positions
@@ -1299,7 +1335,8 @@ final class GraftPartitionReader(path: String, required: StructType, conf: Confi
   * emit unless `exposeDeleted` (changeFeed reads).
   */
 final class GraftResolveReader(files: Seq[String], required: StructType, conf: Configuration,
-                               exposeDeleted: Boolean = false)
+                               exposeDeleted: Boolean = false,
+                               meta: GraftScan.MetaCols = GraftScan.MetaCols())
     extends PartitionReader[InternalRow] {
 
   // read schema = required ∪ the shared bookkeeping vocabulary; the extras
@@ -1313,7 +1350,7 @@ final class GraftResolveReader(files: Seq[String], required: StructType, conf: C
   private val latest = {
     val m = new java.util.HashMap[(String, String), Array[Any]]()
     files.foreach { f =>
-      val cursor = new GroupRowCursor(f, ext, conf)
+      val cursor = new GroupRowCursor(f, ext, conf, meta = meta)
       try {
         while (cursor.advance()) {
           val v = cursor.values
@@ -1376,7 +1413,8 @@ private[sources] object ResolveColumns {
   */
 private[sources] final class SortedKeyMerge(files: Seq[String], ext: Array[StructField],
                                             repoIdx: Int, pathIdx: Int,
-                                            conf: Configuration, range: Option[GraftKeyRange]) {
+                                            conf: Configuration, range: Option[GraftKeyRange],
+                                            meta: GraftScan.MetaCols = GraftScan.MetaCols()) {
   private val loR = range.flatMap(r => Option(r.loRepo)).map(UTF8String.fromString).orNull
   private val loP = range.flatMap(r => Option(r.loPath)).map(UTF8String.fromString).orNull
   private val hiR = range.filter(_.bounded).map(r => UTF8String.fromString(r.hiRepo)).orNull
@@ -1389,7 +1427,7 @@ private[sources] final class SortedKeyMerge(files: Seq[String], ext: Array[Struc
       b(repoIdx).asInstanceOf[UTF8String], b(pathIdx).asInstanceOf[UTF8String])
 
   private final class FileCursor(path: String) {
-    private val cur = new GroupRowCursor(path, ext, conf, range)
+    private val cur = new GroupRowCursor(path, ext, conf, range, meta)
     private var open = true
     var row: Array[Any] = _
     def advance(): Unit = {
@@ -1451,7 +1489,8 @@ private[sources] final class SortedKeyMerge(files: Seq[String], ext: Array[Struc
   */
 final class GraftSortedResolveReader(files: Seq[String], required: StructType, conf: Configuration,
                                      range: Option[GraftKeyRange] = None,
-                                     exposeDeleted: Boolean = false)
+                                     exposeDeleted: Boolean = false,
+                                     meta: GraftScan.MetaCols = GraftScan.MetaCols())
     extends PartitionReader[InternalRow] {
 
   private val ext: Array[StructField] = ResolveColumns.extend(required.fields)
@@ -1459,7 +1498,7 @@ final class GraftSortedResolveReader(files: Seq[String], required: StructType, c
   private val lsnIdx = idx("lsn"); private val commitIdx = idx("commit")
   private val deletedIdx = idx("deleted")
 
-  private val merge = new SortedKeyMerge(files, ext, idx("repo"), idx("path"), conf, range)
+  private val merge = new SortedKeyMerge(files, ext, idx("repo"), idx("path"), conf, range, meta)
   private val versions = scala.collection.mutable.ArrayBuffer[(Array[Any], Int)]()
 
   /** does (a from file ai) beat (b from file bi)? */
@@ -1552,31 +1591,45 @@ private[sources] final class SelectedColumnVector(dt: org.apache.spark.sql.types
   */
 final class GraftColumnarReader(path: String, required: StructType, conf: Configuration,
                                 dead: Array[Long],
-                                /** `_bucket` metadata column: position in
-                                  * `required` (-1 = absent) and the task's
-                                  * bucket id — served as a constant vector,
-                                  * never read from parquet
+                                /** metadata column slots in `required`, and the
+                                  * task's bucket id: `_bucket` and `_file` are
+                                  * constant vectors, `_pos` is filled per batch —
+                                  * none is read from parquet
                                   */
-                                bucketOrdinal: Int = -1, bucket: Int = -1)
+                                meta: GraftScan.MetaCols = GraftScan.MetaCols(), bucket: Int = -1)
     extends PartitionReader[ColumnarBatch] {
   import org.apache.hadoop.mapred.FileSplit
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
   import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskID, JobID, TaskType}
   import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 
   private val capacity = 4096
-  // the parquet-served columns: required minus the synthetic `_bucket`
+  private val synthetic = Seq(meta.bucket, meta.file, meta.pos).filter(_ >= 0).toSet
+  // the parquet-served columns: required minus the synthetic ones
   private val parquetFields: Array[StructField] =
-    if (bucketOrdinal >= 0) required.fields.patch(bucketOrdinal, Nil, 1) else required.fields
-  // output ordinal -> parquet batch ordinal (identity when no `_bucket`)
-  private def srcOrdinal(i: Int): Int =
-    if (bucketOrdinal >= 0 && i > bucketOrdinal) i - 1 else i
+    required.fields.zipWithIndex.collect { case (f, i) if !synthetic(i) => f }
+  // output ordinal -> parquet batch ordinal (identity without metadata columns)
+  private def srcOrdinal(i: Int): Int = i - synthetic.count(_ < i)
   private val constBucket: ColumnVector =
-    if (bucketOrdinal < 0) null
+    if (meta.bucket < 0) null
+    else { val v = new ConstantColumnVector(capacity, IntegerType); v.setInt(bucket); v }
+  private val constFile: ColumnVector =
+    if (meta.file < 0) null
     else {
-      val v = new org.apache.spark.sql.execution.vectorized.ConstantColumnVector(capacity, IntegerType)
-      v.setInt(bucket); v
+      val v = new ConstantColumnVector(capacity, StringType)
+      v.setUtf8String(UTF8String.fromString(GraftScan.relPath(path))); v
     }
+  // the batch's file positions (base .. base + n - 1); dead rows drop out
+  // through the same selection as every other column
+  private val posVec: OnHeapColumnVector =
+    if (meta.pos < 0) null else new OnHeapColumnVector(capacity, LongType)
+  /** output column `i` of a batch whose parquet vectors are `rb` */
+  private def vectorOf(rb: ColumnarBatch, i: Int): ColumnVector =
+    if (i == meta.bucket) constBucket
+    else if (i == meta.file) constFile
+    else if (i == meta.pos) posVec
+    else rb.column(srcOrdinal(i))
   // deleted is appended to the read schema (never exposed); it drives the
   // tombstone mask
   private val readSchema = StructType(parquetFields :+ StructField("deleted", BooleanType))
@@ -1627,6 +1680,7 @@ final class GraftColumnarReader(path: String, required: StructType, conf: Config
       // find dead rows (tombstones or DV positions) in this batch; the DV
       // side is an O(1) range probe on the sorted positions
       while (dp < dead.length && dead(dp) < base) dp += 1
+      if (posVec != null) { var j = 0; while (j < n) { posVec.putLong(j, base + j); j += 1 } }
       var anyDead = dp < dead.length && dead(dp) < base + n
       var i = 0
       while (i < n && !anyDead) {
@@ -1634,23 +1688,20 @@ final class GraftColumnarReader(path: String, required: StructType, conf: Config
         i += 1
       }
       if (!anyDead) {
-        if (passThrough == null) {
-          val cols = Array.tabulate[ColumnVector](required.length)(i =>
-            if (i == bucketOrdinal) constBucket else rb.column(srcOrdinal(i)))
-          passThrough = new ColumnarBatch(cols)
-        }
+        if (passThrough == null)
+          passThrough = new ColumnarBatch(Array.tabulate[ColumnVector](required.length)(vectorOf(rb, _)))
         passThrough.setNumRows(n)
         current = passThrough
         base += n
         return true
       }
       // build the live-row selection and serve a zero-copy remapped view
-      // (a selection over the constant `_bucket` vector is the vector itself)
+      // (a selection over a constant vector is the vector itself)
       if (selVectors == null) {
         selVectors = required.fields.map(f => new SelectedColumnVector(f.dataType))
         sel = new Array[Int](capacity)
         filtered = new ColumnarBatch(Array.tabulate[ColumnVector](required.length)(i =>
-          if (i == bucketOrdinal) constBucket else selVectors(i)))
+          if (i == meta.bucket) constBucket else if (i == meta.file) constFile else selVectors(i)))
       }
       var out = 0
       var p = dp // local walk; dp itself re-syncs from `base` next batch
@@ -1666,8 +1717,8 @@ final class GraftColumnarReader(path: String, required: StructType, conf: Config
       if (out > 0) {
         var c = 0
         while (c < required.length) {
-          if (c != bucketOrdinal) {
-            selVectors(c).src = rb.column(srcOrdinal(c))
+          if (c != meta.bucket && c != meta.file) {
+            selVectors(c).src = vectorOf(rb, c)
             selVectors(c).sel = sel
           }
           c += 1
@@ -1681,5 +1732,5 @@ final class GraftColumnarReader(path: String, required: StructType, conf: Config
   }
 
   override def get(): ColumnarBatch = current
-  override def close(): Unit = vreader.close()
+  override def close(): Unit = { vreader.close(); if (posVec != null) posVec.close() }
 }

@@ -310,14 +310,16 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * no shuffle, and serves the snapshot's own column mapping. An empty
     * table (None) reads as this table's empty layout. `keepDeleted` keeps
     * tombstone winners and the `deleted` column (the `changeFeed` read).
+    * `session` plans the frame (the DV merge's own session).
     */
-  private def scanAt(snap: Option[Snapshot], keepDeleted: Boolean = false): DataFrame = {
+  private def scanAt(snap: Option[Snapshot], keepDeleted: Boolean = false,
+                     session: SparkSession = spark): DataFrame = {
     import scala.jdk.CollectionConverters._
     val s = snap.getOrElse(emptySnapshot)
     val table = new graft.sources.GraftTable((root, s),
       graft.sources.GraftDataSource.schemaOf(s, keepDeleted))
     val options = if (keepDeleted) Map("changeFeed" -> "true") else Map.empty[String, String]
-    org.apache.spark.sql.graft.Internals.ofRows(spark,
+    org.apache.spark.sql.graft.Internals.ofRows(session,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
         table, None, None, new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)))
   }
@@ -676,36 +678,48 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     // staleRows = events at or below the applied-LSN high watermark (the
     // reference silently DROPS its analogue — rows failing year==latest;
     // we count them in the ledger, SURVEY.md §2.10 — stale events are
-    // correct no-ops thanks to the max-LSN guard); the grouped keys are
+    // correct no-ops thanks to the max-LSN guard); the counted keys are
     // the AFFECTED BUCKETS (previously a second job). A dedicated job,
     // not Observation.observe, whose get() never completes inside a
     // streaming foreachBatch (listener events don't fire for inner
     // executions). The fixed per-batch job count is what bounds
-    // small-update-batch latency — the update-phase scaling limiter.
+    // small-update-batch latency — the update-phase scaling limiter, so
+    // the counts are per-task maps folded on the driver: one stage, no
+    // shuffle (at most nBuckets entries per task).
     val prevHwm = prev.hwm
     val preB = pmod(xxhash64(col("repo"), col("path")), lit(nBuckets.toLong)).cast("int")
-    def prePass() = events.groupBy(preB.as("b"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("lsn") <= prevHwm, 1L).otherwise(0L)).as("stale"))
-      .collect()
+    /** (bucket, events, stale events) of every affected bucket */
+    def prePass(): Seq[(Int, Long, Long)] =
+      events.select(preB, col("lsn") <= prevHwm).queryExecution.toRdd
+        .mapPartitions { rows =>
+          val m = scala.collection.mutable.HashMap[Int, Array[Long]]()
+          rows.foreach { r =>
+            val a = m.getOrElseUpdate(r.getInt(0), new Array[Long](2))
+            a(0) += 1
+            if (!r.isNullAt(1) && r.getBoolean(1)) a(1) += 1
+          }
+          m.iterator.map { case (b, a) => (b, a(0), a(1)) }
+        }.collect().toSeq
+        .groupMapReduce(_._1)(t => (t._2, t._3))((x, y) => (x._1 + y._1, x._2 + y._2))
+        .map { case (b, (n, stale)) => (b, n, stale) }.toSeq
     // MergeOnRead never reads existing buckets before the write, so the
     // accounting pre-pass is not a WRITE dependency — run it CONCURRENTLY
     // with the write job (guide §2.6: overlap independent jobs; Spark's
     // FIFO scheduler back-fills the write's task tail with the pre-pass
     // tasks). CoW/DV need `affectedAll` to prune the existing-bucket read,
     // so they stay sequential.
-    val preFut: Either[Array[org.apache.spark.sql.Row], java.util.concurrent.Future[Array[org.apache.spark.sql.Row]]] =
+    val preFut: Either[Seq[(Int, Long, Long)], java.util.concurrent.Future[Seq[(Int, Long, Long)]]] =
       if (mode == ApplyMode.MergeOnRead)
         Right(LakeTable.auxPool.submit(() => prePass()))
       else Left(prePass())
-    def joinPre(): Array[org.apache.spark.sql.Row] = preFut match {
+    def joinPre(): Seq[(Int, Long, Long)] = preFut match {
       case Left(rows) => rows
       case Right(f)   => f.get()
     }
     lazy val pre = joinPre()
-    def batchRows = pre.map(_.getLong(1)).sum
-    def staleRows = pre.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum
-    lazy val affectedAll: Set[Int] = pre.map(_.getInt(0)).toSet
+    def batchRows = pre.map(_._2).sum
+    def staleRows = pre.map(_._3).sum
+    lazy val affectedAll: Set[Int] = pre.map(_._1).toSet
     // Hot-KEY pre-reduce (the apply-path skew lever, SURVEY.md §4): when a
     // few keys dominate the batch (e.g. one file updated millions of times
     // in one batch), reduce per-key BEFORE the bucket shuffle with the
@@ -865,11 +879,22 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * of rewriting whole buckets (CoW), write ONLY the winning new row
     * versions and mark each superseded live row's (file, row position) in a
     * deletion-vector sidecar. Per batch this
-    *  - reads just the KEY + ORDER columns (+ positions) of the affected
-    *    buckets — never their payloads;
-    *  - writes O(batch) data instead of O(affected buckets);
-    *  - keeps reads shuffle-free (DV anti-join, broadcast-sized until
-    *    maybeCompact folds the DVs away).
+    *  - reads the affected buckets' live KEY + ORDER columns and their
+    *    positions (`_file`, `_pos`) through the DSv2 scan, which masks dead
+    *    positions in its readers — never their payloads, no file listing;
+    *  - joins the batch to that scan on (b = `_bucket`, repo, path) as a
+    *    storage-partitioned join: the scan is key-grouped by bucket, so
+    *    only the batch is shuffled, into the scan's bucket grouping, and
+    *    the latest-per-key resolve, the data write and the sidecar write
+    *    all run on that one partitioning with no further Exchange (the
+    *    salted sub-split comes back only when the cluster is wider than the
+    *    affected buckets);
+    *  - writes O(batch) data instead of O(affected buckets).
+    * Reads mask the sidecars' positions inside the scan, so they stay
+    * shuffle-free until maybeCompact folds the DVs away.
+    * The plan needs SPJ settings and broadcasts off (the existing side is
+    * O(affected buckets) and must never be broadcast); they are set on a
+    * clone of the batch's session, never on the caller's.
     * The max-LSN guard lives in the join: an incoming version loses to a
     * live existing row with a higher (lsn, commit) and is dropped.
     * Tie-break contract: on an EXACT (lsn, commit) tie DV keeps the STORED
@@ -884,58 +909,69 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
                       batchRows: Long, staleRows: Long, affected: Set[Int],
                       cdfOn: Boolean, cdfFull: Boolean): Attempt[Seq[BucketStats]] = {
     val prev = p.head
+    val session = org.apache.spark.sql.graft.Internals.withConfs(cleaned.sparkSession, LakeTable.dvMergeConfs)
     val bCol = pmod(xxhash64(col("repo"), col("path")), lit(prev.nBuckets.toLong)).cast("int")
-    val batch = LakeTable.latestPerKey(cleaned).withColumn("b", bCol)
-    val affFiles = prev.files.filter(f => affected(f.bucket))
+    val incoming = org.apache.spark.sql.graft.Internals.rebind(cleaned, session).withColumn("b", bCol)
+    val dataCols = incoming.columns.toSeq
+    val view = bucketView(Some(prev), Some(affected))
+    // the affected buckets' live stored rows, tombstones included (a
+    // tombstone out-competes a stale insert and is superseded like a row)
+    val scanned = scanAt(view, keepDeleted = true, session)
 
-    // live existing versions of the affected buckets: key + order columns
-    // + positions only (column-pruned — payloads never read)
-    val exSchema = StructType.fromDDL(
-      "repo STRING, path STRING, ex_lsn BIGINT, ex_commit STRING, ex_deleted BOOLEAN, file_path STRING, row_index BIGINT")
-    val existing =
-      if (affFiles.isEmpty) emptyTable(exSchema)
+    // each batch row with the key's live stored version: key + order
+    // columns + position only (column-pruned — payloads never read)
+    val joined =
+      if (view.forall(_.files.isEmpty))
+        // nothing stored in the affected buckets: no scan to join
+        incoming.repartition(math.max(affected.size, 1), col("b")).select(dataCols.map(col) ++ Seq(
+          lit(null).cast("bigint").as("ex_lsn"), lit(null).cast("string").as("ex_commit"),
+          lit(null).cast("boolean").as("ex_deleted"), lit(null).cast("string").as("file_path"),
+          lit(null).cast("bigint").as("row_index")): _*)
       else {
-        val raw = spark.read.schema(StructType.fromDDL(prev.schemaDdl))
-          .parquet(affFiles.map(f => resolvePath(f.path)): _*)
-          .select(col("repo"), col("path"), col("lsn").as("ex_lsn"), col("commit").as("ex_commit"),
-            col("deleted").as("ex_deleted"),
-            relPathCol(col("_metadata.file_path")).as("file_path"), col("_metadata.row_index").as("row_index"))
-        // only LIVE rows can be superseded (or out-compete an incoming
-        // version); already-dead positions must not shadow the live one
-        if (prev.dvFiles.isEmpty) raw
-        else raw.join(dvPositions(prev.dvFiles, prev.dvRows),
-          col("file_path") === col("__dvf") && col("row_index") === col("__dvr"), "left_anti")
+        val existing = scanned.select(col("_bucket"), col("repo").as("__er"), col("path").as("__ep"),
+          col("lsn").as("ex_lsn"), col("commit").as("ex_commit"), col("deleted").as("ex_deleted"),
+          col("_file").as("file_path"), col("_pos").as("row_index"))
+        incoming.join(existing,
+            col("b") === col("_bucket") && col("repo") === col("__er") && col("path") === col("__ep"), "left")
+          .drop("_bucket", "__er", "__ep")
       }
-
-    val joined = batch.join(existing, Seq("repo", "path"), "left")
+    // the batch's latest version per key, resolved on the join's bucket
+    // grouping — the order of latestPerKey: (lsn, commit), then payloads
+    val order = (Seq("lsn", "commit") ++ dataCols.filterNot(Set("repo", "path", "lsn", "commit", "b")))
+      .map(c => col(c).desc)
+    val latest = joined
+      .withColumn("__rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("b", "repo", "path").orderBy(order: _*)))
+      .where(col("__rn") === 1).drop("__rn")
     val inWins = col("ex_lsn").isNull ||
       (struct(col("lsn"), col("commit")) > struct(col("ex_lsn"), col("ex_commit")))
-    // one materialisation feeds BOTH outputs (data files + DV sidecar)
-    val keep = joined.where(inWins).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one materialisation feeds BOTH outputs (data files + DV sidecar). A
+    // cluster narrower than the affected buckets folds whole buckets into
+    // one task per core: fewer task waves, still one file per bucket
+    val keep = latest.where(inWins)
+      .coalesce(math.max(1, math.min(affected.size, spark.sparkContext.defaultParallelism)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val commitDir = p.dir
-      val dataCols = batch.columns.map(col).toSeq
+      // every task holds whole buckets (one file per bucket); a cluster
+      // wider than the affected buckets sub-splits each k ways
       val kDv = subSplitFactor(math.max(affected.size, 1))
-      dataWrite(keep.select(dataCols: _*)
-        .withColumn("__salt", saltCol(kDv))
-        .repartition(math.max(affected.size, 1) * kDv, col("b"), col("__salt"))
-        .drop("__salt")).parquet(commitDir)
-      // DV sidecars are PARTITIONED BY TARGET BUCKET (the dead position's
-      // file determines its bucket): the write parallelises across affected
-      // buckets (no single-task stage), and the DSv2 scan attaches each
-      // bucket's sidecars to that bucket's readers only — dead positions are
-      // loaded executor-side, never on the driver.
-      val dvNew = keep.where(col("ex_lsn").isNotNull)
-        .select(col("file_path"), col("row_index"),
-          regexp_extract(col("file_path"), "/b=(\\d+)/", 1).cast("int").as("b"))
+      def spread(df: DataFrame, salt: org.apache.spark.sql.Column): DataFrame =
+        if (kDv == 1) df
+        else df.withColumn("__salt", salt)
+          .repartition(math.max(affected.size, 1) * kDv, col("b"), col("__salt")).drop("__salt")
+      dataWrite(spread(keep.select(dataCols.map(col): _*), saltCol(kDv))).parquet(commitDir)
+      // DV sidecars are PARTITIONED BY TARGET BUCKET (a dead position lies
+      // in its key's bucket): the DSv2 scan attaches each bucket's sidecars
+      // to that bucket's readers only — dead positions are loaded
+      // executor-side, never on the driver. Sorted by (file_path,
+      // row_index) so sidecar rowgroup stats are file-disjoint: a reader
+      // loading ONE file's dead positions skips every rowgroup whose
+      // file_path range misses it (see GraftScan.deadPositionsFor).
       val dvDir = s"$commitDir/dv"
-      // sorted by (file_path, row_index) so sidecar rowgroup stats are
-      // file-disjoint: a scan reader loading ONE file's dead positions can
-      // skip every rowgroup whose file_path range misses it (see
-      // GraftScan.deadPositionsFor)
-      dvNew.repartition(math.max(affected.size, 1) * kDv, col("b"),
+      spread(keep.where(col("ex_lsn").isNotNull).select(col("b"), col("file_path"), col("row_index")),
           pmod(xxhash64(col("file_path"), col("row_index")), lit(kDv.toLong)))
-        .sortWithinPartitions("file_path", "row_index")
+        .sortWithinPartitions("b", "file_path", "row_index")
         .write.partitionBy("b").mode("overwrite").parquet(dvDir)
       // dv row count from the parquet footers just written — driver-side
       // metadata read, no extra Spark job
@@ -959,18 +995,21 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       val cdfEntries: Seq[CdfEntry] =
         if (!cdfOn) Nil
         else {
-          val dataColNames = batch.columns.filterNot(_ == "b").toSeq
-          if (cdfFull)
+          val dataColNames = dataCols.filterNot(_ == "b")
+          if (cdfFull) {
             // FULL feed: before-images need the prior winners' PAYLOADS —
             // the one place DV's column-pruned design pays a payload read
-            // (key-semi-joined to the batch inside writeCdfSidecar). The
-            // DV live stored set IS the resolved set (superseded positions
-            // are dead), so the chain window types identically to the
-            // ex_-projection below.
-            writeCdfSidecar(keep.select(dataColNames.map(col): _*),
-              existing.select(col("repo"), col("path"), col("ex_lsn").as("lsn"),
-                col("ex_commit").as("commit"), col("ex_deleted").as("deleted")),
-              Some(readResolvedAt(Some(prev), Some(affected))), s"$commitDir/cdf")
+            // (key-semi-joined to the batch inside writeCdfSidecar), from
+            // the same scan under the physical names. The DV live stored
+            // set IS the resolved set (superseded positions are dead), so
+            // the chain window types identically to the ex_-projection
+            // below. Its own shuffle plans with the caller's settings.
+            def caller(df: DataFrame) = org.apache.spark.sql.graft.Internals.rebind(df, cleaned.sparkSession)
+            writeCdfSidecar(caller(keep.select(dataColNames.map(col): _*)),
+              caller(scanned.select(Seq("repo", "path", "lsn", "commit", "deleted").map(col): _*)),
+              Some(caller(scanned.select(scanned.columns.map(c => col(c).as(prev.physicalOf(c))).toSeq: _*))),
+              s"$commitDir/cdf")
+          }
           else {
             keep.select(dataColNames.map(col) :+
               when(col("deleted"), "delete")
@@ -1667,7 +1706,9 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     *    files — a data path's `b=<k>` segment names its bucket) are folded
     *    into one fresh bucket-partitioned sidecar set, so `dvRows` drops by
     *    the applied count and the sidecar list resets to the fold's files
-    *    (an O(dvRows) read, bounded by the dv-fraction policy);
+    *    (an O(dvRows) read, bounded by the dv-fraction policy). When every
+    *    sidecar's bucket is selected (maybeCompact's DV fold) none
+    *    survives, and the read is skipped;
     *  - CopyOnWrite: a plain rewrite of the selected buckets (binpack of
     *    sub-split files; rarely useful — CoW buckets are always resolved).
     * The change feed is untouched (a fold is not a logical change: no
@@ -1701,6 +1742,8 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         // into one fresh sidecar set — the pass then read all DV sidecars
         val dvFold: Option[(Seq[String], Long)] =
           if (!isDv || snap.dvFiles.isEmpty) None
+          // every sidecar's bucket is folded: no dead position survives
+          else if (snap.dvFiles.forall(d => chosen(graft.sources.GraftScan.dvBucketOf(d)))) Some((Nil, 0L))
           else {
             val dvBucket = regexp_extract(col("file_path"), "/b=(\\d+)/", 1).cast("int")
             val surviving = spark.read.parquet(snap.dvFiles.map(resolvePath): _*)
@@ -1787,10 +1830,12 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * count exceeds the threshold — and folds ONLY the offending buckets
     * (`compactBuckets`), so steady-state auto-compaction under a skewed
     * write stream costs O(hot buckets), never O(table); DeletionVector
-    * folds fully when dead positions exceed `dvMaxFraction` of stored rows
-    * (the trigger is a GLOBAL fraction, so the fix is the global fold —
-    * bounds DV anti-join size AND dead-byte storage). No-op in CopyOnWrite
-    * mode (always resolved). Returns true if a compaction ran.
+    * folds every bucket when dead positions exceed `dvMaxFraction` of
+    * stored rows (the trigger is a GLOBAL fraction, so the fix is the
+    * global fold — bounds the readers' dead-position sets AND dead-byte
+    * storage), through the same scan fold: one job, one task per bucket,
+    * no shuffle. No-op in CopyOnWrite mode (always resolved). Returns true
+    * if a compaction ran.
     */
   def maybeCompact(maxFilesPerBucket: Int = 8, dvMaxFraction: Double = 0.3): Boolean = {
     val snap = currentSnapshot().getOrElse(return false)
@@ -1800,8 +1845,9 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
           .collect { case (b, fl) if fl.size > maxFilesPerBucket => b }.toSet
         if (offenders.nonEmpty) { compactBuckets(offenders); true } else false
       case ApplyMode.DeletionVector =>
-        if (snap.totalRows > 0 && snap.dvRows > snap.totalRows * dvMaxFraction) { compact(); true }
-        else false
+        if (snap.totalRows > 0 && snap.dvRows > snap.totalRows * dvMaxFraction) {
+          compactBuckets(snap.files.iterator.map(_.bucket).toSet); true
+        } else false
       case ApplyMode.CopyOnWrite => false
     }
   }
@@ -2394,6 +2440,27 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
 }
 
 object LakeTable {
+  /** The DV merge's plan settings (set on a clone of the batch's session,
+    * see mergeDv): a storage-partitioned join whose join keys (b, repo,
+    * path) are a superset of the scan's partition key `_bucket`, that
+    * shuffles only the batch side, and never broadcasts the existing side.
+    * Dynamic pruning is off: it can only reuse a broadcast, so with
+    * broadcasts off its runtime filter on the scan would plan as `true`.
+    * Adaptive execution is off: it has nothing to re-plan here (the
+    * bucket grouping fixes the partitions, no broadcast is allowed), and
+    * it would materialise the cached resolve in a job of its own before
+    * the data write reads it.
+    */
+  private[table] val dvMergeConfs: Map[String, String] = Map(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true",
+    "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" -> "false",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false",
+    "spark.sql.adaptive.enabled" -> "false")
+
   /** `spark.graft.snapshots.retain` (see autoRetain), validated */
   private[graft] def snapshotsRetain(spark: SparkSession): Option[Int] =
     GraftConf.int(spark, "spark.graft.snapshots.retain").map { keep =>

@@ -43,6 +43,24 @@ object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
+  /** A session for an engine-internal plan that needs its own SQL settings
+    * (a storage-partitioned join, broadcasts off): a clone of `spark` with
+    * `confs` set on the clone only. The caller's session, and every plan
+    * planned on it meanwhile, keeps its own settings; the clone shares the
+    * caller's SparkContext and cache.
+    */
+  def withConfs(spark: SparkSession, confs: Map[String, String]): SparkSession = {
+    val c = spark.asInstanceOf[CSparkSession].cloneSession()
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** `df`'s analyzed plan as a DataFrame of `spark` (planned and run with
+    * that session's settings)
+    */
+  def rebind(df: DataFrame, spark: SparkSession): DataFrame =
+    ofRows(spark, df.asInstanceOf[CDataset[Row]].queryExecution.analyzed)
+
   /** `private[spark]` listener-bus drain: block until queued task-end
     * events are delivered, so a per-query metrics listener reads a
     * complete set (Bench's input-metrics accounting).

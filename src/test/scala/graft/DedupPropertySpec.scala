@@ -76,8 +76,8 @@ class DedupPropertySpec extends SparkSpec {
   private def drain(p: graft.sources.GraftInputPartition): Seq[(String, String, Long, String)] = {
     val required = org.apache.spark.sql.types.StructType.fromDDL(
       "repo STRING, path STRING, lsn BIGINT, commit STRING")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
     val factory = new graft.sources.GraftReaderFactory(required, conf, false)
     val r = factory.createReader(p)
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long, String)]()

@@ -121,4 +121,34 @@ class FoldScanSpec extends SparkSpec {
       assert(langs == langs.sorted, s"${f.path} lost the clusterBy order: $langs")
     }
   }
+
+  test("a DV fold past dvMaxFraction is one job, one task per bucket, no Exchange, and drops every sidecar") {
+    val t = new LakeTable(spark, tmpDir("folddv"), defaultBuckets = 8, ApplyMode.DeletionVector)
+    val wal = ChangeLogGen.changeLog(spark,
+      GenConfig(seed = 95, events = 6000, repos = 10, filesPerRepo = 40)).persist()
+    try {
+      (0 until 3).foreach(i =>
+        t.merge(wal.where(col("lsn").between(i * 2000 + 1, (i + 1) * 2000)), "fdv", i.toLong))
+      val snap0 = t.currentSnapshot().get
+      assert(snap0.dvRows > 0 && snap0.dvFiles.nonEmpty, "fixture: live sidecars")
+      assert(snap0.files.map(_.bucket).toSet.size == 8, "fixture: files in every bucket")
+      val before = stateOf(t)
+      val tombstones = collectSorted(t.readResolved().where(col("deleted")).select("repo", "path", "lsn"))
+      var ran = false
+      val frac = snap0.dvRows.toDouble / snap0.totalRows
+      val (jobs, tasks, plans) = traced { ran = t.maybeCompact(dvMaxFraction = frac / 2) }
+      assert(ran, "the dv fraction is past the threshold")
+      assert(jobs == 1, s"a DV fold must run one job, ran $jobs")
+      assert(tasks <= 8, s"a DV fold must run one task per bucket, ran $tasks")
+      assert(plans.exists(_.contains("BatchScan")), s"the fold's write plan was not seen: $plans")
+      assert(!plans.exists(_.contains("Exchange")), s"a DV fold must not shuffle:\n${plans.mkString("\n")}")
+      val snap1 = t.currentSnapshot().get
+      assert(snap1.dvFiles.isEmpty && snap1.dvRows == 0)
+      assert(snap1.files.groupBy(_.bucket).values.forall(fs => fs.size == 1 && fs.head.sorted))
+      assert(snap1.totalRows == snap1.files.map(_.rows).sum)
+      assert(stateOf(t) == before, "a fold must not change the table")
+      assert(collectSorted(t.readResolved().where(col("deleted")).select("repo", "path", "lsn")) == tombstones,
+        "a fold keeps the tombstone winners")
+    } finally wal.unpersist()
+  }
 }

@@ -385,8 +385,8 @@ class GraftSourceSpec extends SparkSpec {
     assert(bucketFiles.size > 1)
     val required = org.apache.spark.sql.types.StructType.fromDDL(
       "repo STRING, path STRING, commit STRING, lsn BIGINT")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
     val factory = new graft.sources.GraftReaderFactory(required, conf, false)
     def drain(p: graft.sources.GraftInputPartition): Seq[Seq[Any]] = {
       val r = factory.createReader(p)
