@@ -1184,7 +1184,7 @@ object CdcQueries {
       // read back ONLY the touched groups' state, bucket-pruned like the
       // fold's own state join (a full-MV read here would drown the
       // pruning evidence in an O(MV) scan)
-      fold.mv.readResolvedAt(fold.mv.currentSnapshot(), Some(buckets))
+      fold.mv.storedAt(fold.mv.currentSnapshot(), Some(buckets))
         .where(!col("deleted") && col("repo").isin(touched: _*))
         .select(col("repo").as("g"), col("cnt"), col("total"))
         .orderBy("g")

@@ -1005,13 +1005,6 @@ object GraftScan {
     built
   }
 
-  /** one sidecar's positions as (root-relative data file, row index) pairs
-    * — the driver-side DV decode (LakeTable.applyDv below its row
-    * threshold) rides the same LRU as the executor readers
-    */
-  private[graft] def sidecarPairs(f: String, conf: Configuration): Seq[(String, Long)] =
-    sidecarPositions(f, conf).toSeq.flatMap { case (p, arr) => arr.map(p -> _) }
-
   def deadPositionsFor(dataFile: String, sidecars: Seq[String],
                        conf: Configuration): Array[Long] = {
     val mine = relPath(dataFile)

@@ -32,7 +32,7 @@ import graft.table.LakeTable
   * a per-task `DataWriter` sees only its own task's rows, so it CANNOT
   * implement the upsert contract (CoW resolve needs a union with the
   * affected buckets' existing rows + a latest-per-key window; DV needs the
-  * positional anti-join). The industry-standard shape for merge-semantics
+  * join against their live positions). The industry-standard shape for merge-semantics
   * sinks: plan the write as ordinary distributed Spark jobs (Delta Lake
   * shipped its DSv2 writes exactly this way for years). All data movement
   * stays fully distributed — nothing is collected to the driver.

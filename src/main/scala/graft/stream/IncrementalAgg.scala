@@ -211,7 +211,7 @@ final class IncrementalAgg(val mv: LakeTable, groupCol: Column,
         // buckets. The snapshot is loaded ONCE so the hash layout and the
         // file list come from the same version (rebucket-race-safe); the
         // driver-side set is bounded by nBuckets.
-        mv.readResolvedAt(snapOpt, Some(deltaBuckets(changes, snapOpt.get.nBuckets)))
+        mv.storedAt(snapOpt, Some(deltaBuckets(changes, snapOpt.get.nBuckets)))
           .where(!col("deleted"))
           .select(Seq(col("repo").as("g"), col("cnt").as("c0")) ++
           metrics.map { case (n, _) => col(n).as(s"__c_$n") } ++

@@ -51,21 +51,38 @@ class DeletionVectorSpec extends SparkSpec {
     } finally wal.unpersist()
   }
 
-  test("driver-side DV decode == distributed sidecar scan (threshold paths)") {
-    // round-8: below spark.graft.dv.driverMaxRows the anti-join's DV side
-    // is decoded in a parallel driver pass (local relation); above it the
-    // distributed parquet scan returns — both must serve the identical state
+  test("write-side readers == read() over multi-commit DVs") {
+    // truncate's replace sidecar, readChangedSince's file path, compact()
+    // and rebucket all read the stored rows through the scan, which masks
+    // every live sidecar's positions as read() does
     val wal = ChangeLogGen.changeLog(spark, cfg).persist()
     try {
-      val splits = Seq((1L, 2000L), (2001L, 4000L), (4001L, 6000L))
-      val t = applyBatches(ApplyMode.DeletionVector, tmpDir("dvDrv"), splits, wal)
-      assert(t.currentSnapshot().get.dvRows > 0, "fixture needs live DVs")
-      val viaDriver = collectSorted(t.read().selectExpr(cols: _*)) // default threshold: driver path
-      spark.conf.set("spark.graft.dv.driverMaxRows", "0") // force the distributed scan
-      try {
-        val viaScan = collectSorted(t.read().selectExpr(cols: _*))
-        assert(viaDriver == viaScan, "the two DV-apply paths must serve identical state")
-      } finally spark.conf.unset("spark.graft.dv.driverMaxRows")
+      val splits = Seq((1L, 1500L), (1501L, 3000L), (3001L, 4500L), (4501L, 6000L))
+      def build(dir: String) = applyBatches(ApplyMode.DeletionVector, tmpDir(dir), splits, wal)
+      val t = build("dvRd")
+      val snap = t.currentSnapshot().get
+      val dvCommits = snap.dvFiles.map(_.split("/dv/").head).distinct
+      assert(dvCommits.size >= 3, s"fixture: live DVs from several commits, got $dvCommits")
+      val live = collectSorted(t.read().selectExpr(cols: _*))
+      Seq(0L, 3500L).foreach { from =>
+        assert(t.filesForChangedSince(from)._1 == "files")
+        assert(collectSorted(t.readChangedSince(from).where(!col("deleted")).selectExpr(cols: _*)) ==
+          collectSorted(t.read().where(col("lsn") >= from).selectExpr(cols: _*)), s"from $from")
+      }
+      // truncate with the feed on: one delete row per live key, no other
+      t.enableChangeDataFeed()
+      val hwm = t.currentSnapshot().get.hwm
+      t.truncate()
+      val deletes = t.readChangesBetween(hwm)
+      assert(deletes.where(col("_change_type") =!= "delete").count() == 0)
+      assert(collectSorted(deletes.select("repo", "path")) == collectSorted(t.readAt(snap.version).select("repo", "path")))
+      val u = build("dvRdC")
+      u.compact()
+      assert(u.currentSnapshot().get.dvFiles.isEmpty)
+      assert(collectSorted(u.read().selectExpr(cols: _*)) == live, "compact()")
+      u.rebucket(3)
+      assert(u.currentSnapshot().get.nBuckets == 3)
+      assert(collectSorted(u.read().selectExpr(cols: _*)) == live, "rebucket")
     } finally wal.unpersist()
   }
 

@@ -191,13 +191,13 @@ class MaintenanceSpec extends SparkSpec {
       val t = new LakeTable(spark, tmpDir("split"), defaultBuckets = 4, ApplyMode.MergeOnRead)
       val wal = ChangeLogGen.changeLog(spark, cfg).persist()
       try {
+        // the merge's resolve shuffle: more write tasks than buckets, k =
+        // 16/4 = 4 → up to 4 key-disjoint files per bucket directory,
+        // strictly more than one per bucket (compact() reads through the
+        // scan, one task per bucket, and shuffles nothing)
         t.merge(wal.where(col("lsn") <= 2000), "s", 0L)
-        t.merge(wal.where(col("lsn") > 2000), "s", 1L)
         val before = stateOf(t)
-        t.compact()
         val snap = t.currentSnapshot().get
-        // more write tasks than buckets: k = 16/4 = 4 → up to 4 key-disjoint
-        // files per bucket directory, strictly more than one per bucket
         assert(snap.files.size > 4, s"expected sub-split output, got ${snap.files.size} files")
         assert(snap.files.groupBy(_.bucket).values.forall(_.size <= 4))
         // per-FILE stats: with several files per bucket, rows/totalRows must
@@ -207,10 +207,13 @@ class MaintenanceSpec extends SparkSpec {
         assert(snap.totalRows == actualRows,
           s"totalRows ${snap.totalRows} != stored rows $actualRows")
         assert(snap.files.map(_.rows).sum == actualRows)
-        assert(stateOf(t) == before, "compaction must not change table state")
         // DSv2 still serves the multi-file-per-bucket layout
         assert(collectSorted(spark.read.format("graft").load(t.root)
           .select("repo", "path", "commit", "contentSha")) == before)
+        t.merge(wal.where(col("lsn") > 2000), "s", 1L)
+        val merged = stateOf(t)
+        t.compact()
+        assert(stateOf(t) == merged, "compaction must not change table state")
       } finally wal.unpersist()
     } finally spark.conf.unset("spark.graft.resolve.minParallelism")
   }

@@ -2,8 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
 import graft.gen.{ChangeLogGen, GenConfig}
 import graft.queries.RelationalQueries
+import graft.sources.GraftInputPartition
 import graft.table.{ApplyMode, LakeTable}
 
 /** Physical-plan audits (the ".explain and iterate" contract): filters
@@ -71,6 +76,29 @@ class PlanAuditSpec extends SparkSpec {
     assert(t.merge(wal, "a", 0L).nonEmpty)
   }
 
+  test("a second merge compiles no new class (pre-pass codegen)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val wal = ChangeLogGen.changeLog(spark, GenConfig(seed = 13, events = 3000, repos = 6, filesPerRepo = 20))
+    // each batch is read back from parquet, so both merges plan the same
+    // code over different data (over a local relation the optimizer would
+    // fold the pre-pass projection away and compile nothing at all); an
+    // odd bucket count keeps the classes apart from other suites' merges
+    val dir = tmpDir("codegen-wal")
+    wal.where(col("lsn") <= 1500).write.parquet(s"$dir/b0")
+    wal.where(col("lsn") > 1500).write.parquet(s"$dir/b1")
+    val t = new LakeTable(spark, tmpDir("codegen"), defaultBuckets = 7, ApplyMode.MergeOnRead)
+    def compiled(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiled(t.merge(spark.read.parquet(s"$dir/b0"), "cg", 0L))
+    assert(first > 0, "the first merge compiles its plans")
+    val second = compiled(t.merge(spark.read.parquet(s"$dir/b1"), "cg", 1L))
+    assert(second == 0, s"the second merge compiled $second new classes")
+    assert(t.currentSnapshot().get.hwm == 3000L)
+  }
+
   test("q52 substring dedup: hash joins only, no cartesian, no UDF") {
     val p = planOf(graft.queries.TextQueries.q52SubstringDedup(spark, dir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
@@ -100,11 +128,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(bs.size < 64, s"fixture defect: delta must touch a strict subset, got ${bs.size}")
     val events = agg.eventsFor(delta)
     events.collect()
-    // every MV file the plan reads belongs to a touched bucket
+    // every MV file the plan reads belongs to a touched bucket: the state
+    // read is the DSv2 scan, so audit its planned partitions
     val snap = agg.mv.currentSnapshot().get
     def rel(p: String) = p.substring(p.lastIndexOf("/data/") + 1)
     val allowed = snap.files.filter(f => bs(f.bucket)).map(_.path).toSet
-    val scanned = events.inputFiles.filter(_.contains(agg.mv.root)).map(rel).toSet
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    val scanned = nodes(events.queryExecution.executedPlan)
+      .collect { case b: BatchScanExec => b.inputPartitions }.flatten
+      .collect { case p: GraftInputPartition => p.files }.flatten
+      .filter(_.contains(agg.mv.root)).map(rel).toSet
     assert(scanned.nonEmpty, "the state join must read SOME MV state")
     assert(scanned.subsetOf(allowed),
       s"state join read outside the delta buckets: ${scanned.diff(allowed)}")

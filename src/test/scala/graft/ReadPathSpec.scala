@@ -7,14 +7,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.gen.{ChangeLogGen, GenConfig}
 import graft.sources.GraftInputPartition
-import graft.table.{ApplyMode, LakeTable, Snapshot}
+import graft.table.{ApplyMode, FileEntry, LakeTable, Snapshot}
 
-/** Every LakeTable live read (`read`, `readAt`, `readLive`, `readResolved`)
-  * is a DSv2 scan. Each case compares it, by sorted rows, against the
-  * DataFrame formulas the reads used before — `LakeTable.latestPerKey` over
-  * the raw files on MergeOnRead, the positional anti-join against the DV
-  * sidecars on DeletionVector — recomputed here, and checks that the
-  * columns come in the snapshot's logical-schema order.
+/** Every read of a snapshot's data files is a DSv2 scan: the live reads
+  * (`read`, `readAt`, `readLive`, `readResolved`) and the write side's
+  * (`storedAt`, `readChangedSince`'s file path). Each case compares it, by
+  * sorted rows, against the DataFrame formulas the reads used before —
+  * `LakeTable.latestPerKey` over the raw files on MergeOnRead, the
+  * positional anti-join against the DV sidecars on DeletionVector —
+  * recomputed here, and checks the column order.
   */
 class ReadPathSpec extends SparkSpec {
 
@@ -22,11 +23,26 @@ class ReadPathSpec extends SparkSpec {
 
   private def wal = ChangeLogGen.changeLog(spark, cfg)
 
+  /** the stored rows of `files` as spark's parquet source reads them,
+    * under `s`'s physical schema
+    */
+  private def rawOf(t: LakeTable, s: Snapshot, files: Seq[FileEntry]): DataFrame =
+    spark.read.schema(StructType.fromDDL(s.schemaDdl)).parquet(files.map(f => t.resolvePath(f.path)): _*)
+
   /** the pre-DSv2 read formulas over `s`'s raw files */
   private def oldFormula(t: LakeTable, s: Snapshot, buckets: Option[Set[Int]] = None,
                          keepDeleted: Boolean = false): DataFrame = {
-    val files = s.files.filter(f => buckets.forall(_(f.bucket))).map(f => t.resolvePath(f.path))
-    val raw = spark.read.schema(StructType.fromDDL(s.schemaDdl)).parquet(files: _*)
+    val resolved = oldResolve(t, s, s.files.filter(f => buckets.forall(_(f.bucket))))
+    val out = if (keepDeleted) resolved else resolved.where(!col("deleted")).drop("deleted")
+    out.select(out.columns.map(c => col(c).as(s.logicalOf(c))).toSeq: _*)
+  }
+
+  /** the old write-side resolve (`readRawAt` + latestPerKey / applyDv):
+    * `files` resolved per mode, physical names in schema order, tombstones
+    * kept
+    */
+  private def oldResolve(t: LakeTable, s: Snapshot, files: Seq[FileEntry]): DataFrame = {
+    val raw = rawOf(t, s, files)
     def rel(c: org.apache.spark.sql.Column) = regexp_replace(c, "^.*/data/", "data/")
     val resolved = s.mode match {
       case "mor" => LakeTable.latestPerKey(raw)
@@ -39,8 +55,7 @@ class ReadPathSpec extends SparkSpec {
           .drop("fp", "ri")
       case _ => raw
     }
-    val out = if (keepDeleted) resolved else resolved.where(!col("deleted")).drop("deleted")
-    out.select(out.columns.map(c => col(c).as(s.logicalOf(c))).toSeq: _*)
+    resolved.select(raw.columns.map(c => col(s"`$c`")).toSeq: _*)
   }
 
   /** same rows as the old formula, columns in logical-schema order */
@@ -147,6 +162,79 @@ class ReadPathSpec extends SparkSpec {
       assertSame(got, t, t.currentSnapshot().get, keepDeleted = true)
       // pruning `deleted` away must not change the row count
       assert(got.select("repo").count() == got.collect().length, m.toString)
+    }
+  }
+
+  /** a `mode` table whose column `ref` (stored as `branch`) was added
+    * after two commits — the older files null-backfill it — and then
+    * renamed
+    */
+  private def evolved(m: ApplyMode.Value, name: String): LakeTable = {
+    val t = new LakeTable(spark, tmpDir(name), defaultBuckets = 4, m)
+    val w = wal
+    t.merge(w.where(col("lsn") <= 1500), name, 0L)
+    t.merge(w.where(col("lsn").between(1501L, 3000L)), name, 1L)
+    t.addColumns(Seq(StructField("branch", StringType)))
+    t.merge(w.where(col("lsn") > 3000).withColumn("branch", lit("main")), name, 2L)
+    t.renameColumn("branch", "ref")
+    val s = t.currentSnapshot().get
+    assert(s.physicalOf("ref") == "branch")
+    assert(m != ApplyMode.DeletionVector || s.dvFiles.nonEmpty, "fixture must have live deletion vectors")
+    t
+  }
+
+  private val modes = Seq(ApplyMode.CopyOnWrite, ApplyMode.MergeOnRead, ApplyMode.DeletionVector)
+
+  test("storedAt == old raw + resolve formula, physical names") {
+    modes.foreach { m =>
+      val t = evolved(m, s"rpw$m")
+      val s = t.currentSnapshot().get
+      val phys = StructType.fromDDL(s.schemaDdl).fieldNames.toSeq
+      val got = t.storedAt(Some(s), None)
+      assert(got.columns.toSeq == phys, s"$m: columns ${got.columns.toSeq} != $phys")
+      val rows = collectSorted(got)
+      assert(rows == collectSorted(oldResolve(t, s, s.files)), m.toString)
+      // tombstone winners kept; the added column backfills older files
+      assert(got.where(col("deleted")).count() > 0, s"$m: fixture must hold tombstone winners")
+      assert(got.where(col("branch").isNull).count() > 0 && got.where(col("branch") === "main").count() > 0,
+        s"$m: the added column must be null on older files and set on newer ones")
+      // a bucket subset reads exactly those buckets' rows
+      val bs = Set(0, 2)
+      assert(collectSorted(t.storedAt(Some(s), Some(bs))) ==
+        collectSorted(oldResolve(t, s, s.files.filter(f => bs(f.bucket)))), m.toString)
+    }
+  }
+
+  test("chain view: every stored version, unresolved, unmasked") {
+    Seq(ApplyMode.MergeOnRead, ApplyMode.DeletionVector).foreach { m =>
+      val t = evolved(m, s"rpchain$m")
+      val s = t.currentSnapshot().get
+      val chain = t.storedAt(Some(s), None, chain = true)
+      assert(chain.columns.toSeq == StructType.fromDDL(s.schemaDdl).fieldNames.toSeq)
+      val rows = collectSorted(chain)
+      assert(rows.size.toLong == s.totalRows, s"$m: the chain serves every stored row")
+      assert(rows == collectSorted(rawOf(t, s, s.files)), m.toString)
+      assert(rows.size > t.storedAt(Some(s), None).count(), s"$m: fixture must hold superseded versions")
+    }
+  }
+
+  test("readChangedSince file path == old formula and its files") {
+    modes.foreach { m =>
+      val t = evolved(m, s"rpcs$m")
+      val s = t.currentSnapshot().get
+      val from = 2000L
+      val (kind, files) = t.filesForChangedSince(from)
+      assert(kind == "files")
+      val got = t.readChangedSince(from)
+      assert(got.columns.toSeq == s.logicalSchema.fieldNames.toSeq, m.toString)
+      val old = oldResolve(t, s, s.files.filter(_.maxLsn >= from)).where(col("lsn") >= from)
+      val rows = collectSorted(got)
+      assert(rows.nonEmpty, m.toString)
+      assert(rows == collectSorted(old), m.toString)
+      val planned = partitions(got).flatMap(_.files).toSet
+      // (copy-on-write rewrites every bucket this fixture touches)
+      assert(m == ApplyMode.CopyOnWrite || files.size < s.files.size, s"$m: fixture must skip files by lsn")
+      assert(planned == files.toSet, s"$m: planned ${planned.size} files, expected ${files.size}")
     }
   }
 }
