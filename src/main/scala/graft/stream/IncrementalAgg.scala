@@ -306,7 +306,9 @@ final class IncrementalAgg(val mv: LakeTable, groupCol: Column,
 
   /** Continuous maintenance: tail the upstream table's typed feed and fold
     * every micro-batch. The feed must carry before-images from the cursor
-    * on (enable `cdf = 'full'` before the MV's start point).
+    * on (enable `cdf = 'full'` before the MV's start point). The query runs
+    * on a clone of `spark` (`IngestStream.tailSession`), so it is followed
+    * through the returned handle, not the caller's `spark.streams`.
     */
   def stream(spark: SparkSession, fromRoot: String, cpId: String, checkpointDir: String,
              maxLsnsPerTrigger: Option[Long] = None,
@@ -340,7 +342,7 @@ final class IncrementalAgg(val mv: LakeTable, groupCol: Column,
         s"IncrementalAgg.stream: a fresh checkpoint would re-fold from lsn 0 into the " +
           s"existing MV state at ${mv.root} — reuse the original checkpoint or rebuild the MV")
     }
-    val reader = spark.readStream.format("graft").option("changeTypes", "true")
+    val reader = IngestStream.tailSession(spark).readStream.format("graft").option("changeTypes", "true")
     maxLsnsPerTrigger.foreach(n => reader.option("maxLsnsPerTrigger", n.toString))
     val src = reader.load(fromRoot)
     val writer = src.writeStream

@@ -1,7 +1,9 @@
 package graft.stream
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.graft.Internals
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Schemas
@@ -15,31 +17,55 @@ import graft.table.LakeTable
   * knob, config/analysis_config.yaml:62). Each micro-batch is applied via
   * `foreachBatch { merge }`: per-(repo,path) LSN-ordered dedup, bucket-pruned
   * upsert, idempotent (checkpointId, batchId) commit — exactly-once across
-  * restarts. Watermarking contract (SURVEY.md §2.10): events are admitted by
-  * the max-LSN guard inherent to the merge, so "late" (lower-LSN) events are
-  * correct no-ops rather than corruption; the ledger counts them implicitly
-  * via bucket row deltas.
+  * restarts. Lateness (SURVEY.md §2.10): events are admitted by the max-LSN
+  * guard inherent to the merge, so "late" (lower-LSN) events are correct
+  * no-ops rather than corruption, and the ledger's staleRows counts them.
+  * No stateful operator runs, so the tail declares no event-time watermark.
   */
 object IngestStream {
+
+  /** The session a foreachBatch tail runs on: a clone of `spark` whose
+    * checkpoint logs (offsets, sources, commits) go through Spark's
+    * FileSystem-based manager instead of the default FileContext one. Its
+    * create + rename writes the same files without the link-status probes
+    * that, on a local filesystem without Hadoop's native IO, fork a
+    * `readlink` per call on the stream thread. Exactly-once does not rest
+    * on the log's rename: a replayed batch is a no-op at the table's
+    * (cpId, batchId) commit. The caller's session keeps its settings; a
+    * query started here is not in the caller's `spark.streams`, so its
+    * returned `StreamingQuery` handle is how a caller follows it.
+    *
+    * A session that starts a query registers a listener bus on the
+    * SparkContext for good, so one clone is kept per caller session and
+    * reused while the caller's conf is what it was cloned from; a new
+    * clone per start would add a listener per drain.
+    */
+  private[graft] def tailSession(spark: SparkSession): SparkSession = tails.synchronized {
+    val conf = spark.conf.getAll
+    tails.get(spark) match {
+      case (c, tail) if c == conf => tail
+      case _ =>
+        val tail = Internals.withConfs(spark, Map(SQLConf.STREAMING_CHECKPOINT_FILE_MANAGER_CLASS.parent.key ->
+          classOf[FileSystemBasedCheckpointFileManager].getName))
+        tails.put(spark, (conf, tail))
+        tail
+    }
+  }
+
+  /** caller session -> (its conf when cloned, the tail session) */
+  private val tails = new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
 
   /** Start the ingest stream. `cpId` identifies the stream for exactly-once;
     * `checkpointDir` is the Spark streaming checkpoint (offsets + commits).
     */
   def start(spark: SparkSession, walDir: String, table: LakeTable, cpId: String,
             checkpointDir: String, maxFilesPerTrigger: Int = 4,
-            watermarkDelay: String = "10 minutes",
             autoCompactFilesPerBucket: Int = 16,
-            onBatch: (Long, Seq[LakeTable.BucketStats]) => Unit = (_, _) => ()): StreamingQuery = {
-    val src = spark.readStream
+            onBatch: (Long, Seq[LakeTable.BucketStats]) => Unit = (_, _) => ()): StreamingQuery =
+    tailSession(spark).readStream
       .schema(Schemas.changeEvent)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(walDir)
-    // event-time watermark contract (SURVEY.md §2.10): correctness does
-    // NOT depend on it (the merge's max-LSN guard makes stale events
-    // no-ops in any order) — it declares the expected lateness bound,
-    // and the ledger's staleRows counts what actually arrived late.
-    val marked = if (watermarkDelay.nonEmpty) src.withWatermark("ts", watermarkDelay) else src
-    marked
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
@@ -53,7 +79,6 @@ object IngestStream {
         onBatch(batchId, stats)
       }
       .start()
-  }
 
   /** Run the whole available WAL synchronously (batch-style driver for
     * tests/bench): start, await completion, stop.

@@ -17,8 +17,15 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * still all-or-nothing per object since the temp object is complete before
   * the copy) — the standard lake-format caveat (Iceberg/Delta document the
   * same; a production S3 deployment fronts commits with a catalog lock).
+  *
+  * `link(newName, existing)` is `atomicCreate`'s local publish step (a
+  * hard link); specs pass a failing one to drive the Hadoop fallback.
   */
-final class Fs(@transient private val conf: Configuration) extends Serializable {
+final class Fs private[graft] (@transient private val conf: Configuration,
+                               link: (java.nio.file.Path, java.nio.file.Path) => Unit)
+  extends Serializable {
+
+  def this(conf: Configuration) = this(conf, (l, e) => { java.nio.file.Files.createLink(l, e); () })
 
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
@@ -152,32 +159,16 @@ final class Fs(@transient private val conf: Configuration) extends Serializable 
   /** write-temp + atomic rename WITHOUT overwrite — the commit-exclusivity
     * primitive (Delta's HDFS LogStore shape): returns true iff THIS writer
     * created `path`; false if it already existed (a concurrent writer won).
+    * Local paths publish by hard link (`linkCreate`); a local mount that
+    * cannot hard-link, and every other scheme, arbitrate through Hadoop.
     * Fallback for schemes without an AbstractFileSystem binding: exclusive
     * `create(path, overwrite = false)` — still exclusive, with a
     * documented partially-visible window no concurrent test scheme hits.
     */
   def atomicCreate(path: String, content: String): Boolean = {
     val p = new Path(path)
-    localPath(p) match {
-      case Some(lp) =>
-        if (java.nio.file.Files.exists(lp)) return false
-        val dir = lp.getParent
-        if (dir != null) java.nio.file.Files.createDirectories(dir)
-        val tmp = dir.resolve(
-          s"${lp.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-        java.nio.file.Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-        // hard-link publish: POSIX link(2) fails EEXIST atomically, so of N
-        // racing writers exactly one creates `lp` — and the full content is
-        // visible the instant the name is (no torn reads). This is atomic
-        // SERVER-side (kernel), unlike the FileContext check-then-rename
-        // the non-local fallback uses.
-        try {
-          java.nio.file.Files.createLink(lp, tmp)
-          dropCrc(lp)
-          return true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => return false
-        } finally java.nio.file.Files.deleteIfExists(tmp)
+    localPath(p).flatMap(linkCreate(_, content)) match {
+      case Some(created) => return created
       case None => ()
     }
     val f = fs(p)
@@ -208,6 +199,31 @@ final class Fs(@transient private val conf: Configuration) extends Serializable 
           }
       }
     }
+  }
+
+  /** Hard-link publish of a local file: POSIX link(2) fails EEXIST
+    * atomically, so of N racing writers exactly one creates `lp` — and the
+    * full content is visible the instant the name is (no torn reads). This
+    * is atomic in the kernel, unlike the FileContext check-then-rename the
+    * Hadoop path uses. Some(created) when the link decided; None when the
+    * mount cannot hard-link (FUSE, CIFS, some bind mounts), so the caller
+    * arbitrates through Hadoop instead of failing the commit.
+    */
+  private def linkCreate(lp: java.nio.file.Path, content: String): Option[Boolean] = {
+    if (java.nio.file.Files.exists(lp)) return Some(false)
+    val dir = lp.getParent
+    if (dir != null) java.nio.file.Files.createDirectories(dir)
+    val tmp = dir.resolve(
+      s"${lp.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    java.nio.file.Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    try {
+      link(lp, tmp)
+      dropCrc(lp)
+      Some(true)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => Some(false)
+      case _: UnsupportedOperationException | _: java.nio.file.FileSystemException => None
+    } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
   def delete(path: String): Boolean = { val p = new Path(path); fs(p).delete(p, false) }

@@ -677,7 +677,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
       if (isMor) incoming
       else storedAt(snap, Some(affectedAll)).withColumn("b", bCol)
         .unionByName(incoming, allowMissingColumns = true)
-    val resolved = bucketResolve(all, math.max(if (isMor) nBuckets else affectedAll.size, 1))
+    val resolved = bucketResolve(all, if (isMor) 0 until nBuckets else affectedAll.toSeq, nBuckets)
     dataWrite(resolved).parquet(p.dir)
 
     // per-FILE (rows, min/max lsn/repo) from the parquet FOOTERS of the
@@ -1473,17 +1473,45 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
   private def resolveMinParallelism: Int =
     GraftConf.int(spark, "spark.graft.resolve.minParallelism").getOrElse(spark.sparkContext.defaultParallelism)
 
-  /** Tasks of a shuffle by `b` onto `buckets` buckets. A table MUCH wider
-    * than the cluster (e.g. a 512-bucket MV state fold on a 32-slot box)
-    * does not need one task per bucket: hash-partitioning by `b` into
-    * fewer partitions keeps every bucket's rows in exactly one task (file
-    * granularity and the key-disjoint per-commit-file invariant survive —
-    * FileFormatWriter still splits by the `b` partition value), while the
-    * task count stays proportional to the CLUSTER, not the layout (the cap
-    * is parallelism-derived, never a constant).
+  /** Tasks of a shuffle onto `buckets` buckets: one wave of the cluster.
+    * A table wider than the cluster (an 8-bucket table on 4 cores, a
+    * 512-bucket MV state fold on a 32-slot box) does not need one task per
+    * bucket: each bucket's rows stay in exactly one task (`toTaskWave`), so
+    * file granularity and the key-disjoint per-commit-file invariant
+    * survive (FileFormatWriter still splits by the `b` partition value).
+    * A second wave would only pay each task's fixed launch and
+    * deserialize cost again. The cap is parallelism-derived, never a
+    * constant.
     */
   private def bucketParts(buckets: Int): Int =
-    math.min(buckets, math.max(1, 2 * math.max(1, resolveMinParallelism)))
+    math.min(buckets, math.max(1, resolveMinParallelism))
+
+  /** `df` (rows carrying their bucket id `b`) shuffled onto one task wave
+    * of `bucketParts(ids.size)` tasks, with bucket `ids(i)` in task
+    * `i % tasks`; every other bucket of the `nBuckets` layout goes to the
+    * first task. Hashing `b` itself piles buckets up (an 8-bucket table on
+    * 4 tasks hashes as 4/3/1/0 buckets per task, so half the batch would
+    * run in one task), so the shuffle key `__task` is, per task, the
+    * smallest int whose Spark hash picks that task. It is a function of
+    * `b`: a window partitioned by (b, __task, ...) groups exactly as by b,
+    * and the shuffle satisfies it with no second Exchange.
+    */
+  private def toTaskWave(df: DataFrame, ids: Seq[Int], nBuckets: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val parts = bucketParts(math.max(ids.size, 1))
+    val taskOf = HashPartitioning(Seq(BoundReference(0, IntegerType, nullable = false)), parts)
+      .partitionIdExpression
+    val rep = Iterator.from(0).scanLeft(Map.empty[Int, Int]) { (m, k) =>
+      val t = taskOf.eval(InternalRow(k)).asInstanceOf[Int]
+      if (m.contains(t)) m else m.updated(t, k)
+    }.find(_.size == parts).get
+    val task = ids.sorted.zipWithIndex.map { case (b, i) => b -> rep(i % parts) }.toMap
+    val keys = (0 until nBuckets).map(b => task.getOrElse(b, rep(0))).toArray
+    df.withColumn("__task", element_at(typedLit(keys), col("b") + 1))
+      .repartition(parts, col("__task"))
+  }
 
   /** pure-function-of-key salt: rows of one key always share it, so any
     * window partitioned by (b, __salt, repo, path) groups exactly as
@@ -1494,12 +1522,13 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
   private def saltCol(k: Int) =
     pmod(xxhash64(lit(0x5aL), col("repo"), col("path")), lit(k.toLong)).cast("int")
 
-  /** The single-shuffle resolve: repartition by bucket, then latest-per-key
-    * as a row_number window over (b, repo, path). HashPartitioning(b)
-    * already satisfies ClusteredDistribution(b, repo, path) — b is a pure
-    * function of the key — so Catalyst plans NO second exchange: one
-    * shuffle moves each payload byte exactly once, straight into its
-    * bucket-aligned output file. (The previous plan shuffled content twice:
+  /** The single-shuffle resolve: shuffle the rows of buckets `ids` (of an
+    * `nBuckets` layout) onto one task wave (`toTaskWave`), then
+    * latest-per-key as a row_number window over (b, __task, repo, path).
+    * HashPartitioning(__task) already satisfies that ClusteredDistribution
+    * — __task is a function of b, and b of the key — so Catalyst plans NO
+    * second exchange: one shuffle moves each payload byte exactly once,
+    * straight into its bucket-aligned output file. (The previous plan shuffled content twice:
     * hash-agg dedup on (repo, path), then repartition on b for the write.)
     *
     * When the cluster has more slots than `buckets`, each bucket's group is
@@ -1509,24 +1538,25 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * cluster, and the write still lands ≤ k key-disjoint files per bucket
     * directory.
     *
-    * SORT ORDER IS PART OF THE FORMAT: the salt sits LAST in the window
-    * partition keys, so the window's required child sort is (b, repo,
-    * path, salt, lsn desc, ...) — every task's rows, and therefore every
-    * written file, come out ordered by (repo, path) within its bucket at
+    * SORT ORDER IS PART OF THE FORMAT: b leads and the salt sits LAST in
+    * the window partition keys, so the window's required child sort is
+    * (b, repo, path, salt, lsn desc, ...) — every task's rows, and
+    * therefore every written file, come out ordered by (repo, path) within its bucket at
     * ZERO extra cost (the window had to sort anyway; FileFormatWriter's
     * required ordering [b] is a satisfied prefix, so no re-sort). Sorted
     * files are marked in their FileEntry and let the DSv2 MOR resolve
     * reader stream a k-way merge in O(files) memory instead of an O(live
     * keys) hash map (round-3 VERDICT "Wrong" #3).
     */
-  private def bucketResolve(all: DataFrame, buckets: Int): DataFrame = {
+  private def bucketResolve(all: DataFrame, ids: Seq[Int], nBuckets: Int): DataFrame = {
+    val buckets = math.max(ids.size, 1)
     val k = subSplitFactor(buckets)
     if (k == 1) {
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("b", "repo", "path")
+        .partitionBy("b", "__task", "repo", "path")
         .orderBy(col("lsn").desc, col("commit").desc)
-      all.repartition(bucketParts(buckets), col("b"))
-        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
+      toTaskWave(all, ids, nBuckets)
+        .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn", "__task")
     } else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("b", "repo", "path", "__salt")
@@ -1715,7 +1745,8 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         val newB = pmod(xxhash64(col("repo"), col("path")), lit(newBuckets.toLong)).cast("int")
         val stored = storedAt(Some(snap), None).withColumn("b", newB)
         val grouped =
-          if (newBuckets == snap.nBuckets) stored else stored.repartition(bucketParts(newBuckets), col("b"))
+          if (newBuckets == snap.nBuckets) stored
+          else toTaskWave(stored, 0 until newBuckets, newBuckets).drop("__task")
         val clusterPhys =
           if (clusterBy.nonEmpty) clusterBy.map(snap.physicalOf) else snap.clusterBy
         val entries = writeSorted(grouped, clusterPhys, p.dir)
@@ -1767,7 +1798,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         val nBuckets = p.head.nBuckets
         val cleaned = enforceConstraints(clean(events, snap), snap)
         val bCol = pmod(xxhash64(col("repo"), col("path")), lit(nBuckets.toLong)).cast("int")
-        val resolved = bucketResolve(cleaned.withColumn("b", bCol), nBuckets)
+        val resolved = bucketResolve(cleaned.withColumn("b", bCol), 0 until nBuckets, nBuckets)
         dataWrite(resolved).parquet(p.dir)
         val perFile = fileStats(p.dir)
         val stats = bucketStatsOf(perFile)

@@ -50,6 +50,45 @@ class CrashResumeSpec extends SparkSpec {
       collectSorted(scratch.read().selectExpr(cols: _*)))
   }
 
+  test("a checkpoint written with an event-time watermark resumes without one and converges") {
+    val walDir = tmpDir("walwm")
+    ChangeLogGen.writeWal(spark, cfg, walDir, segments = 12)
+    val t = new LakeTable(spark, tmpDir("twm"), defaultBuckets = 8, ApplyMode.CopyOnWrite)
+    val cpDir = tmpDir("cpwm")
+    // the tail's earlier shape: a watermark on `ts` that no stateful
+    // operator consumed; the third merge commits, then the query dies
+    // before Spark logs the batch as committed
+    var merged = 0
+    val q = spark.readStream.schema(graft.model.Schemas.changeEvent)
+      .option("maxFilesPerTrigger", 2).parquet(walDir)
+      .withWatermark("ts", "10 minutes")
+      .writeStream.outputMode("update")
+      .option("checkpointLocation", cpDir)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        t.merge(b, "wm", id)
+        merged += 1
+        if (merged >= 3) sys.error("injected crash")
+      }
+      .start()
+    intercept[StreamingQueryException](q.awaitTermination())
+    assert(t.currentSnapshot().get.committed("wm") == graft.table.CommitState(2L, Nil))
+
+    var skipped = Seq.empty[Long]
+    IngestStream.runAvailable(spark, walDir, t, "wm", cpDir, maxFilesPerTrigger = 2,
+      onBatch = (id, stats) => if (stats.isEmpty) skipped :+= id)
+    val snap = t.currentSnapshot().get
+    assert(skipped == Seq(2L), "only the crashed batch is redelivered, and it is skipped")
+    assert(snap.committed("wm") == graft.table.CommitState(5L, Nil), "all 6 batches committed exactly once")
+    assert(t.ledger.entries().size == 6)
+    assert(snap.hwm == cfg.events)
+    val scratch = new LakeTable(spark, tmpDir("scrwm"), defaultBuckets = 8, ApplyMode.CopyOnWrite)
+    scratch.merge(spark.read.parquet(walDir), "scr", 0L)
+    val cols = Seq("repo", "path", "commit", "lang", "contentSha", "content")
+    assert(collectSorted(t.read().selectExpr(cols: _*)) ==
+      collectSorted(scratch.read().selectExpr(cols: _*)))
+  }
+
   test("resume with NOTHING new to process is a clean no-op") {
     val walDir = tmpDir("wal2")
     ChangeLogGen.writeWal(spark, GenConfig(seed = 6, events = 1000, repos = 5, filesPerRepo = 8), walDir, 2)

@@ -183,6 +183,31 @@ class FsMetadataSpec extends SparkSpec {
     assert(c.absorb(2L) == c, "re-commit is a no-op")
   }
 
+  test("atomicCreate falls back to Hadoop arbitration when the mount cannot hard-link") {
+    val conf = spark.sessionState.newHadoopConf()
+    val failures: Seq[(String, (java.nio.file.Path, java.nio.file.Path) => Unit)] = Seq(
+      "unsupported" -> ((_, _) => throw new UnsupportedOperationException("no hard links here")),
+      "fs-error" -> ((l, _) => throw new java.nio.file.FileSystemException(l.toString, null, "Operation not permitted")))
+    failures.foreach { case (name, link) =>
+      val fs = new Fs(conf, link)
+      val dir = tmpDir(s"nolink-$name")
+      (1 to 5).foreach { round =>
+        val target = s"$dir/commit-$round.json"
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+        try {
+          val racers = Seq("a", "b").map(w => pool.submit(() => { start.await(); w -> fs.atomicCreate(target, w) }))
+          start.countDown()
+          val results = racers.map(_.get())
+          assert(results.count(_._2) == 1, s"$name round $round: exactly one creator wins, got $results")
+          assert(fs.readString(target) == results.find(_._2).get._1, "the winner's content is published")
+        } finally pool.shutdown()
+        assert(!fs.atomicCreate(target, "late"), "an existing file is never replaced")
+      }
+      assert(new java.io.File(dir).list().forall(n => !n.endsWith(".tmp")), "no temp file is left behind")
+    }
+  }
+
   test("JSON round-trips 64-bit values above 2^53 exactly") {
     val hwm = (1L << 60) + 3L
     val s = Snapshot(1, "a BIGINT", 4,

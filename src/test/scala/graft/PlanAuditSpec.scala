@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.execution.SparkPlan
@@ -9,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import graft.gen.{ChangeLogGen, GenConfig}
 import graft.queries.RelationalQueries
 import graft.sources.GraftInputPartition
-import graft.table.{ApplyMode, LakeTable}
+import graft.table.{ApplyMode, FileEntry, LakeTable}
 
 /** Physical-plan audits (the ".explain and iterate" contract): filters
   * reach the parquet scan, projections prune columns, small dims broadcast,
@@ -76,6 +77,91 @@ class PlanAuditSpec extends SparkSpec {
     assert(t.merge(wal, "a", 0L).nonEmpty)
   }
 
+  /** a physical plan's nodes, through adaptive plans and query stages */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case o => o.children.flatMap(nodes)
+  })
+
+  /** Run `body` (one merge) and return the task count of every stage that
+    * wrote output, the new snapshot's files, and the Exchanges in the
+    * executed write plan.
+    */
+  private def auditWrite(t: LakeTable)(body: => Unit): (Seq[Int], Seq[FileEntry], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
+    val tl = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val out = Option(e.taskMetrics).map(_.outputMetrics.recordsWritten).getOrElse(0L)
+        tasks.merge(e.stageId, (1, out), (a, b) => (a._1 + b._1, a._2 + b._2))
+      }
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec])) writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val before = t.currentSnapshot().map(_.files.map(_.path).toSet).getOrElse(Set.empty)
+    spark.sparkContext.addSparkListener(tl)
+    spark.listenerManager.register(ql)
+    try body finally {
+      org.apache.spark.sql.graft.Internals.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(tl)
+      spark.listenerManager.unregister(ql)
+    }
+    import scala.jdk.CollectionConverters._
+    val stages = tasks.asScala.values.collect { case (n, out) if out > 0 => n }.toSeq
+    assert(writes.size == 1, s"one write per merge, got ${writes.size}")
+    val exchanges = nodes(writes.peek()).count(_.isInstanceOf[ShuffleExchangeLike])
+    (stages, t.currentSnapshot().get.files.filterNot(f => before(f.path)), exchanges)
+  }
+
+  /** every file's (repo, path) in file order are strictly increasing */
+  private def keyOrdered(t: LakeTable, f: FileEntry): Boolean = {
+    val keys = spark.read.parquet(s"${t.root}/${f.path}").select("repo", "path").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    keys.nonEmpty && keys.zip(keys.drop(1)).forall { case (a, b) => Ordering[(String, String)].lt(a, b) }
+  }
+
+  /** the write task (the number in the file's `part-NNNNN` name) per new file */
+  private def writeTask(f: FileEntry): String = f.path.split('/').last.split('-')(1)
+
+  private def checkOneWave(t: LakeTable, wal: DataFrame, buckets: Int, perTask: Int): Unit = {
+    t.merge(wal.where(col("lsn") <= 2000), "wave", 0L)
+    val batch = wal.where(col("lsn") > 2000 && col("lsn") <= 3000)
+    val affected = batch.select(pmod(xxhash64(col("repo"), col("path")), lit(buckets.toLong)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    assert(affected.size == buckets, s"fixture defect: the batch must touch all $buckets buckets")
+    val (stages, files, exchanges) = auditWrite(t)(t.merge(batch, "wave", 1L))
+    assert(stages.size == 1 && stages.head <= 4, s"write stage tasks: $stages")
+    assert(exchanges == 1, "the write plan shuffles once")
+    assert(files.map(_.bucket).sorted == affected.toSeq.sorted, "exactly one new file per affected bucket")
+    assert(files.forall(_.sorted) && files.forall(keyOrdered(t, _)), "every new file is key-ordered")
+    assert(files.groupBy(writeTask).values.map(_.size).toSeq == Seq.fill(4)(perTask),
+      s"files per write task: ${files.groupBy(writeTask).view.mapValues(_.size).toMap}")
+  }
+
+  test("the MoR resolve writes in one wave: 8 buckets on local[4] = 4 tasks of 2 files") {
+    val wal = ChangeLogGen.changeLog(spark, GenConfig(seed = 41, events = 3000, repos = 8, filesPerRepo = 40))
+    checkOneWave(new LakeTable(spark, tmpDir("wave8"), defaultBuckets = 8, ApplyMode.MergeOnRead), wal, 8, 2)
+  }
+
+  test("the MoR resolve writes in one wave: 32 buckets on local[4] = 4 tasks of 8 files") {
+    val wal = ChangeLogGen.changeLog(spark, GenConfig(seed = 42, events = 3000, repos = 8, filesPerRepo = 80))
+    checkOneWave(new LakeTable(spark, tmpDir("wave32"), defaultBuckets = 32, ApplyMode.MergeOnRead), wal, 32, 8)
+  }
+
+  test("the CoW resolve writes in one wave: 8 buckets on local[4] = 4 tasks of 2 files") {
+    val wal = ChangeLogGen.changeLog(spark, GenConfig(seed = 43, events = 3000, repos = 8, filesPerRepo = 40))
+    checkOneWave(new LakeTable(spark, tmpDir("wavecow"), defaultBuckets = 8, ApplyMode.CopyOnWrite), wal, 8, 2)
+  }
+
   test("a second merge compiles no new class (pre-pass codegen)") {
     import org.apache.spark.metrics.source.CodegenMetrics
     val wal = ChangeLogGen.changeLog(spark, GenConfig(seed = 13, events = 3000, repos = 6, filesPerRepo = 20))
@@ -133,11 +219,6 @@ class PlanAuditSpec extends SparkSpec {
     val snap = agg.mv.currentSnapshot().get
     def rel(p: String) = p.substring(p.lastIndexOf("/data/") + 1)
     val allowed = snap.files.filter(f => bs(f.bucket)).map(_.path).toSet
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case o => o.children.flatMap(nodes)
-    })
     val scanned = nodes(events.queryExecution.executedPlan)
       .collect { case b: BatchScanExec => b.inputPartitions }.flatten
       .collect { case p: GraftInputPartition => p.files }.flatten
