@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.gen.{ChangeLogGen, GenConfig}
 import graft.model.LangRules
-import graft.table.{ApplyMode, LakeTable}
+import graft.table.{ApplyMode, ChangeFeed, LakeTable}
 
 /** The engine's own end-to-end queries: generate the seeded WAL fixture,
   * apply it through the real merge path in several batches, and expose the
@@ -274,7 +274,7 @@ object CdcQueries {
     val t = smLakeMode(s, ApplyMode.MergeOnRead, "sm_mor", "smmor")
     val cp = java.nio.file.Files.createTempDirectory("q50cp").toString
     val q = s.readStream.format("graft").option("changeTypes", "true").load(t.root)
-      .select(col("repo"), col("path"), col("lsn"), col("commit"), col("_change_type"))
+      .select(col("repo"), col("path"), col("lsn"), col("commit"), col(ChangeFeed.TypeCol))
       .writeStream.format("memory").queryName("q50_sink")
       .option("checkpointLocation", cp)
       .trigger(Trigger.AvailableNow()).start()
@@ -296,7 +296,7 @@ object CdcQueries {
     require(t.currentSnapshot().exists(_.cdfFiles.nonEmpty), "q51: sidecars must exist")
     val cp = java.nio.file.Files.createTempDirectory("q51cp").toString
     val q = s.readStream.format("graft").option("changeTypes", "true").load(t.root)
-      .select(col("repo"), col("path"), col("lsn"), col("commit"), col("_change_type"))
+      .select(col("repo"), col("path"), col("lsn"), col("commit"), col(ChangeFeed.TypeCol))
       .writeStream.format("memory").queryName("q51_sink")
       .option("checkpointLocation", cp)
       .trigger(Trigger.AvailableNow()).start()
@@ -754,7 +754,7 @@ object CdcQueries {
   def q54Changes(s: SparkSession, dir: String): DataFrame = {
     val t = smLakeMode(s, ApplyMode.MergeOnRead, "sm_cdf", "smcdf", cdf = true)
     s.read.format("graft").option("changeTypes", "true").load(t.root)
-      .select(col("repo"), col("path"), col("lsn"), col("commit"), col("_change_type"))
+      .select(col("repo"), col("path"), col("lsn"), col("commit"), col(ChangeFeed.TypeCol))
       .orderBy("lsn", "repo", "path")
   }
 
@@ -777,7 +777,7 @@ object CdcQueries {
     require(t.currentSnapshot().exists(sn => sn.cdfSinceLsn == 0L && sn.cdfFiles.nonEmpty),
       "q59: backfill must cover the feed from lsn 0")
     s.read.format("graft").option("changeTypes", "true").load(t.root)
-      .select(col("repo"), col("path"), col("lsn"), col("commit"), col("_change_type"))
+      .select(col("repo"), col("path"), col("lsn"), col("commit"), col(ChangeFeed.TypeCol))
       .orderBy("lsn", "repo", "path")
   }
 
@@ -1090,9 +1090,9 @@ object CdcQueries {
     require(t.currentSnapshot().exists(_.cdfFullSinceLsn == 0L),
       "q55: the full feed must cover from lsn 0")
     t.readChangesBetween(0)
-      .select(col("repo"), col("path"), col("lsn"), col("commit"), col("_change_type"),
+      .select(col("repo"), col("path"), col("lsn"), col("commit"), col(ChangeFeed.TypeCol),
         col("contentSha").as("content_sha"))
-      .orderBy("lsn", "repo", "path", "_change_type")
+      .orderBy("lsn", "repo", "path", ChangeFeed.TypeCol)
   }
 
   /** INCREMENTAL AGGREGATE MV over the full feed (round-6): per-repo

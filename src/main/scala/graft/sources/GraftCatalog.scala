@@ -132,7 +132,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
       s"graft tables need the CDC core columns ${core.mkString(", ")}; missing: ${missing.mkString(", ")}")
     val mode = Option(properties.get("mode")).getOrElse("cow")
     require(Seq("cow", "mor", "dv").contains(mode), s"unknown apply mode '$mode'")
-    val buckets = Option(properties.get("buckets")).map(_.toInt).getOrElse(32)
+    val buckets = Option(properties.get("buckets")).map(graft.GraftConf.positiveInt("buckets", _)).getOrElse(32)
     val dir = dirOf(ident)
     // empty version-1 snapshot so the table is immediately readable; the
     // internal `deleted` flag joins the stored schema. Published like any
@@ -144,9 +144,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
     // TBLPROPERTIES ('cdf' = 'true' | 'full'): change data feed on from
     // creation — every commit writes its change sidecar; 'full' also
     // records before-images (update_preimage rows + old values on deletes)
-    val cdfProp = Option(properties.get("cdf")).map(_.toLowerCase)
-    val cdfFull = cdfProp.contains("full")
-    val cdf = cdfFull || cdfProp.exists(_.toBoolean)
+    val (cdf, cdfFull) = Option(properties.get("cdf")).fold((false, false))(graft.GraftConf.cdf("cdf", _))
     // TBLPROPERTIES ('clusterBy' = 'lang[,col…]'): the persisted
     // clustering policy from creation — every compaction lays buckets out
     // value-sorted (see LakeTable.setClustering; columns are physical at

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.GraftConf
-import graft.table.{FileEntry, Fs, Snapshot, SnapshotLog}
+import graft.table.{ChangeFeed, FileEntry, Fs, Snapshot, SnapshotLog}
 
 /** DataSourceV2 reader for graft lake tables (SURVEY.md §2.1 S5 — the
   * reference's pushdown precedent is its ArcGIS client pushing `where`
@@ -107,7 +107,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
           // the layout from the `mode`/`buckets` options
           require(options.getBoolean("create", false), s"graft: no table at $root")
           graft.table.LakeTable.emptySnapshot(
-            Option(options.get("buckets")).map(_.toInt).getOrElse(32),
+            Option(options.get("buckets")).map(GraftConf.positiveInt("buckets", _)).getOrElse(32),
             Option(options.get("mode")).getOrElse("cow"))
         }
         cached = Some((key, (root, snap)))
@@ -124,12 +124,12 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (_, snap) = loadSnapshot(options)
-    val changeTypes = options.getBoolean("changeTypes", false)
-    val fields = GraftDataSource.schemaOf(snap,
-      keepDeleted = options.getBoolean("changeFeed", false) || changeTypes)
+    def flag(name: String) = Option(options.get(name)).exists(GraftConf.flag(name, _))
+    val changeTypes = flag("changeTypes")
+    val fields = GraftDataSource.schemaOf(snap, keepDeleted = flag("changeFeed") || changeTypes)
     // `changeTypes=true` (streaming tail): synthesised change-kind column,
     // Delta CDF vocabulary (insert / update_postimage / delete)
-    if (changeTypes) fields.add(StructField("_change_type", StringType)) else fields
+    if (changeTypes) fields.add(StructField(ChangeFeed.TypeCol, StringType)) else fields
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -374,12 +374,12 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     * y]` — so `spark.read.format("graft").option("changeTypes", "true")
     * .load(root).where($"lsn" > cursor)` is the whole consumer story.
     */
-  private def batchChanges: Boolean = options.get("changetypes").exists(_.toBoolean)
+  private def batchChanges: Boolean = options.get("changetypes").exists(GraftConf.flag("changeTypes", _))
   /** live-row scans serve tombstone rows iff the read asked for them
     * (`changeFeed`) — never inferred from the pruned column set, so a
     * projection that drops `deleted` cannot change the row count
     */
-  private def keepDeleted: Boolean = options.get("changefeed").exists(_.toBoolean)
+  private def keepDeleted: Boolean = options.get("changefeed").exists(GraftConf.flag("changeFeed", _))
   /** (lo exclusive, hi inclusive] for the sidecar planning */
   private def changesLo: Long = if (lsnLo == Long.MinValue) 0L else lsnLo - 1
 
@@ -634,8 +634,8 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     // pushed lsn range — data files never open (key-equality pruning is
     // irrelevant here; residual filters re-apply row-wise as everywhere)
     if (batchChanges)
-      return snap.cdfFiles.filter(f => f.maxLsn > changesLo && f.minLsn <= lsnHi)
-        .map(f => GraftCdfPartition(resolve(f.path), changesLo, lsnHi): InputPartition)
+      return ChangeFeed.sidecarsIn(snap, changesLo, lsnHi)
+        .map(f => GraftRangePartition(resolve(f.path), changesLo, lsnHi): InputPartition)
         .toArray
     // Plan-time work is pure metadata: file lists and sidecar PATHS only.
     // DV positions are loaded inside the partition readers (executor-side),
@@ -714,7 +714,8 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
   private val splitMemo = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
   private def splitKeysFor(files: Seq[FileEntry]): Seq[(String, String)] = {
-    val threshold = options.get("widebucketrows").map(_.toLong).getOrElse(8L * 1000 * 1000)
+    val threshold = options.get("widebucketrows")
+      .map(GraftConf.positiveLong("wideBucketRows", _)).getOrElse(8L * 1000 * 1000)
     // FileEntry.rows is per-file; the bucket's stored size is their sum
     val bucketRows = files.map(_.rows).sum
     if (bucketRows <= threshold) return Nil
@@ -772,8 +773,8 @@ final class GraftScan(root: String, snap: Snapshot, required: StructType, pushed
     val physRequired =
       if (snap.renames.isEmpty) required
       else StructType(required.fields.map(f => f.copy(name = snap.physicalOf(f.name))))
-    // sidecar partitions use the streaming CDF row reader — same files,
-    // same reader, batch plan
+    // sidecar partitions use the tail's range reader — same files, same
+    // reader, batch plan
     if (batchChanges) new GraftStreamReaderFactory(physRequired, conf)
     else {
       // Spark forbids MIXED row/columnar partitions in one scan even under

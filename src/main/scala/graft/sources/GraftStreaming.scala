@@ -9,7 +9,8 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.table.{Fs, Snapshot, SnapshotLog}
+import graft.GraftConf
+import graft.table.{ChangeFeed, Fs, Snapshot, SnapshotLog}
 
 /** LSN offset of the CDC tail — the table's applied-LSN high watermark.
   * A micro-batch covers the half-open range (start, end].
@@ -55,7 +56,8 @@ final class GraftMicroBatchStream(root: String, required: StructType,
 
   private val conf = new SerializableConfiguration(
     SparkSession.active.sessionState.newHadoopConf())
-  private val maxPerTrigger = options.get("maxlsnspertrigger").map(_.toLong)
+  private val maxPerTrigger =
+    options.get("maxlsnspertrigger").map(GraftConf.positiveLong("maxLsnsPerTrigger", _))
   /** `startingTimestamp`: begin the tail AFTER the last snapshot committed
     * at or before the instant (its hwm becomes the exclusive lower bound) —
     * "tail everything since yesterday" without knowing an LSN. A timestamp
@@ -77,7 +79,7 @@ final class GraftMicroBatchStream(root: String, required: StructType,
         val v = if (!l.exists) None
           else try Some(l.versionAsOf(tsMs)) catch { case _: IllegalArgumentException => None }
         v.fold(0L)(l.at(_).hwm)
-      case None => byLsn.getOrElse("0").toLong
+      case None => byLsn.fold(0L)(GraftConf.parse("startLsn", _, "an integer")(_.toLongOption))
     }
   }
 
@@ -133,7 +135,7 @@ final class GraftMicroBatchStream(root: String, required: StructType,
     }
   }
 
-  private val changeTypes = options.getOrElse("changetypes", "false").toBoolean
+  private val changeTypes = options.get("changetypes").exists(GraftConf.flag("changeTypes", _))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[GraftOffset].lsn // exclusive
@@ -141,33 +143,7 @@ final class GraftMicroBatchStream(root: String, required: StructType,
     if (hi <= lo) return Array.empty
     val snap = snapshot()
     val cdfCovered = snap.cdfSinceLsn >= 0 && lo >= snap.cdfSinceLsn
-    if (cdfCovered) {
-      // CDF FAST PATH (typed AND untyped tails): every commit above
-      // cdfSinceLsn wrote its change sidecar at merge time (full
-      // post-images + `_change_type`, typed against the stored chain as
-      // of that commit), so the micro-batch reads ONLY the sidecars
-      // intersecting (lo, hi] — per-trigger work is O(batch), never
-      // O(table history). For the typed tail this replaces the
-      // bucket-history walk; for the plain changeFeed it replaces the
-      // lsn-skipped file read — which on a CopyOnWrite table meant
-      // re-reading every REWRITTEN bucket each trigger (rewrites carry
-      // old rows under new files), and delivered collapsed history.
-      // Sidecars give CoW tails O(batch) IO and per-commit fidelity.
-      // The walks below remain the fallback for pre-CDF ranges.
-      snap.cdfFiles.filter(f => f.maxLsn > lo && f.minLsn <= hi)
-        .map(f => GraftCdfPartition(
-          graft.table.LakeTable.resolveUnder(root, f.path), lo, hi,
-          // the upsert-only feed (no `deleted` in the read schema) must
-          // drop tombstone rows, exactly like GraftStreamReader; typed
-          // consumers always see deletes (that is the point of the feed)
-          keepDeletes = changeTypes || required.fieldNames.contains("deleted"),
-          // full-feed sidecars also hold update_preimage rows (before-
-          // images, same (lsn, commit) as their postimage) — only the
-          // TYPED tail may see them; an untyped feed delivering them
-          // would double-deliver each update with stale values
-          keepPreimages = changeTypes): InputPartition)
-        .toArray
-    } else if (changeTypes) {
+    if (changeTypes && !cdfCovered) {
       // `_change_type` (insert / update_postimage / delete) needs each
       // key's PRIOR stored version, so the unit of work is a BUCKET, not a
       // file: one partition per bucket that has changes in (lo, hi],
@@ -183,12 +159,29 @@ final class GraftMicroBatchStream(root: String, required: StructType,
             hist.forall(_.sorted), lo, hi): InputPartition
         }.toArray
     } else {
-      // same file-level lsn skipping the batch scan uses; the row-level
-      // (lo, hi] re-filter in the reader makes boundary files exact
-      snap.files.filter(f => f.maxLsn > lo && f.minLsn <= hi)
-        .map(f => GraftStreamPartition(
-          graft.table.LakeTable.resolveUnder(root, f.path), lo, hi): InputPartition)
-        .toArray
+      // every other tail is one range read. When the feed covers (lo, hi],
+      // every commit above cdfSinceLsn wrote its change sidecar at merge
+      // time (full post-images + `_change_type`, typed against the stored
+      // chain as of that commit), so the micro-batch reads ONLY the
+      // sidecars intersecting (lo, hi] — per-trigger work is O(batch),
+      // never O(table history), and a CoW tail gets per-commit fidelity
+      // instead of re-reading every rewritten bucket. Below the floor the
+      // untyped tail reads the data files whose lsn range intersects
+      // (lo, hi], the file-level skipping the batch scan uses. Either way
+      // the row-level (lo, hi] re-filter makes boundary files exact.
+      val paths =
+        if (cdfCovered) ChangeFeed.sidecarsIn(snap, lo, hi).map(_.path)
+        else snap.files.filter(f => f.maxLsn > lo && f.minLsn <= hi).map(_.path)
+      paths.map(f => GraftRangePartition(graft.table.LakeTable.resolveUnder(root, f), lo, hi,
+        // the upsert-only feed (no `deleted` in the read schema) drops
+        // tombstone rows; typed consumers always see deletes (that is the
+        // point of the feed)
+        keepDeletes = changeTypes || required.fieldNames.contains("deleted"),
+        // full-feed sidecars also hold update_preimage rows (before-images,
+        // same (lsn, commit) as their postimage) — only the TYPED tail may
+        // see them; an untyped feed delivering them would double-deliver
+        // each update with stale values. Data files hold none.
+        keepPreimages = changeTypes): InputPartition).toArray
     }
   }
 
@@ -207,11 +200,6 @@ final class GraftMicroBatchStream(root: String, required: StructType,
   override def stop(): Unit = ()
 }
 
-/** one file of a stream micro-batch + the batch's lsn range (serialized to
-  * the executor with the task)
-  */
-final case class GraftStreamPartition(file: String, lo: Long, hi: Long) extends InputPartition
-
 /** one bucket of a change-typed stream micro-batch: its full file history
   * at or below hi, whether every file is (repo,path)-sorted, and the
   * batch's lsn range
@@ -219,68 +207,25 @@ final case class GraftStreamPartition(file: String, lo: Long, hi: Long) extends 
 final case class GraftStreamChangePartition(files: Seq[String], sorted: Boolean,
                                             lo: Long, hi: Long) extends InputPartition
 
-/** one commit's CDF sidecar file intersecting a micro-batch's lsn range —
-  * the change rows (and types) were computed at commit time, the reader
-  * only range-filters, optionally drops tombstones, and projects
+/** one file intersecting a change read's lsn range: a CDF sidecar (its
+  * change rows and types were computed at commit time) or, for an untyped
+  * tail below the feed's floor, a data file. The reader only
+  * range-filters, optionally drops tombstones and before-images, and
+  * projects.
   */
-final case class GraftCdfPartition(file: String, lo: Long, hi: Long,
-                                   keepDeletes: Boolean = true,
-                                   keepPreimages: Boolean = true) extends InputPartition
+final case class GraftRangePartition(file: String, lo: Long, hi: Long,
+                                     keepDeletes: Boolean = true,
+                                     keepPreimages: Boolean = true) extends InputPartition
 
 final class GraftStreamReaderFactory(required: StructType, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case p: GraftCdfPartition =>
-        new GraftCdfReader(p.file, required, conf.value, p.lo, p.hi, p.keepDeletes, p.keepPreimages)
+      case p: GraftRangePartition =>
+        new GraftRangeReader(p.file, required, conf.value, p.lo, p.hi, p.keepDeletes, p.keepPreimages)
       case p: GraftStreamChangePartition =>
         new GraftChangeTypeReader(p.files, p.sorted, required, conf.value, p.lo, p.hi)
-      case p: GraftStreamPartition =>
-        new GraftStreamReader(p.file, required, conf.value, p.lo, p.hi)
     }
-}
-
-/** Row reader for one delta/data file in a stream batch: reads the required
-  * columns plus the bookkeeping columns (`lsn` for the range re-filter,
-  * `deleted` for tombstone handling) and emits exactly the required
-  * columns. Tombstone rows flow through ONLY when the read schema carries
-  * the `deleted` column (keyed off the SCHEMA, not the option: a consumer
-  * without the flag — e.g. the catalog `readStream.table` path, or a
-  * projection that pruned it — could not tell deletes from upserts, so it
-  * gets the upsert-only feed).
-  */
-final class GraftStreamReader(path: String, required: StructType, conf: Configuration,
-                              lo: Long, hi: Long)
-    extends PartitionReader[InternalRow] {
-
-  private val extraNames =
-    Seq("lsn", "deleted").filterNot(required.fieldNames.contains)
-  private val ext: Array[StructField] = required.fields ++ extraNames.map {
-    case "lsn"     => StructField("lsn", LongType)
-    case "deleted" => StructField("deleted", BooleanType)
-  }
-  private val lsnIdx = ext.indexWhere(_.name == "lsn")
-  private val deletedIdx = ext.indexWhere(_.name == "deleted")
-  private val exposeDeleted = required.fieldNames.contains("deleted")
-  private val cursor = new GroupRowCursor(path, ext, conf)
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (cursor.advance()) {
-      val lsn = cursor.values(lsnIdx).asInstanceOf[Long]
-      val del = cursor.values(deletedIdx)
-      val isDel = del != null && del == true
-      if (lsn > lo && lsn <= hi && (exposeDeleted || !isDel)) {
-        current = new GenericInternalRow(java.util.Arrays.copyOfRange(
-          cursor.values.asInstanceOf[Array[AnyRef]], 0, required.length).asInstanceOf[Array[Any]])
-        return true
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = cursor.close()
 }
 
 /** Change-typed tail reader for one bucket (`changeTypes=true`): emits the
@@ -302,10 +247,10 @@ final class GraftChangeTypeReader(files: Seq[String], sorted: Boolean, required:
     extends PartitionReader[InternalRow] {
   import org.apache.spark.unsafe.types.UTF8String
 
-  private val typeIdx = required.fieldNames.indexOf("_change_type")
+  private val typeIdx = required.fieldNames.indexOf(ChangeFeed.TypeCol)
   // read schema: required minus the synthesised column, plus the
   // bookkeeping columns the typing needs
-  private val base: Array[StructField] = required.fields.filterNot(_.name == "_change_type")
+  private val base: Array[StructField] = required.fields.filterNot(_.name == ChangeFeed.TypeCol)
   private val ext: Array[StructField] = ResolveColumns.extend(base)
   private def idx(n: String): Int = ext.indexWhere(_.name == n)
   private val repoIdx = idx("repo"); private val pathIdx = idx("path")
@@ -329,7 +274,7 @@ final class GraftChangeTypeReader(files: Seq[String], sorted: Boolean, required:
     var prevLive = false // key absent before its first stored version
     versions.sortWith(versionOrder).flatMap { case (v, _) =>
       val del = v(deletedIdx) == true
-      val t = if (del) "delete" else if (prevLive) "update_postimage" else "insert"
+      val t = ChangeFeed.typeOf(del, prevLive)
       prevLive = !del
       val lsn = v(lsnIdx).asInstanceOf[Long]
       if (lsn > lo && lsn <= hi) Some((v, t)) else None
@@ -383,32 +328,34 @@ final class GraftChangeTypeReader(files: Seq[String], sorted: Boolean, required:
   override def close(): Unit = if (merge != null) merge.close()
 }
 
-/** Reader for one commit's CDF sidecar in a change-typed micro-batch: the
+/** Reader for one file of a change read (`GraftRangePartition`): a
   * sidecar stores full post-image rows + `_change_type` (typed at commit
-  * time), so this is a plain projection + (lo, hi] lsn re-filter — no
-  * history, no merge, no per-key state. Rowgroup lsn stats prune inside
-  * the file for rate-limited triggers that split one commit's range.
+  * time), a data file stores the versions themselves, so this is a plain
+  * projection + (lo, hi] lsn re-filter — no history, no merge, no per-key
+  * state. Tombstone rows flow through only with `keepDeletes`: the tails
+  * key it off the read SCHEMA, not the option — a consumer without the
+  * flag (e.g. the catalog `readStream.table` path, or a projection that
+  * pruned `deleted`) could not tell deletes from upserts, so it gets the
+  * upsert-only feed.
   */
-final class GraftCdfReader(path: String, required: StructType, conf: Configuration,
-                           lo: Long, hi: Long, keepDeletes: Boolean = true,
-                           keepPreimages: Boolean = true)
+final class GraftRangeReader(path: String, required: StructType, conf: Configuration,
+                             lo: Long, hi: Long, keepDeletes: Boolean = true,
+                             keepPreimages: Boolean = true)
     extends PartitionReader[InternalRow] {
 
   // with keepPreimages=false (untyped consumers of a FULL-feed table) the
   // reader also loads `_change_type` as a bookkeeping column and drops the
   // before-image rows — they duplicate each update's (lsn, commit) with
-  // the OLD values and belong only to typed consumers
-  private val extraNames =
-    (Seq("lsn", "deleted") ++ (if (keepPreimages) Nil else Seq("_change_type")))
-      .filterNot(required.fieldNames.contains)
-  private val ext: Array[StructField] = required.fields ++ extraNames.map {
-    case "lsn"          => StructField("lsn", LongType)
-    case "deleted"      => StructField("deleted", BooleanType)
-    case "_change_type" => StructField("_change_type", StringType)
-  }
+  // the OLD values and belong only to typed consumers (a data file has no
+  // `_change_type`: the cursor null-backfills it, so it drops nothing)
+  private val extra =
+    (Seq(StructField("lsn", LongType), StructField("deleted", BooleanType)) ++
+      (if (keepPreimages) Nil else Seq(StructField(ChangeFeed.TypeCol, StringType))))
+      .filterNot(f => required.fieldNames.contains(f.name))
+  private val ext: Array[StructField] = required.fields ++ extra
   private val lsnIdx = ext.indexWhere(_.name == "lsn")
   private val deletedIdx = ext.indexWhere(_.name == "deleted")
-  private val ctypeIdx = if (keepPreimages) -1 else ext.indexWhere(_.name == "_change_type")
+  private val ctypeIdx = if (keepPreimages) -1 else ext.indexWhere(_.name == ChangeFeed.TypeCol)
   private val cursor = new GroupRowCursor(path, ext, conf)
   private var current: InternalRow = _
 
@@ -418,7 +365,7 @@ final class GraftCdfReader(path: String, required: StructType, conf: Configurati
       val isDel = cursor.values(deletedIdx) == true
       val isPre = ctypeIdx >= 0 && {
         val ct = cursor.values(ctypeIdx)
-        ct != null && ct.toString == "update_preimage"
+        ct != null && ct.toString == ChangeFeed.UpdatePreimage
       }
       if (lsn > lo && lsn <= hi && !isPre && (keepDeletes || !isDel)) {
         current = new GenericInternalRow(java.util.Arrays.copyOfRange(

@@ -149,14 +149,12 @@ object GraftWrite {
     // layout permanently
     import scala.jdk.CollectionConverters._
     val o = options.asScala.map { case (k, v) => k.toLowerCase -> v }
-    val buckets = o.get("buckets").map(_.toInt).getOrElse(32)
+    val buckets = o.get("buckets").map(graft.GraftConf.positiveInt("buckets", _)).getOrElse(32)
     val mode = graft.table.LakeTable.modeOf(o.getOrElse("mode", "cow"))
     // cdf=true|full — 'full' turns on before-images (update_preimage rows
     // + old values on deletes) from creation
-    val cdf = o.get("cdf").map(_.toLowerCase)
-    new LakeTable(spark, root, buckets, mode,
-      defaultCdf = cdf.exists(v => v == "full" || v.toBoolean),
-      defaultCdfFull = cdf.contains("full"))
+    val (cdf, cdfFull) = o.get("cdf").fold((false, false))(graft.GraftConf.cdf("cdf", _))
+    new LakeTable(spark, root, buckets, mode, defaultCdf = cdf, defaultCdfFull = cdfFull)
   }
 
   /** V1 `Filter` → `Column` for the filter-based delete surface. None =

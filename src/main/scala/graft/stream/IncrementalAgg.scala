@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.table.LakeTable
+import graft.table.{ChangeFeed, LakeTable}
 
 /** INCREMENTAL AGGREGATE MATERIALIZED VIEW over a lake table's live rows —
   * the consumer the FULL change data feed exists for.
@@ -177,9 +177,9 @@ final class IncrementalAgg(val mv: LakeTable, groupCol: Column,
     * (`least`/`greatest` with the stored value).
     */
   private[graft] def eventsForX(changes: DataFrame, rescanBasis: Option[DataFrame]): DataFrame = {
-    val ct = col("_change_type")
-    val w = when(ct === "update_preimage", lit(-1L))
-      .when(ct === "delete", when(beforeLive, lit(-1L)).otherwise(lit(0L)))
+    val ct = col(ChangeFeed.TypeCol)
+    val w = when(ct === ChangeFeed.UpdatePreimage, lit(-1L))
+      .when(ct === ChangeFeed.Delete, when(beforeLive, lit(-1L)).otherwise(lit(0L)))
       .otherwise(lit(1L))
     val deltas = changes
       .select(Seq(groupCol.cast("string").as("g"), w.as("w"), col("lsn")) ++

@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 
@@ -60,7 +60,6 @@ object ApplyMode extends Enumeration {
   */
 final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets: Int = 32,
                       defaultMode: ApplyMode.Value = ApplyMode.CopyOnWrite,
-                      val prereduceHotKeys: Boolean = false,
                       /** create the table with the change data feed ON
                         * (existing tables read their CDF state from the
                         * snapshot — use enableChangeDataFeed() to turn it
@@ -343,12 +342,11 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         val sc = s.cdfFiles.filter(_.maxLsn >= fromLsn)
         // full-feed sidecars also hold update_preimage rows (same (lsn,
         // commit) as their postimage — they must never win the resolve)
-        val cdfSchema = StructType.fromDDL(s.schemaDdl)
-          .add("_change_type", org.apache.spark.sql.types.StringType)
+        val cdfSchema = ChangeFeed.schemaOf(s)
         val raw =
           if (sc.isEmpty) emptyTable(cdfSchema)
           else spark.read.schema(cdfSchema).parquet(sc.map(f => resolvePath(f.path)): _*)
-        val posts = raw.where(col("_change_type") =!= "update_preimage").drop("_change_type")
+        val posts = raw.where(col(ChangeFeed.TypeCol) =!= ChangeFeed.UpdatePreimage).drop(ChangeFeed.TypeCol)
         toLogical(latestPerKey(posts).where(col("lsn") >= fromLsn), Some(s))
       case snap =>
         // the scan over just the files whose lsn range reaches the cursor
@@ -392,9 +390,8 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     require(fromLsn >= s.cdfSinceLsn,
       s"readChangesBetween: the feed covers (${s.cdfSinceLsn}, ${s.hwm}] but fromLsn=$fromLsn " +
         "is below the floor (expired/pre-enablement range)")
-    val schema = StructType.fromDDL(s.schemaDdl)
-      .add("_change_type", org.apache.spark.sql.types.StringType)
-    val sc = s.cdfFiles.filter(f => f.maxLsn > fromLsn && f.minLsn <= toLsn)
+    val schema = ChangeFeed.schemaOf(s)
+    val sc = ChangeFeed.sidecarsIn(s, fromLsn, toLsn)
     val raw =
       if (sc.isEmpty) emptyTable(schema)
       else spark.read.schema(schema).parquet(sc.map(f => resolvePath(f.path)): _*)
@@ -646,15 +643,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     def batchRows = pre.map(_._2).sum
     def staleRows = pre.map(_._3).sum
     lazy val affectedAll: Set[Int] = pre.map(_._1).toSet
-    // Hot-KEY pre-reduce (the apply-path skew lever, SURVEY.md §4): when a
-    // few keys dominate the batch (e.g. one file updated millions of times
-    // in one batch), reduce per-key BEFORE the bucket shuffle with the
-    // hash-aggregate latestPerKey — its map-side partial combine collapses
-    // the hot key on every input partition, so the bucket shuffle moves one
-    // row per key instead of the flood. Off by default: for typical batches
-    // it would add a shuffle without removing bytes.
-    val cleaned0 = enforceConstraints(clean(events, snap), snap)
-    val cleaned = if (prereduceHotKeys) latestPerKey(cleaned0) else cleaned0
+    val cleaned = enforceConstraints(clean(events, snap), snap)
     val bCol = pmod(xxhash64(col("repo"), col("path")), lit(nBuckets.toLong)).cast("int")
     // change data feed: ON when the snapshot says so (or at creation via
     // defaultCdf) — the commit then also writes its change sidecar
@@ -936,10 +925,9 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
           }
           else {
             keep.select(dataColNames.map(col) :+
-              when(col("deleted"), "delete")
-                .when(col("ex_lsn").isNotNull && !coalesce(col("ex_deleted"), lit(false)),
-                  "update_postimage")
-                .otherwise("insert").as("_change_type"): _*)
+              ChangeFeed.typeOf(col("deleted"),
+                col("ex_lsn").isNotNull && !coalesce(col("ex_deleted"), lit(false)))
+                .as(ChangeFeed.TypeCol): _*)
               .write.mode("overwrite").parquet(s"$commitDir/cdf")
             cdfStatsOf(s"$commitDir/cdf")
           }
@@ -977,21 +965,16 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * small commit's bytes). The evidence lets a point lookup on an
     * un-compacted MergeOnRead chain read only the files holding a version
     * of the key — O(key's commits), not O(chain), at FILE granularity so
-    * pruned files never schedule a task. `spark.graft.bloom.enabled=false`
-    * opts out.
+    * pruned files never schedule a task.
     */
-  private def dataWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    val w = df.write.partitionBy("b").mode("overwrite")
-    if (GraftConf.bool(spark, "spark.graft.bloom.enabled").getOrElse(true))
-      // contentSha serves content-address lookups ("does this blob exist")
-      // on resolved layouts — see GraftScan.keyEvidenceGate
-      Seq("repo", "path", "contentSha").foldLeft(
-          w.option("parquet.bloom.filter.adaptive.enabled", "true")) { (acc, c) =>
-        acc.option(s"parquet.bloom.filter.enabled#$c", "true")
-          .option(s"parquet.bloom.filter.candidates.number#$c", "11") // 1 MiB .. 1 KiB
-      }
-    else w
-  }
+  private def dataWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    // contentSha serves content-address lookups ("does this blob exist")
+    // on resolved layouts — see GraftScan.keyEvidenceGate
+    Seq("repo", "path", "contentSha").foldLeft(df.write.partitionBy("b").mode("overwrite")
+        .option("parquet.bloom.filter.adaptive.enabled", "true")) { (acc, c) =>
+      acc.option(s"parquet.bloom.filter.enabled#$c", "true")
+        .option(s"parquet.bloom.filter.candidates.number#$c", "11") // 1 MiB .. 1 KiB
+    }
 
   /** total rows of parquet files from their footers (driver-side, one conf, no job) */
   private def parquetRowCount(paths: Seq[String]): Long = {
@@ -1083,72 +1066,32 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     * full post-images + `_change_type`). `newStored` = the commit's new
     * rows (all data columns); `prior` = (repo, path, lsn, commit, deleted)
     * of the PREVIOUS snapshot's stored versions of the affected buckets.
-    * The chain walk is one windowed pass over (new ∪ prior-of-new-keys):
-    * a version's type is delete if it is a tombstone, insert if its chain
-    * predecessor is absent or a tombstone, else update_postimage — the
-    * same rule the history-walk reader applies, evaluated once at commit
-    * time so tails never re-read history. Cost: O(batch) + a column-pruned
-    * key-semi-joined read of the affected buckets (no payloads).
+    * The chain walk is one windowed pass over (new ∪ prior-of-new-keys)
+    * that hands each version its chain predecessor to
+    * `ChangeFeed.changeRows` — the rule the history-walk reader applies,
+    * evaluated once at commit time so tails never re-read history. Cost:
+    * O(batch) + a column-pruned key-semi-joined read of the affected
+    * buckets (no payloads on a post-only feed).
     */
   private def writeCdfSidecar(newStored: DataFrame, prior: DataFrame,
       priorFull: Option[DataFrame], dir: String): Seq[CdfEntry] = {
-    import org.apache.spark.sql.expressions.Window
     val keys = newStored.select("repo", "path").distinct()
-    val neu = newStored.withColumn("__new", lit(true))
+    // prior rows carry only the chain columns on a post-only feed (payloads
+    // null-backfill); on a FULL feed they are the stored versions WITH
+    // payloads (full chains on MoR, the resolved set on CoW/DV), so the
+    // lag consults exactly the predecessor the typing does and also
+    // yields each change's before-image
+    val pri = priorFull.getOrElse(prior).join(keys, Seq("repo", "path"), "left_semi")
+      .withColumn("__new", lit(false))
+    val unioned = newStored.withColumn("__new", lit(true)).unionByName(pri, allowMissingColumns = true)
+    val prevCols =
+      if (priorFull.isEmpty) Seq("deleted")
+      else unioned.columns.toSeq.filterNot(Set("repo", "path", "__new"))
     // exact (lsn, commit) ties order stored-before-new, matching the
     // resolve's file-order tie-break
-    val w = Window.partitionBy("repo", "path")
-      .orderBy(col("lsn"), col("commit"), col("__new"))
-    val typed = priorFull match {
-      case None =>
-        val pri = prior.join(keys, Seq("repo", "path"), "left_semi")
-          .withColumn("__new", lit(false))
-        // prior rows carry only the chain columns; payloads null-backfill
-        val unioned = neu.unionByName(pri, allowMissingColumns = true)
-        unioned
-          .withColumn("__prevDel", lag(col("deleted"), 1).over(w))
-          .where(col("__new"))
-          .withColumn("_change_type",
-            when(col("deleted"), "delete")
-              .when(col("__prevDel").isNull || col("__prevDel"), "insert")
-              .otherwise("update_postimage"))
-          .drop("__new", "__prevDel")
-      case Some(pf) =>
-        // FULL feed: prior rows arrive as the stored versions WITH
-        // payloads (full chains on MoR, the resolved set on CoW/DV), so
-        // the lag consults exactly the predecessor the typing does, and
-        // the same chain window also yields each change's before-image.
-        // Delta table_changes shape:
-        // one update_preimage row per update (old values, stamped with the
-        // NEW change's (lsn, commit) — Delta's commit-version convention),
-        // and delete rows carry the deleted row's old values instead of
-        // the tombstone's nulls.
-        val pri = pf.join(keys, Seq("repo", "path"), "left_semi")
-          .withColumn("__new", lit(false))
-        val unioned = neu.unionByName(pri, allowMissingColumns = true)
-        val payCols = unioned.columns.filterNot(Set("repo", "path", "__new")).toSeq
-        val dataPay = payCols.filterNot(Set("lsn", "commit", "deleted"))
-        val lagged = unioned
-          .withColumn("__prev", lag(struct(payCols.map(col): _*), 1).over(w))
-          .where(col("__new"))
-          .withColumn("_change_type",
-            when(col("deleted"), "delete")
-              .when(col("__prev").isNull || col("__prev.deleted"), "insert")
-              .otherwise("update_postimage"))
-        val prevLive = col("__prev").isNotNull && !col("__prev.deleted")
-        val post = lagged.select(
-          Seq(col("repo"), col("path")) ++
-          dataPay.map(c => when(col("_change_type") === "delete" && prevLive,
-              col(s"__prev.$c")).otherwise(col(c)).as(c)) ++
-          Seq(col("lsn"), col("commit"), col("deleted"), col("_change_type")): _*)
-        val pre = lagged.where(col("_change_type") === "update_postimage").select(
-          Seq(col("repo"), col("path")) ++
-          dataPay.map(c => col(s"__prev.$c").as(c)) ++
-          Seq(col("lsn"), col("commit"), lit(false).as("deleted"),
-            lit("update_preimage").as("_change_type")): _*)
-        post.unionByName(pre)
-    }
-    typed.write.mode("overwrite").parquet(dir)
+    ChangeFeed.changeRows(ChangeFeed.withChainPrev(unioned, prevCols, col("__new"))
+        .where(col("__new")).drop("__new"))
+      .write.mode("overwrite").parquet(dir)
     cdfStatsOf(dir)
   }
 
@@ -1212,29 +1155,17 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     */
   private def writeReplaceSidecar(prevSnap: Option[Snapshot], newLive: DataFrame,
       dLsn: Long, commitId: String, dir: String, full: Boolean = false): Seq[CdfEntry] = {
-    val changes =
-      if (!full) {
-        // the live-row scan pruned to the key columns: it reads only the
-        // columns it resolves on, never payloads — O(stored chain keys)
-        val prior = scanAt(prevSnap).select("repo", "path")
-        val vanished = prior
-          .join(newLive.select("repo", "path").distinct(), Seq("repo", "path"), "left_anti")
-          .withColumn("deleted", lit(true))
-          .withColumn("_change_type", lit("delete"))
-        newLive
-          .join(prior.withColumn("__had", lit(true)), Seq("repo", "path"), "left")
-          .where(col("__had").isNotNull || !col("deleted"))
-          .withColumn("_change_type",
-            when(col("deleted"), "delete")
-              .when(col("__had").isNotNull, "update_postimage")
-              .otherwise("insert"))
-          .drop("__had")
-          .unionByName(vanished, allowMissingColumns = true)
-      } else {
-        // FULL feed across a replace: the before-set is the prior LIVE ROWS
-        // (payloads — the one replace shape that reads old payloads, O(old
-        // live rows)); vanished keys' delete rows carry their old values,
-        // re-supplied keys additionally emit an update_preimage row
+    // the prior LIVE set as (repo, path, previous version). Post-only: the
+    // live-row scan pruned to the key columns — it reads only the columns
+    // it resolves on, never payloads, O(stored chain keys). FULL feed: the
+    // prior live rows with payloads (the one replace shape that reads old
+    // payloads, O(old live rows)), so vanished keys' delete rows carry
+    // their old values and re-supplied keys add an update_preimage row
+    val (supplied, priorPrev) =
+      if (!full)
+        (newLive, scanAt(prevSnap).select(col("repo"), col("path"),
+          struct(lit(false).as("deleted")).as(ChangeFeed.Prev)))
+      else {
         val priorRows = storedAt(prevSnap, None).where(!col("deleted")).drop("deleted")
         val allPay = (newLive.columns ++ priorRows.columns).distinct
           .filterNot(Set("repo", "path", "lsn", "commit", "deleted")).toSeq
@@ -1242,31 +1173,21 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
           .orElse(priorRows.schema.find(_.name == c)).get.dataType
         def payOf(df: DataFrame, c: String) =
           if (df.columns.contains(c)) col(c) else lit(null).cast(payType(c))
-        val priAligned = priorRows.select(
-          Seq(col("repo"), col("path")) ++ allPay.map(c => payOf(priorRows, c).as(c)): _*)
-        val vanished = priAligned
-          .join(newLive.select("repo", "path").distinct(), Seq("repo", "path"), "left_anti")
-          .withColumn("deleted", lit(true))
-          .withColumn("_change_type", lit("delete"))
-        val pp = priAligned.select(col("repo"), col("path"),
-          struct(allPay.map(col): _*).as("__prev"))
-        val typedNew = newLive.join(pp, Seq("repo", "path"), "left")
-          .where(col("__prev").isNotNull || !col("deleted"))
-          .withColumn("_change_type",
-            when(col("deleted"), "delete")
-              .when(col("__prev").isNotNull, "update_postimage")
-              .otherwise("insert"))
-        val post = typedNew.select(
-          Seq(col("repo"), col("path")) ++
-          allPay.map(c => when(col("_change_type") === "delete" && col("__prev").isNotNull,
-              col(s"__prev.$c")).otherwise(payOf(newLive, c)).as(c)) ++
-          Seq(col("deleted"), col("_change_type")): _*)
-        val pre = typedNew.where(col("_change_type") === "update_postimage").select(
-          Seq(col("repo"), col("path")) ++
-          allPay.map(c => col(s"__prev.$c").as(c)) ++
-          Seq(lit(false).as("deleted"), lit("update_preimage").as("_change_type")): _*)
-        post.unionByName(pre).unionByName(vanished)
+        def aligned(df: DataFrame, rest: Column*) =
+          df.select(Seq(col("repo"), col("path")) ++ allPay.map(c => payOf(df, c).as(c)) ++ rest: _*)
+        (aligned(newLive, col("deleted")),
+          aligned(priorRows).select(col("repo"), col("path"),
+            struct(allPay.map(col) :+ lit(false).as("deleted"): _*).as(ChangeFeed.Prev)))
       }
+    // keys live before and absent from the new data delete; new tombstones
+    // of never-live keys are dropped
+    val vanished = priorPrev
+      .join(newLive.select("repo", "path").distinct(), Seq("repo", "path"), "left_anti")
+      .withColumn("deleted", lit(true))
+    val changes = ChangeFeed.changeRows(
+      supplied.join(priorPrev, Seq("repo", "path"), "left")
+        .where(col(ChangeFeed.Prev).isNotNull || !col("deleted"))
+        .unionByName(vanished, allowMissingColumns = true))
     changes
       .withColumn("lsn", lit(dLsn))
       .withColumn("commit", lit(commitId))
@@ -1311,9 +1232,7 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
         case None => Left(())
         case Some(snap) =>
           val dir = s"${p.dir}/cdf"
-          val schema = StructType.fromDDL(snap.schemaDdl)
-            .add("_change_type", org.apache.spark.sql.types.StringType)
-          spark.read.schema(schema).parquet(snap.cdfFiles.map(f => resolvePath(f.path)): _*)
+          spark.read.schema(ChangeFeed.schemaOf(snap)).parquet(snap.cdfFiles.map(f => resolvePath(f.path)): _*)
             .repartitionByRange(targetFiles, col("lsn"))
             .sortWithinPartitions("lsn", "repo", "path")
             .write.parquet(dir)
@@ -1353,7 +1272,6 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
     */
   def backfillChangeFeed(full: Boolean = false, targetFiles: Int = 16): Int = {
     require(targetFiles > 0, "backfillChangeFeed: targetFiles must be positive")
-    import org.apache.spark.sql.expressions.Window
     transact("backfillChangeFeed") { p => p.base match {
       case None => Left(0)
       case Some(snap) =>
@@ -1375,41 +1293,11 @@ final class LakeTable(val spark: SparkSession, val root: String, defaultBuckets:
             else {
               val stored = storedAt(Some(snap.copy(files = hist)), None, chain = true)
                 .where(col("lsn") <= floor)
-              // full per-key chain order — the walk reader's versionOrder
-              val w = Window.partitionBy("repo", "path").orderBy(col("lsn"), col("commit"))
-              val typed =
-                if (!wantFull)
-                  stored.withColumn("__prevDel", lag(col("deleted"), 1).over(w))
-                    .withColumn("_change_type",
-                      when(col("deleted"), "delete")
-                        .when(col("__prevDel").isNull || col("__prevDel"), "insert")
-                        .otherwise("update_postimage"))
-                    .drop("__prevDel")
-                else {
-                  // FULL feed shape (mirrors writeCdfSidecar's priorFull
-                  // branch): update_preimage rows under the NEW change's
-                  // (lsn, commit), deletes carrying the dead row's old values
-                  val payCols = stored.columns.filterNot(Set("repo", "path")).toSeq
-                  val dataPay = payCols.filterNot(Set("lsn", "commit", "deleted"))
-                  val lagged = stored
-                    .withColumn("__prev", lag(struct(payCols.map(col): _*), 1).over(w))
-                    .withColumn("_change_type",
-                      when(col("deleted"), "delete")
-                        .when(col("__prev").isNull || col("__prev.deleted"), "insert")
-                        .otherwise("update_postimage"))
-                  val prevLive = col("__prev").isNotNull && !col("__prev.deleted")
-                  val post = lagged.select(
-                    Seq(col("repo"), col("path")) ++
-                    dataPay.map(c => when(col("_change_type") === "delete" && prevLive,
-                        col(s"__prev.$c")).otherwise(col(c)).as(c)) ++
-                    Seq(col("lsn"), col("commit"), col("deleted"), col("_change_type")): _*)
-                  val pre = lagged.where(col("_change_type") === "update_postimage").select(
-                    Seq(col("repo"), col("path")) ++
-                    dataPay.map(c => col(s"__prev.$c").as(c)) ++
-                    Seq(col("lsn"), col("commit"), lit(false).as("deleted"),
-                      lit("update_preimage").as("_change_type")): _*)
-                  post.unionByName(pre)
-                }
+              // full per-key chain order — the walk reader's versionOrder;
+              // a FULL feed's predecessor carries the payloads too
+              val prevCols =
+                if (wantFull) stored.columns.toSeq.filterNot(Set("repo", "path")) else Seq("deleted")
+              val typed = ChangeFeed.changeRows(ChangeFeed.withChainPrev(stored, prevCols))
               typed.repartitionByRange(targetFiles, col("lsn"))
                 .sortWithinPartitions("lsn", "repo", "path")
                 .write.parquet(dir)
@@ -2506,7 +2394,7 @@ object LakeTable {
     */
   def reservedName(n: String): Option[String] = {
     val l = n.toLowerCase
-    if (l == "_change_type") Some("the change-feed's synthesized _change_type column")
+    if (l == ChangeFeed.TypeCol) Some("the change-feed's synthesized _change_type column")
     else if (l == "b") Some("the bucket partition column the write path stamps")
     else if (l.startsWith("__")) Some("engine-internal temporary columns (__ prefix)")
     else None

@@ -91,6 +91,41 @@ class CdfBackfillSpec extends SparkSpec {
       "fixture must exercise preimages")
   }
 
+  /** every change row with every column, payloads included, as a sorted list */
+  private def allRows(df: DataFrame): Seq[String] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(col).toIndexedSeq: _*).collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+  }
+
+  // the post-only twin of the full-mode case: the commit-time writer and
+  // the backfill type their rows through the same rule. A CoW rewrite keeps
+  // one stored version per key, so its backfill can only reproduce a
+  // commit-time feed whose batches touch disjoint keys (inserts and
+  // deletes); the MoR chain keeps every version, updates included.
+  for ((mode, byKey) <- Seq((ApplyMode.MergeOnRead, false), (ApplyMode.CopyOnWrite, true))) {
+    test(s"post-only backfill reproduces the commit-time post-only feed row-for-row ($mode)") {
+      def make(tag: String, cdf: Boolean): LakeTable =
+        if (!byKey) build(mode, tag, cdf = cdf)
+        else {
+          val t = new LakeTable(spark, tmpDir(tag), defaultBuckets = 4, mode, defaultCdf = cdf)
+          val wal = ChangeLogGen.changeLog(spark, cfg)
+          (0 until batches).foreach { i =>
+            t.merge(wal.where(pmod(xxhash64(col("repo"), col("path")), lit(batches.toLong)) === i),
+              tag, i.toLong)
+          }
+          t
+        }
+      val live = make(s"bf_postref$mode", cdf = true)
+      val late = make(s"bf_postlate$mode", cdf = false)
+      assert(late.backfillChangeFeed() > 0)
+      val expected = allRows(live.readChangesBetween(0))
+      assert(allRows(late.readChangesBetween(0)) == expected)
+      val types = live.readChangesBetween(0).select("_change_type").distinct().collect().map(_.getString(0)).toSet
+      assert(types == (if (byKey) Set("insert", "delete") else Set("insert", "update_postimage", "delete")),
+        s"fixture must exercise every type it can: $types")
+    }
+  }
+
   test("mid-life enablement: backfill closes the pre-enablement gap; coverage continuous after") {
     val t = build(ApplyMode.MergeOnRead, "bf_mid", nBatches = 1)
     t.enableChangeDataFeed()

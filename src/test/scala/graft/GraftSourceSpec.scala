@@ -124,6 +124,46 @@ class GraftSourceSpec extends SparkSpec {
       t.merge(ChangeLogGen.changeLog(spark, cfg.copy(seed = 32, events = 200)), "conf", 2L))
   }
 
+  /** `op` fails with an error (or a cause) naming `key` and quoting `v` */
+  private def failsNaming(key: String, v: String)(op: => Any): Unit = {
+    val e = intercept[Exception](op)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains(key) && m.contains(s"'$v'")), s"$key=$v: ${e.getMessage}")
+  }
+
+  test("bad table options fail naming the option: wideBucketRows, buckets, cdf") {
+    // a stacked MoR bucket is what consults wideBucketRows
+    val t = new LakeTable(spark, tmpDir("badopts"), defaultBuckets = 2, ApplyMode.MergeOnRead)
+    val wal = ChangeLogGen.changeLog(spark, cfg.copy(events = 400))
+    t.merge(wal.where(col("lsn") <= 200), "bad", 0L)
+    t.merge(wal.where(col("lsn") > 200), "bad", 1L)
+    for (v <- Seq("0", "-1", "lots"))
+      failsNaming("wideBucketRows", v)(scanOf(spark.read.format("graft")
+        .option("wideBucketRows", v).load(t.root)).planInputPartitions())
+    val rows = spark.read.format("graft").load(t.root).limit(3)
+    for (v <- Seq("0", "-4", "lots")) {
+      // the create-on-first-write read, and a write into an existing table
+      failsNaming("buckets", v)(spark.read.format("graft").option("create", "true")
+        .option("buckets", v).load(tmpDir("badbuckets")).schema)
+      failsNaming("buckets", v)(rows.write.format("graft").option("buckets", v).mode("append").save(t.root))
+    }
+    failsNaming("cdf", "maybe")(rows.write.format("graft").option("cdf", "maybe").mode("append").save(t.root))
+    assert(t.currentSnapshot().get.version == 2, "a refused write commits nothing")
+    // the same options as SQL table properties
+    val cat = "gbadopts"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+    val catRoot = tmpDir("badoptscat")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", catRoot)
+    def create(name: String, prop: String, v: String) = spark.sql(s"""CREATE TABLE $cat.$name
+      (repo STRING, path STRING, commit STRING, content STRING, lsn BIGINT)
+      TBLPROPERTIES ('$prop' = '$v')""")
+    failsNaming("buckets", "0")(create("zero", "buckets", "0"))
+    failsNaming("cdf", "maybe")(create("maybe", "cdf", "maybe"))
+    // valid spellings still parse
+    create("full", "cdf", "FULL")
+    assert(new LakeTable(spark, s"$catRoot/full").currentSnapshot().get.cdfFullSinceLsn == 0L)
+  }
+
   test("SQL over the DSv2 table (temp view)") {
     val t = buildCow()
     spark.read.format("graft").load(t.root).createOrReplaceTempView("dsv2_repos")

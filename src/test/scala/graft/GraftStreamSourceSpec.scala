@@ -100,9 +100,33 @@ class GraftStreamSourceSpec extends SparkSpec {
 
   test("admission control: maxLsnsPerTrigger splits the backlog, same result") {
     val t = buildMor()
+    assert(t.currentSnapshot().get.cdfSinceLsn < 0, "the tail must read data files, not sidecars")
+    // 700-lsn triggers cut through every 1000-lsn commit's delta files
     val out = runToMemory(t.root, "tail_rate",
       Map("changeFeed" -> "true", "maxLsnsPerTrigger" -> "700"))
     assert(got(out) == expectedFeed(includeDeletes = true))
+    val lsns = out.select("lsn").collect().map(_.getLong(0)).toSeq
+    assert(lsns.size == lsns.distinct.size, "an lsn was delivered twice")
+  }
+
+  test("bad tail options fail naming the option and quoting the value") {
+    val root = tmpDir("tail_badopts")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("repo STRING, lsn BIGINT")
+    // a 0 cap would never advance the tail; a negative one ends below the start
+    for ((k, v) <- Seq("maxLsnsPerTrigger" -> "0", "maxLsnsPerTrigger" -> "-5",
+        "maxLsnsPerTrigger" -> "lots", "startLsn" -> "soon", "changeTypes" -> "yes")) {
+      val e = intercept[IllegalArgumentException](
+        new graft.sources.GraftMicroBatchStream(root, schema, Map(k.toLowerCase -> v)))
+      assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    // through load(): the schema is inferred from the options first
+    val t = new LakeTable(spark, tmpDir("tail_badload"), defaultBuckets = 2, ApplyMode.MergeOnRead)
+    t.merge(ChangeLogGen.changeLog(spark, cfg.copy(events = 50)), "bad", 0L)
+    for (k <- Seq("changeTypes", "changeFeed")) {
+      val e = intercept[IllegalArgumentException](
+        spark.readStream.format("graft").option(k, "yes").load(t.root))
+      assert(e.getMessage.contains(k) && e.getMessage.contains("'yes'"), e.getMessage)
+    }
   }
 
   test("readStream.table over the SQL catalog tails by name") {

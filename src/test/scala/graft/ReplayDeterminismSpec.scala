@@ -99,20 +99,4 @@ class ReplayDeterminismSpec extends SparkSpec {
       assert(snapshotRows(t) == OracleApplier.liveRows(evs))
     } finally w.unpersist()
   }
-
-  test("hot-KEY pre-reduce converges identically (single key flooded)") {
-    // one (repo, path) receives 50% of all events in one batch
-    val base = ChangeLogGen.changeLog(spark, GenConfig(seed = 8, events = 4000, repos = 6, filesPerRepo = 6))
-    val hotKey = base.withColumn("hot", pmod(col("lsn"), lit(2)) === 0)
-      .withColumn("repo", when(col("hot"), lit("org-0001/hotrepo")).otherwise(col("repo")))
-      .withColumn("path", when(col("hot"), lit("src/d0/Hot.scala")).otherwise(col("path")))
-      .drop("hot")
-    val plain = new LakeTable(spark, tmpDir("hkA"), defaultBuckets = 8)
-    plain.merge(hotKey, "h", 0L)
-    val pre = new LakeTable(spark, tmpDir("hkB"), defaultBuckets = 8, ApplyMode.CopyOnWrite,
-      prereduceHotKeys = true)
-    pre.merge(hotKey, "h", 0L)
-    assert(snapshotRows(plain) == snapshotRows(pre))
-    assert(snapshotRows(pre).nonEmpty)
-  }
 }

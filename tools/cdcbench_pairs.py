@@ -18,6 +18,10 @@ of each side, the change of the medians, and in how many pairs the change
 was better (by the metric's direction in BENCHMARK.json). Pairs whose
 `dv_update` window op counts differ are flagged: the window then holds
 different work on the two sides, and its write metrics are not comparable.
+On `read_mix` and `stream_trickle` the window's work is fixed, so
+`write_amp` and `space_bytes_per_row` depend only on what the write path
+stores; a pair where they differ is flagged as a drift of the data, sidecar
+or metadata format.
 """
 
 import argparse
@@ -33,6 +37,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 # "[cdcbench]   12.04 s  window: 12 ops in 3.23 s: ..." (not the "untraced window" line)
 WINDOW = re.compile(r"^\[cdcbench\]\s+[\d.]+ s\s+window: (\d+) ops")
+# workloads whose stored bytes are deterministic per seed, and those metrics
+FIXED_WRITE = ("read_mix", "stream_trickle")
+STORED = ("write_amp", "space_bytes_per_row")
 
 
 def steal_ticks() -> int:
@@ -120,6 +127,15 @@ def table(rows, spec: dict) -> str:
             bad = [s for s, a, b in ops if a != b]
             out.append(f"FLAG: dv_update window op counts differ in seeds {bad}" if bad
                        else "dv_update window op counts are equal in every pair")
+        if w in FIXED_WRITE:
+            def val(side, s, m):
+                return by[(side, s)]["result"]["metrics"][m]["value"]
+            bad = [(s, m, val("parent", s, m), val("change", s, m)) for s in seeds for m in STORED
+                   if abs(val("parent", s, m) - val("change", s, m))
+                   > 1e-9 * max(abs(val("parent", s, m)), abs(val("change", s, m)))]
+            out.append("".join(f"\nFLAG: {w} seed {s} {m} differs: parent {a!r}, change {b!r}"
+                               for s, m, a, b in bad)[1:] if bad
+                       else f"{w} {' and '.join(STORED)} are equal in every pair")
     return "\n".join(out)
 
 
