@@ -26,6 +26,7 @@ or metadata format.
 
 import argparse
 import json
+import math
 import os
 import re
 import statistics
@@ -128,14 +129,11 @@ def table(rows, spec: dict) -> str:
             out.append(f"FLAG: dv_update window op counts differ in seeds {bad}" if bad
                        else "dv_update window op counts are equal in every pair")
         if w in FIXED_WRITE:
-            def val(side, s, m):
-                return by[(side, s)]["result"]["metrics"][m]["value"]
-            bad = [(s, m, val("parent", s, m), val("change", s, m)) for s in seeds for m in STORED
-                   if abs(val("parent", s, m) - val("change", s, m))
-                   > 1e-9 * max(abs(val("parent", s, m)), abs(val("change", s, m)))]
-            out.append("".join(f"\nFLAG: {w} seed {s} {m} differs: parent {a!r}, change {b!r}"
-                               for s, m, a, b in bad)[1:] if bad
-                       else f"{w} {' and '.join(STORED)} are equal in every pair")
+            vals = [(s, m, by[("parent", s)]["result"]["metrics"][m]["value"],
+                     by[("change", s)]["result"]["metrics"][m]["value"]) for s in seeds for m in STORED]
+            bad = [f"FLAG: {w} seed {s} {m} differs: parent {a!r}, change {b!r}"
+                   for s, m, a, b in vals if not math.isclose(a, b, rel_tol=1e-9)]
+            out.extend(bad or [f"{w} {' and '.join(STORED)} are equal in every pair"])
     return "\n".join(out)
 
 
